@@ -172,8 +172,16 @@ object Bench {
     // tree so a source change makes a committed artifact loudly stale
     // (the key-set check alone can't see value staleness).
     val srcDigest = try SrcDigest.current catch { case _: Throwable => "unknown" }
+    // the host that produced the numbers: artifacts from different hosts
+    // are not comparable row by row
+    val hostJson =
+      s"""{"nproc":${Runtime.getRuntime.availableProcessors},"cpus":"$cpus",""" +
+      s""""heap_mb":${Runtime.getRuntime.maxMemory / (1 << 20)},""" +
+      s""""jdk":"${System.getProperty("java.version")}","spark":"${spark.version}",""" +
+      s""""local_dirs":"${sys.env.getOrElse("SPARK_LOCAL_DIRS", "")}"}"""
     val fullJson = json.dropRight(1) +
       s""","reps":$reps,"failed":$failedJson""" +
+      s""","host":$hostJson""" +
       s""","sentinel":{"name":"$sentinelName","series":$sentinelJson},"rep_wall":$repWallJson""" +
       s""","src_digest":"$srcDigest"""" +
       s""","spread":$spreadJson}"""

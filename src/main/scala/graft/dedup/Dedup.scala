@@ -209,23 +209,29 @@ object Dedup {
     * `MinHashBands(sh, k, bands)` for the same (k, bands) — bands are a
     * pure function of `sh`, so reusing them is bit-identical — and the
     * per-distinct-content k-hash banding pass is skipped (the
-    * incremental indexes already paid it for their index commit). */
+    * incremental indexes already paid it for their index commit).
+    *
+    * Plan choice by `bucketCap`: one `take(bucketCap + 1)` of the
+    * signature rows decides. At most `bucketCap` rows means no LSH
+    * bucket can exceed the cap (bands are position-salted, so a row sits
+    * in a bucket at most once), so [[boundedBucketPairs]]' salting and
+    * bridges do nothing and the rows are paired on the driver by
+    * [[localMinhashPairs]] with exactly the same pairs and the same
+    * arithmetic; an empty input takes this path too. More rows take the
+    * distributed plan below. */
   def minhashPairsFromShingles(sh: DataFrame, k: Int = 16, bands: Int = 4,
                                minJaccard: Double = 0.2,
                                bucketCap: Int = 1024): DataFrame = {
-    // empty fast path (mirrors components()): an incremental batch that
-    // fully matched the index arrives here with zero remaining rows — a
-    // common shape on reprocessing streams — and would otherwise pay the
-    // whole persist/size-pass/checkpoint machinery (~8 scheduler
-    // round-trips) to produce no pairs. The probe is one limit-1 read of
-    // the caller's (typically checkpointed) frame.
-    if (sh.isEmpty) {
+    val reuseBands = sh.columns.contains("bands")
+    val signed = sh.select(col("id"), col("sh"),
+      (if (reuseBands) col("bands")
+       else graft.functions.MinHashBands(col("sh"), k, bands)).as("bands"),
+      contentKey(col("sh")).as("chash"))
+    val local = takeSigs(signed, bucketCap)
+    if (local.isDefined) {
       val spark = sh.sparkSession
-      import org.apache.spark.sql.types._
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(StructField("id_a", LongType), StructField("id_b", LongType),
-          StructField("jaccard", DoubleType))))
+      import spark.implicits._
+      return localMinhashPairs(local.get, minJaccard).toDF("id_a", "id_b", "jaccard")
     }
     // 128-bit content key over the shingle-hash array (two seeded
     // xxhash64s; a single 64-bit key would collide at billions of docs);
@@ -235,9 +241,7 @@ object Dedup {
     // shingle+aggregate subtree — exchange reuse does not cover the
     // post-aggregate plan, and this is the table a production LSH job
     // checkpoints anyway.
-    val keyed = sh.withColumn("chash",
-      struct(xxhash64(col("sh")), xxhash64(lit(1L), col("sh"))))
-    val reuseBands = sh.columns.contains("bands")
+    val keyed = sh.withColumn("chash", contentKey(col("sh")))
     val aggCols = Seq(
       min(col("id")).as("rep"),
       sort_array(collect_list(col("id"))).as("members"),
@@ -304,6 +308,76 @@ object Dedup {
     // loops leak one entry per attempt.
     try cross.unionByName(within).localCheckpoint(eager = true)
     finally groups.unpersist(blocking = true)
+  }
+
+  /** 128-bit content key of a sorted-distinct shingle-hash array: two
+    * seeded xxhash64s, so same set ⇒ same key. */
+  private[dedup] def contentKey(sh: Column): Column =
+    struct(xxhash64(sh), xxhash64(lit(1L), sh))
+
+  /** One signature row held on the driver: `sh` sorted distinct, `bands`
+    * its MinHash band hashes, `chash` its [[contentKey]]. */
+  private[dedup] final case class Sig(id: Long, sh: Array[Long], bands: Array[Long],
+                                      chash: (Long, Long))
+
+  /** The rows of an (id long, sh, bands, chash) frame when there are at
+    * most `cap` of them, else None — one `take(cap + 1)`. */
+  private[dedup] def takeSigs(sigs: DataFrame, cap: Int): Option[Seq[Sig]] =
+    if (sigs.schema("id").dataType != org.apache.spark.sql.types.LongType) None
+    else {
+      val rows = sigs.select(col("id"), col("sh"), col("bands"), col("chash")).take(cap + 1)
+      if (rows.length > cap) None
+      else Some(rows.toIndexedSeq.map { r =>
+        val ch = r.getStruct(3)
+        Sig(r.getLong(0), r.getSeq[Long](1).toArray, r.getSeq[Long](2).toArray,
+          (ch.getLong(0), ch.getLong(1)))
+      })
+    }
+
+  /** Distinct contents of driver-side signature rows: (rep = min id,
+    * sorted members, one row of the content). */
+  private[dedup] def contentGroups(sigs: Seq[Sig]): Seq[(Long, Array[Long], Sig)] =
+    sigs.groupBy(_.chash).values.toIndexedSeq.map { g =>
+      val members = g.map(_.id).sorted.toArray
+      (members(0), members, g.head)
+    }.sortBy(_._1)
+
+  /** Exact Jaccard of two sorted-distinct hash sets, in the double
+    * arithmetic of the distributed verify. */
+  private def jaccard(a: Array[Long], b: Array[Long]): Double = {
+    import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray
+    val n = graft.functions.SortedIntersectCount.compute(
+      fromPrimitiveArray(a), fromPrimitiveArray(b))
+    n.toDouble / (a.length + b.length - n).toDouble
+  }
+
+  /** The driver-side plan of [[minhashPairsFromShingles]] for inputs of
+    * at most `bucketCap` rows: group by content key, pair every two
+    * representatives that share a band, verify by exact Jaccard, expand
+    * to members, and add each exact-duplicate group's pairs at 1.0. Same
+    * pairs as the distributed plan, which on such inputs never salts a
+    * bucket. Returns (id_a < id_b, jaccard). */
+  private[dedup] def localMinhashPairs(sigs: Seq[Sig],
+                                       minJaccard: Double): Seq[(Long, Long, Double)] = {
+    val groups = contentGroups(sigs)
+    val byRep = groups.map(g => g._1 -> g).toMap
+    val buckets = new java.util.HashMap[Long, scala.collection.mutable.ArrayBuffer[Long]]()
+    for ((rep, _, s) <- groups; b <- s.bands)
+      buckets.computeIfAbsent(b, _ => scala.collection.mutable.ArrayBuffer.empty[Long]) += rep
+    val cand = scala.collection.mutable.HashSet.empty[(Long, Long)]
+    buckets.values.forEach { reps =>
+      for (a <- reps; b <- reps if a < b) cand += ((a, b))
+    }
+    val cross = cand.toSeq.flatMap { case (a, b) =>
+      val (_, ma, sa) = byRep(a)
+      val (_, mb, sb) = byRep(b)
+      val j = jaccard(sa.sh, sb.sh)
+      if (j < minJaccard) Nil
+      else for (pa <- ma.toSeq; pb <- mb.toSeq) yield (math.min(pa, pb), math.max(pa, pb), j)
+    }
+    val within = for ((_, m, _) <- groups; i <- m.indices; j <- i + 1 until m.length
+                      if m(i) < m(j)) yield (m(i), m(j), 1.0)
+    (cross ++ within).sorted
   }
 
   /** MinHash+LSH with an ENGINE-PORTABLE hash function: per-seed minima of
@@ -465,6 +539,36 @@ object Dedup {
     * to the corpus). Anything larger takes the iterative path. */
   val ComponentsDriverEdgeBound: Long = 4000000L
 
+  /** Driver-side connected components of an edge list: union-find with
+    * path compression, each node labelled with its component's MINIMUM
+    * id, so the output matches the distributed propagation loop of
+    * [[components]] exactly (the equivalence is unit-tested on random
+    * graphs). Returns (id, cluster_id) for every node on an edge. */
+  private[dedup] def clusters(edges: Seq[(Long, Long)]): Seq[(Long, Long)] = {
+    val parent = new java.util.HashMap[Long, Long](edges.length * 2)
+    def find(x: Long): Long = {
+      var r = x
+      while (parent.getOrDefault(r, r) != r) r = parent.get(r)
+      var c = x
+      while (parent.getOrDefault(c, c) != c) { val n = parent.get(c); parent.put(c, r); c = n }
+      r
+    }
+    edges.foreach { case (a, b) =>
+      val ra = find(a); val rb = find(b)
+      if (ra != rb) parent.put(ra, rb)
+    }
+    val minOfRoot = new java.util.HashMap[Long, Long]()
+    val nodes = new java.util.HashSet[Long](edges.length * 2)
+    edges.foreach { case (a, b) => nodes.add(a); nodes.add(b) }
+    nodes.forEach { id =>
+      val r = find(id)
+      minOfRoot.merge(r, id, math.min(_, _))
+    }
+    val out = new scala.collection.mutable.ArrayBuffer[(Long, Long)](nodes.size)
+    nodes.forEach { id => out += ((id, minOfRoot.get(find(id)))) }
+    out.toSeq
+  }
+
   /** Connected components over near-dup pairs: every doc in a component
     * converges to the component's minimum id. Pairs in, (id, cluster_id)
     * out.
@@ -509,33 +613,10 @@ object Dedup {
     val longIds = p.schema.fields.forall(_.dataType == LongType)
     if (longIds && nEdges <= driverEdgeBound) {
       val spark = pairs.sparkSession
-      val edges = p.collect()
-      // union-find with path compression; roots then remapped to the
-      // component MINIMUM id so output semantics match the propagation
-      // loop exactly (the equivalence is unit-tested on random graphs)
-      val parent = new java.util.HashMap[Long, Long](edges.length * 2)
-      def find(x: Long): Long = {
-        var r = x
-        while (parent.getOrDefault(r, r) != r) r = parent.get(r)
-        var c = x
-        while (parent.getOrDefault(c, c) != c) { val n = parent.get(c); parent.put(c, r); c = n }
-        r
-      }
-      edges.foreach { row =>
-        val ra = find(row.getLong(0)); val rb = find(row.getLong(1))
-        if (ra != rb) parent.put(ra, rb)
-      }
-      val minOfRoot = new java.util.HashMap[Long, Long]()
-      val nodes = new java.util.HashSet[Long](edges.length * 2)
-      edges.foreach { row => nodes.add(row.getLong(0)); nodes.add(row.getLong(1)) }
-      nodes.forEach { id =>
-        val r = find(id)
-        minOfRoot.merge(r, id, math.min(_, _))
-      }
-      val out = new scala.collection.mutable.ArrayBuffer[(Long, Long)](nodes.size)
-      nodes.forEach { id => out += ((id, minOfRoot.get(find(id)))) }
+      val edges = p.collect().toSeq.map(r => (r.getLong(0), r.getLong(1)))
+      val out = clusters(edges)
       import spark.implicits._
-      return out.toSeq.toDF("id", "cluster_id")
+      return out.toDF("id", "cluster_id")
     }
     // both edge directions as a lazy union of two reads of the CACHED
     // checkpoint — a second eager checkpoint would cost a scheduler

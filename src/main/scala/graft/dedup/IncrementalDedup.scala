@@ -1,6 +1,8 @@
 package graft.dedup
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -16,21 +18,44 @@ import graft.functions.{HashedShingles, MinHashBands, TokenCount}
   * bytes per doc, NOT the documents — laid out one partition directory
   * per batch (`batch=<id>`). Per batch:
   *
-  *  1. batch docs → hashed shingles + bands (ONE native pass, reused by
-  *     the index join, the within-batch pairing, and the index append);
-  *  2. batch×index candidates by band join (ids only; batch-side exact
-  *     duplicates collapse to one representative first), verified by
-  *     exact set-Jaccard on the stored shingle hashes — batch docs
-  *     matching an indexed survivor are dropped (FIRST-WINS, like the
-  *     reference's insert dedup J9: what's already in wins);
-  *  3. remaining batch docs near-dup-dedup against each other through the
-  *     same pairing/clustering path as the batch form
-  *     ([[Dedup.minhashPairsFromShingles]] + [[Dedup.survivors]],
-  *     min-id per component);
-  *  4. the batch's survivors overwrite their own `batch=<id>` partition
-  *     of the index — so a Structured-Streaming retry of the same
-  *     batchId is idempotent: the index read excludes the current
-  *     batchId's partition, and the write replaces it.
+  *  1. batch docs → hashed shingles + bands + 128-bit content key (ONE
+  *     native pass, reused by the index probe, the within-batch pairing
+  *     and the index append);
+  *  2. plan choice: one `take(bucketCap + 1)` of those signature rows.
+  *     At most `bucketCap` rows means no LSH bucket can exceed the cap, so
+  *     [[Dedup.boundedBucketPairs]]' salting and bridges provably do
+  *     nothing and the batch runs on the DRIVER with exactly the same
+  *     pairs (step 3). More rows run the distributed plan (step 4). A
+  *     small batch thus costs a handful of Spark jobs per commit instead
+  *     of dozens of scheduler round-trips over a few kB;
+  *  3. driver plan:
+  *     a. index probe (skipped on a fresh index): collect the hot-band
+  *        stop-list ([[SignatureIndex.stopListRows]]), drop those bands
+  *        from the batch's content representatives, and scan the index
+  *        once — exploded by band, broadcast-joined to the local
+  *        (band, rep, sh) relation, exact set-Jaccard verified in the
+  *        same stage — collecting the matching reps; every exact copy of
+  *        a matching rep is dropped (FIRST-WINS, like the reference's
+  *        insert dedup J9: what's already in wins);
+  *     b. the remaining rows pair with each other through
+  *        [[Dedup.localMinhashPairs]] and cluster through
+  *        [[Dedup.clusters]] (min-id per component);
+  *     c. the survivors (docs minus the dropped ids) are eagerly
+  *        checkpointed, then the survivors' signatures and per-band
+  *        counts are written from the local rows, one job each;
+  *  4. distributed plan: the same steps as Spark jobs — the batch×index
+  *     band join (batch-side exact duplicates collapse to one
+  *     representative first) verified by exact set-Jaccard, then
+  *     [[Dedup.minhashPairsFromShingles]] + [[Dedup.survivors]] over the
+  *     remaining docs, then the survivors' signatures and band counts
+  *     written by Spark;
+  *  5. either way the batch's survivors overwrite their own `batch=<id>`
+  *     partition of the index (and of its `_stats` subtree) — so a
+  *     Structured-Streaming retry of the same batchId is idempotent:
+  *     every index read excludes the current batchId's partition, and
+  *     the write replaces it. The two plans give identical survivors,
+  *     index partitions and stats rows (unit-proven in
+  *     IncrementalPlanSpec).
   *
   * Hot-band guard: bands whose INDEX frequency exceeds `bandCap` are
   * stop-listed out of candidate generation (logged) — a band shared by
@@ -56,11 +81,15 @@ import graft.functions.{HashedShingles, MinHashBands, TokenCount}
   */
 object IncrementalDedup {
 
-
   private val indexSchema = StructType(Seq(
     StructField("id", LongType, nullable = false),
     StructField("sh", ArrayType(LongType, containsNull = false), nullable = false),
     StructField("bands", ArrayType(LongType, containsNull = false), nullable = false),
+    StructField("batch", LongType, nullable = false)))
+
+  private val statsSchema = StructType(Seq(
+    StructField("band", LongType, nullable = false),
+    StructField("n", LongType, nullable = false),
     StructField("batch", LongType, nullable = false)))
 
   /** Fold all settled batch partitions (everything below the live batch)
@@ -68,18 +97,14 @@ object IncrementalDedup {
     * batches cost one directory, not N (the small-files problem).
     * Retry- and crash-safety contract in [[SignatureIndex.compact]].
     * Returns the number of partitions folded. */
-  def compactIndex(spark: SparkSession, indexDir: String): Int = {
-    val statsSchema = StructType(Seq(
-      StructField("band", LongType, nullable = false),
-      StructField("n", LongType, nullable = false),
-      StructField("batch", LongType, nullable = false)))
+  def compactIndex(spark: SparkSession, indexDir: String): Int =
     SignatureIndex.compact(spark, indexDir, indexSchema, statsSchema, Seq("band"))
-  }
 
   /** Process one arriving batch of (id, text) docs against the survivor
     * index at `indexDir` (created on first call). Returns the batch's
-    * surviving docs (all original columns). `batchId` must be unique per
-    * logical batch and stable across retries (foreachBatch's batchId). */
+    * surviving docs (all original columns), materialized before the
+    * index write. `batchId` must be unique per logical batch and stable
+    * across retries (foreachBatch's batchId). */
   def addBatch(docs: DataFrame, idCol: String, textCol: String, indexDir: String,
                batchId: Long,
                shingleN: Int = 3, k: Int = 16, bands: Int = 4,
@@ -97,22 +122,100 @@ object IncrementalDedup {
       .select(col(idCol).as("id"),
         HashedShingles(col(textCol), shingleN).as("sh"))
       .withColumn("bands", MinHashBands(col("sh"), k, bands))
-      .withColumn("chash", struct(xxhash64(col("sh")), xxhash64(lit(1L), col("sh"))))
-      .localCheckpoint(eager = true)
+      .withColumn("chash", Dedup.contentKey(col("sh")))
 
     // fresh-index fast path (the BucketedIncrementalDedup r17
     // precedent): a first batch probes a provably-empty index — every
     // read excludes this batch's own partition and nothing else exists —
-    // so skip the stop-list checkpoint+count, the reps persist and the
-    // candidate/verify joins entirely (~a third of the batch's scheduler
-    // round-trips). A batch-1 RETRY sees only its own partition, which
-    // the reads exclude, so the skip stays correct under retries.
+    // so the stop-list, the candidate join and the verify are skipped. A
+    // batch-1 RETRY sees only its own partition, which the reads
+    // exclude, so the skip stays correct under retries.
+    val fresh = !SignatureIndex.hasOtherBatches(spark, indexDir, batchId)
+    Dedup.takeSigs(sigs, bucketCap) match {
+      case Some(rows) =>
+        addLocal(docs, idCol, indexDir, batchId, rows, fresh, minJaccard, bandCap)
+      case None =>
+        addDistributed(docs, idCol, indexDir, batchId, sigs.localCheckpoint(eager = true),
+          fresh, k, bands, minJaccard, bucketCap, bandCap)
+    }
+  }
+
+  /** The driver plan of a batch of at most `bucketCap` signature rows
+    * (step 3 of the scaladoc above). */
+  private def addLocal(docs: DataFrame, idCol: String, indexDir: String, batchId: Long,
+                       sigs: Seq[Dedup.Sig], fresh: Boolean, minJaccard: Double,
+                       bandCap: Int): DataFrame = {
+    val spark = docs.sparkSession
+    val matched =
+      if (fresh) Set.empty[Long]
+      else probeIndexLocal(spark, sigs, indexDir, batchId, bandCap, minJaccard)
+    val remaining = sigs.filterNot(s => matched(s.id))
+    val pairs = Dedup.localMinhashPairs(remaining, minJaccard)
+    val clustered = Dedup.clusters(pairs.map(p => (p._1, p._2)))
+      .collect { case (id, c) if id != c => id }
+    val dropped = matched ++ clustered
+
+    // survivors computed BEFORE the index write below; a null id matches
+    // nothing, as in the distributed plan's anti-join
+    val surv = (if (dropped.isEmpty) docs
+      else docs.filter(!coalesce(col(idCol).isInCollection(dropped), lit(false))))
+      .localCheckpoint(eager = true)
+
+    // idempotent commit from the local rows, one single-file job each
+    val committed = remaining.filterNot(s => dropped(s.id))
+    val sigRows = committed.map(s => Row(s.id, s.sh.toSeq, s.bands.toSeq))
+    spark.createDataFrame(sigRows.asJava, StructType(indexSchema.dropRight(1)))
+      .coalesce(1).write.mode("overwrite").parquet(s"$indexDir/batch=$batchId")
+    val counts = committed.flatMap(_.bands).groupBy(identity).toSeq
+      .map { case (b, bs) => Row(b, bs.size.toLong) }
+    SignatureIndex.writeCounts(
+      spark.createDataFrame(counts.asJava, StructType(statsSchema.dropRight(1))).coalesce(1),
+      indexDir, batchId)
+
+    surv
+  }
+
+  /** The driver plan's index probe: the ids of batch rows whose content
+    * near-matches an indexed survivor. One index scan, exploded by band
+    * and broadcast-joined to the batch representatives' non-hot bands,
+    * verified in the same stage with the distributed plan's Jaccard
+    * expression. */
+  private def probeIndexLocal(spark: SparkSession, sigs: Seq[Dedup.Sig],
+                              indexDir: String, batchId: Long, bandCap: Int,
+                              minJaccard: Double): Set[Long] = {
+    val hot = SignatureIndex.stopListRows(spark, indexDir, statsSchema,
+      Seq("band"), excludeBatch = batchId, bandCap, "incremental dedup")
+      .map(_.getLong(0)).toSet
+    val groups = Dedup.contentGroups(sigs)
+    val repBands = for ((rep, _, s) <- groups; b <- s.bands if !hot(b))
+      yield Row(b, rep, s.sh.toSeq)
+    if (repBands.isEmpty) return Set.empty
+    val local = spark.createDataFrame(repBands.asJava, StructType(Seq(
+      StructField("band", LongType, nullable = false),
+      StructField("rep", LongType, nullable = false),
+      StructField("sh", ArrayType(LongType, containsNull = false), nullable = false))))
+    val matchedReps = SignatureIndex.read(spark, indexDir, indexSchema, excludeBatch = batchId)
+      .select(col("sh").as("idx_sh"), explode(col("bands")).as("band"))
+      .join(broadcast(local), "band")
+      .withColumn("n_inter", graft.functions.SortedIntersectCount(col("sh"), col("idx_sh")))
+      .filter(col("n_inter").cast("double") /
+        (size(col("sh")) + size(col("idx_sh")) - col("n_inter")) >= minJaccard)
+      .select(col("rep")).collect().map(_.getLong(0)).toSet
+    groups.filter(g => matchedReps(g._1)).flatMap(_._2).toSet
+  }
+
+  /** The distributed plan of a batch (step 4 of the scaladoc above);
+    * `sigs` is the batch's checkpointed signature frame. */
+  private def addDistributed(docs: DataFrame, idCol: String, indexDir: String,
+                             batchId: Long, sigs: DataFrame, fresh: Boolean,
+                             k: Int, bands: Int, minJaccard: Double,
+                             bucketCap: Int, bandCap: Int): DataFrame = {
+    val spark = docs.sparkSession
     // empty frame derived FROM sigs (not a hardcoded LongType struct) so
     // the anti-joins below cannot silently type-mismatch if the id
     // contract ever widens (r18 ADVICE); limit(0) is plan-only, no job
-    val dropped = if (!SignatureIndex.hasOtherBatches(spark, indexDir, batchId))
-      sigs.select(col("id")).limit(0)
-    else probeIndex(spark, sigs, indexDir, batchId, bandCap, minJaccard)
+    val dropped = if (fresh) sigs.select(col("id")).limit(0)
+      else probeIndex(spark, sigs, indexDir, batchId, bandCap, minJaccard)
 
     // remaining batch docs dedup against each other, REUSING the
     // checkpointed signatures (no second hashing pass over the text) AND
@@ -156,10 +259,6 @@ object IncrementalDedup {
     // subtree (never a full per-batch scan of the index signatures);
     // MinHashBands salts each band hash with its position, so the raw
     // value IS position-qualified here
-    val statsSchema = StructType(Seq(
-      StructField("band", LongType, nullable = false),
-      StructField("n", LongType, nullable = false),
-      StructField("batch", LongType, nullable = false)))
     val hotBands = SignatureIndex.stopList(spark, indexDir, statsSchema,
       Seq("band"), excludeBatch = batchId, bandCap, "incremental dedup")
 

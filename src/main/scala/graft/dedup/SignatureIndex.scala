@@ -1,6 +1,6 @@
 package graft.dedup
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -75,25 +75,42 @@ private[graft] object SignatureIndex {
   def stopList(spark: SparkSession, indexDir: String,
                statsSchema: StructType, keyCols: Seq[String],
                excludeBatch: Long, cap: Int, label: String): DataFrame = {
-    // first batch: the stats subtree may not exist yet — an empty dir
-    // with the explicit schema reads as empty
-    val sp = new org.apache.hadoop.fs.Path(statsDir(indexDir))
-    sp.getFileSystem(spark.sparkContext.hadoopConfiguration).mkdirs(sp)
-    val stats = spark.read.schema(statsSchema).parquet(statsDir(indexDir))
-      .filter(col("batch") =!= excludeBatch)
     // LAZY checkpoint: the count below materializes the blocks and
     // returns the size in one job instead of a checkpoint job + a count
     // job (the stop-list is consumed by two anti-joins downstream, so
     // the materialization itself is still required)
-    val hot = stats.groupBy(keyCols.map(col): _*).agg(sum(col("n")).as("n"))
-      .filter(col("n") > cap)
-      .select(keyCols.map(col): _*)
+    val hot = hotBuckets(spark, indexDir, statsSchema, keyCols, excludeBatch, cap)
       .localCheckpoint(eager = false)
-    val nHot = hot.count()
-    if (nHot > 0)
-      log.warn(s"$label: stop-listing $nHot bucket(s) with index frequency > $cap")
+    logHot(hot.count(), cap, label)
     hot
   }
+
+  /** [[stopList]] collected to the driver, for plans that run there. */
+  def stopListRows(spark: SparkSession, indexDir: String,
+                   statsSchema: StructType, keyCols: Seq[String],
+                   excludeBatch: Long, cap: Int, label: String): Array[Row] = {
+    val hot = hotBuckets(spark, indexDir, statsSchema, keyCols, excludeBatch, cap).collect()
+    logHot(hot.length, cap, label)
+    hot
+  }
+
+  private def hotBuckets(spark: SparkSession, indexDir: String,
+                         statsSchema: StructType, keyCols: Seq[String],
+                         excludeBatch: Long, cap: Int): DataFrame = {
+    // first batch: the stats subtree may not exist yet — an empty dir
+    // with the explicit schema reads as empty
+    val sp = new org.apache.hadoop.fs.Path(statsDir(indexDir))
+    sp.getFileSystem(spark.sparkContext.hadoopConfiguration).mkdirs(sp)
+    spark.read.schema(statsSchema).parquet(statsDir(indexDir))
+      .filter(col("batch") =!= excludeBatch)
+      .groupBy(keyCols.map(col): _*).agg(sum(col("n")).as("n"))
+      .filter(col("n") > cap)
+      .select(keyCols.map(col): _*)
+  }
+
+  private def logHot(nHot: Long, cap: Int, label: String): Unit =
+    if (nHot > 0)
+      log.warn(s"$label: stop-listing $nHot bucket(s) with index frequency > $cap")
 
   /** Commit a batch's per-bucket counts alongside its signatures. The
     * stats live in an underscore-prefixed subtree of the index directory,
@@ -103,8 +120,14 @@ private[graft] object SignatureIndex {
     * signature write. */
   def writeStats(banded: DataFrame, indexDir: String, keyCols: Seq[String],
                  batchId: Long): Unit =
-    banded.groupBy(keyCols.map(col): _*).agg(count(lit(1)).as("n"))
-      .write.mode("overwrite").parquet(s"${statsDir(indexDir)}/batch=$batchId")
+    writeCounts(banded.groupBy(keyCols.map(col): _*).agg(count(lit(1)).as("n")),
+      indexDir, batchId)
+
+  /** [[writeStats]] from per-bucket counts that are already aggregated
+    * (keyCols + n long), e.g. on the driver. Same partition, same
+    * overwrite. */
+  def writeCounts(counts: DataFrame, indexDir: String, batchId: Long): Unit =
+    counts.write.mode("overwrite").parquet(s"${statsDir(indexDir)}/batch=$batchId")
 
   /** Compact the index's batch partitions: every batch strictly below
     * the LATEST non-negative batch id (which stays untouched — it is the

@@ -36,14 +36,25 @@ case class HillFormulaExpr(child: Expression) extends UnaryExpression {
   }
 
   override def dataType: DataType = StringType
+  // a null symbol element yields a null formula, so a non-null array of
+  // nullable symbols still gives a nullable result
+  override def nullable: Boolean = child.nullable || (child.dataType match {
+    case ArrayType(_, containsNull) => containsNull
+    case _ => false
+  })
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "hill_formula"
 
   override protected def nullSafeEval(input: Any): Any =
     HillFormulaExpr.compute(input.asInstanceOf[ArrayData])
 
+  // compute() returns null for a null symbol element, so isNull is set
+  // from the result as well as from the child (defineCodeGen would only
+  // do the latter and hand a null value to the row writer)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.HillFormulaExpr.compute($c)")
+    nullSafeCodeGen(ctx, ev, c =>
+      s"""${ev.value} = graft.functions.HillFormulaExpr.compute($c);
+         |${ev.isNull} = ${ev.value} == null;""".stripMargin)
 
   override protected def withNewChildInternal(newChild: Expression): HillFormulaExpr =
     copy(child = newChild)

@@ -51,8 +51,9 @@ object DedupQueries extends QuerySet {
 
   /** Shared minhash pair set for dd_minhash / dd_survivors, computed ONCE
     * per (session, dir) at the WEAKEST threshold either consumer uses and
-    * checkpointed (minhashPairsFromShingles returns an eager
-    * localCheckpoint). The two queries previously each ran the full
+    * materialized (minhashPairsFromShingles returns an eager
+    * localCheckpoint, or a driver-built frame for inputs within its
+    * bucketCap). The two queries previously each ran the full
     * shingle→band→verify pipeline over the doubled corpus — 18% of the
     * whole bench — which is exactly the recompute a production dedup
     * pipeline avoids by materializing its candidate-pair table once per

@@ -256,22 +256,22 @@ object Sketches {
     * step; sizing from the data is what a fixed-m filter gets wrong at
     * 100× scale-up (the same lesson as `adaptiveSrpParams`). Production
     * sizes n from the HLL estimate above instead of an exact count.
-    * HARD CEILING: [[bloomBucket]] caps the width at 15 hex chars (the
+    * HARD CEILING: the width is capped here at 15 hex chars (the
     * Md5Prefix positive-long limit), reached only at ~7·10^16 distinct
     * keys — past it the filter degrades to a denser fixed 2^60 bucket
     * space (FPR rises, never a false negative) instead of failing
     * per-row mid-scan (r18 ADVICE). */
-  def bloomHexChars(n: Column): Column = length(hex(lit(16L) * n - 1))
+  def bloomHexChars(n: Column): Column = least(length(hex(lit(16L) * n - 1)), lit(15))
 
   /** Row-i bit position of a value — same seeded-md5 family as the CMS,
     * with the hex width `c` a COLUMN (broadcast from the sizing pass) so
-    * the whole pipeline stays one declarative plan. `c` is capped at 15
-    * (see [[bloomHexChars]]): Md5Prefix throws beyond a positive long,
-    * and a graceful density degradation beats a mid-scan job failure. */
+    * the whole pipeline stays one declarative plan. `c` comes from
+    * [[bloomHexChars]], which caps it at 15: Md5Prefix throws beyond a
+    * positive long. */
   def bloomBucket(i: Column, value: Column, c: Column): Column =
     graft.functions.Md5Prefix(
       concat(i.cast("string"), lit(":"), value.cast("string")), 0,
-      least(c, lit(15)).cast("int"))
+      c.cast("int"))
 
   /** The SET-BIT table of a key relation (must already carry the sizing
     * column `c`): distinct (i, bucket), ≤ d·n rows — the sketch a

@@ -52,6 +52,24 @@ class CodegenSpec extends SparkSuite {
     assert(proj != null)
   }
 
+  test("hill_formula: a null symbol gives a null formula under whole-stage codegen") {
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.execution.WholeStageCodegenExec
+    // range-derived arrays: no LocalRelation, so nothing folds away before
+    // the generated projection runs
+    val df = spark.range(3).select(col("id"),
+      graft.functions.HillFormulaExpr(
+        when(col("id") === 1L, array(lit("O"), lit(null).cast("string")))
+          .otherwise(array(lit("H"), lit("H"), lit("O")))).as("formula"))
+    assert(df.schema("formula").nullable,
+      "a nullable symbol element must make the formula nullable")
+    assert(df.queryExecution.executedPlan.collect {
+      case w: WholeStageCodegenExec => w }.nonEmpty,
+      "the projection must run in whole-stage codegen")
+    val got = df.orderBy("id").collect().map(r => Option(r.getString(1))).toSeq
+    assert(got === Seq(Some("H2O"), None, Some("H2O")))
+  }
+
   test("native hilbert_key is identical to the aggregate-fold form (seeded sweep)") {
     import org.apache.spark.sql.functions._
     import graft.operators.Layout

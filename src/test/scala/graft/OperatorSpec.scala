@@ -76,6 +76,13 @@ class OperatorSpec extends SparkSuite {
     assert(recomputed.nonEmpty, "planted 10-way dup groups must pair")
     assert(reused === recomputed,
       "bands reuse must not change a single pair or jaccard value")
+    // 30 rows fit the default bucketCap, so the pairs above came from the
+    // driver plan; a cap of 29 (below the row count, above the 10 distinct
+    // contents any bucket can hold) forces the distributed plan, which
+    // must give the same pairs and jaccard values
+    for (in <- Seq(sh, withBands))
+      assert(norm(Dedup.minhashPairsFromShingles(in, k = 16, bands = 8,
+        minJaccard = 0.5, bucketCap = 29)) === recomputed)
   }
 
   test("portable md5 minhash finds planted duplicates, agrees with xxhash verify") {
