@@ -68,6 +68,19 @@ object Tables {
      // what makes the 512 bound scale-adaptive in BOTH directions.
      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
 
+  /** The local session of every graft main and test suite: `cpus` task
+    * slots and as many static shuffle partitions, no UI, WARN logging,
+    * plus [[configure]]. */
+  def session(cpus: Int): SparkSession = {
+    val spark = configure(SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .config("spark.ui.enabled", "false"))
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
   /** Register every table as a temp view (for spark.sql / tests). */
   def registerAll(spark: SparkSession, dir: String): Unit =
     all.foreach(n => load(spark, dir, n).createOrReplaceTempView(n))

@@ -3,8 +3,6 @@ package graft.dedup
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.functions.{HashedShingles, MinHashBands, TokenCount}
-
 /** Bucketed-table variant of [[IncrementalDedup]] — the index layout for
   * the regime where the INDEX side dominates: after months of daily
   * batches the accumulated survivor index dwarfs each arriving batch, and
@@ -12,32 +10,38 @@ import graft.functions.{HashedShingles, MinHashBands, TokenCount}
   * the band join every batch. Here the index lives in two bucketed
   * metastore tables, so the PER-BATCH cost of both index joins is one
   * shuffle of the (small) batch side — the index is read bucket-aligned
-  * with NO exchange, ever (plan-pinned in `BucketedIndexSpec`):
+  * with NO exchange, because the only other joins on the index side are
+  * the anti-joins against the hot-band stop-list, which the shared probe
+  * always broadcasts (a sort-merge anti-join would re-shuffle the index;
+  * plan-pinned in `BucketedIndexSpec` with broadcast joins otherwise off):
   *
   *  - `<base>_bands` (band, id), PARTITIONED BY batch, bucketed+sorted by
   *    `band` — the candidate join reads it sort-merge-bucket style;
   *  - `<base>_sh` (id, sh), PARTITIONED BY batch, bucketed+sorted by
   *    `id` — the exact-Jaccard verify join reads it the same way;
   *  - `<base>_stats` (band, n), PARTITIONED BY batch, unbucketed tiny
-  *    pre-aggregates — the hot-band stop-list reads ONLY these, same
-  *    contract as [[SignatureIndex.stopList]].
+  *    pre-aggregates — the hot-band stop-list reads ONLY these, through
+  *    [[SignatureIndex.stopList]].
   *
   * Idempotency mirrors the directory index: every read excludes the
   * current batchId's partition and every write replaces exactly that
   * partition (STATIC-partition `INSERT OVERWRITE` — validated to
   * preserve bucketing on rewrite, and partition-scoped under either
-  * session overwrite mode), so a foreachBatch retry converges. The bucket count is fixed at index creation and recorded
+  * session overwrite mode), so a foreachBatch retry converges.
+  * The bucket count is fixed at index creation and recorded
   * (with the signature parameters) in `graft.params` table properties;
   * a mismatched batch fails loudly, same contract as the `_graft_params`
   * sidecar.
   *
-  * The pairing/clustering core (exact-dup collapse, band join, verify,
-  * min-label components) is IDENTICAL to [[IncrementalDedup.addBatch]] —
-  * only the index storage differs. Kept as a parallel implementation
-  * rather than an abstraction over both: the two storage contracts are
-  * different enough (exploded-at-rest vs exploded-on-read, SQL DDL vs
-  * filesystem) that a shared core would be an interface with two
-  * methods per concern and one implementor each.
+  * Only the storage is this object's own: the table DDL, the
+  * `graft.params` check, the three-table commit and the compaction
+  * protocol. The signature pass, the index probe (exact-dup collapse,
+  * band join, verify), the stop-list and the within-batch tail are the
+  * directory index's own functions ([[IncrementalDedup.signatures]],
+  * [[IncrementalDedup.probe]], [[SignatureIndex.stopList]],
+  * [[IncrementalDedup.withinBatch]]), fed this index's two tables
+  * instead of the exploded directory read — so the two layouts cannot
+  * drift apart.
   */
 object BucketedIncrementalDedup {
 
@@ -100,14 +104,7 @@ object BucketedIncrementalDedup {
                bandCap: Int = 4096, buckets: Int = 8): DataFrame = {
     val spark = docs.sparkSession
 
-    // one native signature pass, reused by every consumer below —
-    // identical to the directory form
-    val sigs = docs
-      .filter(TokenCount(col(textCol)) >= shingleN)
-      .select(col(idCol).as("id"),
-        HashedShingles(col(textCol), shingleN).as("sh"))
-      .withColumn("bands", MinHashBands(col("sh"), k, bands))
-      .withColumn("chash", struct(xxhash64(col("sh")), xxhash64(lit(1L), col("sh"))))
+    val sigs = IncrementalDedup.signatures(docs, idCol, textCol, shingleN, k, bands)
       .localCheckpoint(eager = true)
 
     val params = s"shingleN=$shingleN,k=$k,bands=$bands,buckets=$buckets"
@@ -137,41 +134,29 @@ object BucketedIncrementalDedup {
     }
     checkParams(spark, base, params)
 
-    // fresh index ⇒ the probe below is provably a no-op (every read
-    // excludes this batch's own partition and nothing else exists), so
-    // skip its ~4 scheduler round-trips (stop-list checkpoint+count,
-    // reps persist, candidate+verify joins) — the first batch of every
-    // stream pays only the within-batch pass. A RETRY of batch 1 sees
-    // fresh=false and takes the normal (still-correct, still-empty)
-    // probe.
-    val dropped = if (fresh) {
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("id",
-            org.apache.spark.sql.types.LongType))))
-    } else probeIndex(spark, sigs, base, batchId, bandCap, minJaccard)
-
-    // within-batch near-dup pass over the remainder, reusing the
-    // checkpointed signatures — identical to the directory form
-    val remaining = docs.join(dropped.withColumnRenamed("id", idCol), Seq(idCol), "left_anti")
-    // carry the precomputed bands so the pair pipeline skips its
-    // per-distinct-content banding pass (pure function of sh — identical)
-    val remainingSh = sigs.join(dropped, Seq("id"), "left_anti")
-      .select(col("id"), col("sh"), col("bands"))
-    val pairs = Dedup.minhashPairsFromShingles(remainingSh,
+    // fresh index ⇒ the probe is provably a no-op (every read excludes
+    // this batch's own partition and nothing else exists), so skip its
+    // scheduler round-trips (stop-list, reps persist, candidate+verify
+    // joins) — the first batch of every stream pays only the
+    // within-batch pass. A RETRY of batch 1 sees fresh=false and takes
+    // the normal (still-correct, still-empty) probe. The empty frame is
+    // derived from sigs and plan-only, as in the directory index.
+    def others(t: String) = spark.table(t).filter(col("batch") =!= batchId)
+    val dropped = if (fresh) sigs.select(col("id")).limit(0)
+      else IncrementalDedup.probe(sigs,
+        others(bandsT(base)).select(col("band"), col("id").as("idx_id")),
+        others(shT(base)).select(col("id").as("idx_id"), col("sh").as("idx_sh")),
+        SignatureIndex.stopList(others(statsT(base)), Seq("band"), bandCap,
+          "bucketed incremental dedup"),
+        minJaccard)
+    val (surv, committed) = IncrementalDedup.withinBatch(docs, idCol, sigs, dropped,
       k, bands, minJaccard, bucketCap)
-    val surv = Dedup.survivors(remaining, idCol, pairs)
-      .localCheckpoint(eager = true) // computed BEFORE the index writes
 
     // idempotent commit: a STATIC-partition INSERT OVERWRITE replaces
     // exactly this batch's partition in all three tables, preserving the
     // bucketed layout on rewrite (proven in BucketedIndexSpec) — and
     // never touching the session's partitionOverwriteMode (see
     // [[overwritePartition]])
-    val committed = sigs
-      .join(surv.select(col(idCol).as("id")), Seq("id"), "left_semi")
-      .select(col("id"), col("sh"), col("bands"))
     overwritePartition(
       committed.select(explode(col("bands")).as("band"), col("id")),
       bandsT(base), batchId)
@@ -186,67 +171,17 @@ object BucketedIncrementalDedup {
     surv
   }
 
-  /** The index probe of one batch: which batch ids near-match an indexed
-    * survivor (checkpointed (id) frame). Index reads exclude the batch's
-    * own partition (retry idempotency) and partition pruning keeps
-    * excluded batches off disk entirely; the candidate join shuffles the
-    * BATCH side to the index's bucket layout while the index side reads
-    * bucket-aligned with no exchange (plan-pinned in BucketedIndexSpec). */
-  private def probeIndex(spark: SparkSession, sigs: DataFrame, base: String,
-                         batchId: Long, bandCap: Int,
-                         minJaccard: Double): DataFrame = {
-    val idxBands = spark.table(bandsT(base)).filter(col("batch") =!= batchId)
-      .select(col("band"), col("id").as("idx_id"))
-    val idxSh = spark.table(shT(base)).filter(col("batch") =!= batchId)
-      .select(col("id").as("idx_id"), col("sh").as("idx_sh"))
-
-    // hot-band stop-list from the tiny stats partitions — never a scan
-    // of the index signatures (same contract as SignatureIndex.stopList)
-    val hot = spark.table(statsT(base)).filter(col("batch") =!= batchId)
-      .groupBy(col("band")).agg(sum(col("n")).as("n"))
-      .filter(col("n") > bandCap)
-      .select(col("band"))
-      .localCheckpoint(eager = true)
-    val nHot = hot.count()
-    if (nHot > 0)
-      log.warn(s"bucketed incremental dedup: stop-listing $nHot band(s) > $bandCap")
-
-    // ONE representative per distinct batch content; released in finally
-    // (CacheManager holds strong refs — the multi-consumer persist rule)
-    val reps = sigs.groupBy(col("chash"))
-      .agg(min(col("id")).as("rep"), first(col("sh")).as("sh"),
-        first(col("bands")).as("bands"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val repBands = reps.select(col("rep"), explode(col("bands")).as("band"))
-        .join(hot, Seq("band"), "left_anti")
-      // candidate join: batch side shuffles to the index's bucket
-      // layout; the index side reads bucket-aligned, NO exchange
-      val cand = repBands.join(idxBands.join(hot, Seq("band"), "left_anti"), "band")
-        .select(col("rep"), col("idx_id")).distinct()
-      val droppedReps = cand
-        .join(reps.select(col("rep"), col("sh")), "rep")
-        .join(idxSh, "idx_id")
-        .withColumn("n_inter", graft.functions.SortedIntersectCount(col("sh"), col("idx_sh")))
-        .withColumn("j", col("n_inter").cast("double") /
-          (size(col("sh")) + size(col("idx_sh")) - col("n_inter")))
-        .filter(col("j") >= minJaccard)
-        .select(col("rep")).distinct()
-      sigs
-        .join(reps.join(droppedReps, "rep").select(col("chash")), Seq("chash"), "left_semi")
-        .select(col("id"))
-        .localCheckpoint(eager = true)
-    } finally reps.unpersist(blocking = true)
-  }
-
   /** Commit `df` (the table's DATA columns, in table order, WITHOUT the
     * `batch` partition column) as the entire content of partition
     * batch=<id> — a STATIC partition spec replaces only that partition
     * under EITHER `partitionOverwriteMode`, so nothing here mutates the
     * caller's shared session conf (a session-wide dynamic-mode set would
     * silently change truncate-all → dynamic semantics for any concurrent
-    * partitioned overwrite on the same session). */
-  private def overwritePartition(df: DataFrame, table: String, batchId: Long): Unit = {
+    * partitioned overwrite on the same session). The staging view's name
+    * carries the sanitized table name, so two indexes committing in one
+    * application never clobber each other's view. Also [[CdcIndex]]'s
+    * commit. */
+  private[dedup] def overwritePartition(df: DataFrame, table: String, batchId: Long): Unit = {
     val spark = df.sparkSession
     val tmp = ("graft_commit_" + table + "_" +
       spark.sparkContext.applicationId).replaceAll("[^A-Za-z0-9_]", "_")

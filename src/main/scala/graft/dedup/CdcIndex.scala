@@ -90,17 +90,9 @@ object CdcIndex {
       // commit replaces exactly batch=<id> (STATIC partition spec — no
       // session-wide overwrite-mode mutation); the scoring join above
       // reads around it, so the batch's own fps never count against
-      // itself. The view name carries the sanitized base AND batchId:
-      // two CdcIndex streams over different base tables in one
-      // application must not clobber each other's view between
-      // createOrReplaceTempView and the INSERT.
-      val tmp = (s"cdc_commit_${base}_${batchId}_" +
-        spark.sparkContext.applicationId).replaceAll("[^A-Za-z0-9_]", "_")
-      ch.select(col("fp")).distinct().createOrReplaceTempView(tmp)
-      try spark.sql(
-        s"INSERT OVERWRITE TABLE $base PARTITION (batch=$batchId) " +
-          s"SELECT fp FROM $tmp")
-      finally spark.catalog.dropTempView(tmp)
+      // itself
+      BucketedIncrementalDedup.overwritePartition(ch.select(col("fp")).distinct(),
+        base, batchId)
       scored.select(col("__id").as(idCol), col("n_chunks"), col("n_novel"))
         .localCheckpoint(eager = true)
     } finally ch.unpersist(blocking = true)

@@ -114,15 +114,7 @@ object IncrementalDedup {
     SignatureIndex.checkParams(spark, indexDir,
       s"shingleN=$shingleN,k=$k,bands=$bands")
 
-    // ONE native signature pass per batch; short docs survive
-    // unconditionally and are never indexed. chash is the canonical
-    // 128-bit content key (sh is sorted-distinct, so same set ⇒ same key).
-    val sigs = docs
-      .filter(TokenCount(col(textCol)) >= shingleN)
-      .select(col(idCol).as("id"),
-        HashedShingles(col(textCol), shingleN).as("sh"))
-      .withColumn("bands", MinHashBands(col("sh"), k, bands))
-      .withColumn("chash", Dedup.contentKey(col("sh")))
+    val sigs = signatures(docs, idCol, textCol, shingleN, k, bands)
 
     // fresh-index fast path (the BucketedIncrementalDedup r17
     // precedent): a first batch probes a provably-empty index — every
@@ -130,7 +122,7 @@ object IncrementalDedup {
     // so the stop-list, the candidate join and the verify are skipped. A
     // batch-1 RETRY sees only its own partition, which the reads
     // exclude, so the skip stays correct under retries.
-    val fresh = !SignatureIndex.hasOtherBatches(spark, indexDir, batchId)
+    val fresh = !SignatureIndex.batches(spark, indexDir).exists(_._1 != batchId)
     Dedup.takeSigs(sigs, bucketCap) match {
       case Some(rows) =>
         addLocal(docs, idCol, indexDir, batchId, rows, fresh, minJaccard, bandCap)
@@ -183,8 +175,9 @@ object IncrementalDedup {
   private def probeIndexLocal(spark: SparkSession, sigs: Seq[Dedup.Sig],
                               indexDir: String, batchId: Long, bandCap: Int,
                               minJaccard: Double): Set[Long] = {
-    val hot = SignatureIndex.stopListRows(spark, indexDir, statsSchema,
-      Seq("band"), excludeBatch = batchId, bandCap, "incremental dedup")
+    val hot = SignatureIndex.stopListRows(
+      SignatureIndex.readStats(spark, indexDir, statsSchema, excludeBatch = batchId),
+      Seq("band"), bandCap, "incremental dedup")
       .map(_.getLong(0)).toSet
     val groups = Dedup.contentGroups(sigs)
     val repBands = for ((rep, _, s) <- groups; b <- s.bands if !hot(b))
@@ -214,29 +207,22 @@ object IncrementalDedup {
     // empty frame derived FROM sigs (not a hardcoded LongType struct) so
     // the anti-joins below cannot silently type-mismatch if the id
     // contract ever widens (r18 ADVICE); limit(0) is plan-only, no job
-    val dropped = if (fresh) sigs.select(col("id")).limit(0)
-      else probeIndex(spark, sigs, indexDir, batchId, bandCap, minJaccard)
-
-    // remaining batch docs dedup against each other, REUSING the
-    // checkpointed signatures (no second hashing pass over the text) AND
-    // the precomputed bands (pure function of sh — the pair pipeline
-    // skips its per-distinct-content banding pass)
-    val remaining = docs.join(dropped.withColumnRenamed("id", idCol), Seq(idCol), "left_anti")
-    val remainingSh = sigs.join(dropped, Seq("id"), "left_anti")
-      .select(col("id"), col("sh"), col("bands"))
-    val pairs = Dedup.minhashPairsFromShingles(remainingSh,
-      k, bands, minJaccard, bucketCap)
-    val surv = Dedup.survivors(remaining, idCol, pairs)
-      .localCheckpoint(eager = true) // computed BEFORE the index write below
-
+    val dropped = if (fresh) sigs.select(col("id")).limit(0) else {
+      val index = SignatureIndex.read(spark, indexDir, indexSchema, excludeBatch = batchId)
+      // MinHashBands salts each band hash with its position, so the raw
+      // value IS position-qualified in the stop-list
+      probe(sigs,
+        index.select(explode(col("bands")).as("band"), col("id").as("idx_id")),
+        index.select(col("id").as("idx_id"), col("sh").as("idx_sh")),
+        SignatureIndex.stopList(
+          SignatureIndex.readStats(spark, indexDir, statsSchema, excludeBatch = batchId),
+          Seq("band"), bandCap, "incremental dedup"),
+        minJaccard)
+    }
+    val (surv, committed) = withinBatch(docs, idCol, sigs, dropped, k, bands, minJaccard, bucketCap)
     // idempotent commit: this batch's survivors replace their own
     // partition, and their per-band counts land in the stats subtree so
-    // future stop-lists never rescan the index. `committed` is a cheap
-    // semi-join of two CACHED frames — each write recomputes it rather
-    // than paying an extra materialization round-trip.
-    val committed = sigs
-      .join(surv.select(col(idCol).as("id")), Seq("id"), "left_semi")
-      .select(col("id"), col("sh"), col("bands"))
+    // future stop-lists never rescan the index
     committed.write.mode("overwrite").parquet(s"$indexDir/batch=$batchId")
     SignatureIndex.writeStats(
       committed.select(explode(col("bands")).as("band")),
@@ -245,23 +231,35 @@ object IncrementalDedup {
     surv
   }
 
-  /** The index probe of one batch: which batch ids near-match an indexed
-    * survivor (eagerly checkpointed bare-id frame — two downstream
-    * consumers read it). Structure unchanged from the inline form it was
-    * extracted from; see the comments inside. */
-  private def probeIndex(spark: SparkSession, sigs: DataFrame,
-                         indexDir: String, batchId: Long, bandCap: Int,
-                         minJaccard: Double): DataFrame = {
-    val index = SignatureIndex.read(spark, indexDir, indexSchema,
-      excludeBatch = batchId)
+  /** ONE native signature pass per batch, shared by both index layouts
+    * ([[BucketedIncrementalDedup]] too) and reused by the index probe, the
+    * within-batch pairing and the index append: (id, sh, bands, chash).
+    * Short docs survive unconditionally and are never indexed. chash is
+    * the canonical 128-bit content key (sh is sorted-distinct, so same
+    * set ⇒ same key). */
+  private[graft] def signatures(docs: DataFrame, idCol: String, textCol: String,
+                                shingleN: Int, k: Int, bands: Int): DataFrame =
+    docs
+      .filter(TokenCount(col(textCol)) >= shingleN)
+      .select(col(idCol).as("id"),
+        HashedShingles(col(textCol), shingleN).as("sh"))
+      .withColumn("bands", MinHashBands(col("sh"), k, bands))
+      .withColumn("chash", Dedup.contentKey(col("sh")))
 
-    // stop-list non-informative hot bands from the incremental stats
-    // subtree (never a full per-batch scan of the index signatures);
-    // MinHashBands salts each band hash with its position, so the raw
-    // value IS position-qualified here
-    val hotBands = SignatureIndex.stopList(spark, indexDir, statsSchema,
-      Seq("band"), excludeBatch = batchId, bandCap, "incremental dedup")
-
+  /** The distributed index probe of one batch, shared by both index
+    * layouts: which batch ids near-match an indexed survivor (eagerly
+    * checkpointed bare-id frame — two downstream consumers read it).
+    * `idxBands` (band, idx_id) and `idxSh` (idx_id, idx_sh) are the index
+    * minus the current batch; `hot` (band) is its stop-list.
+    *
+    * The stop-list is BROADCAST into both anti-joins: it is bounded by
+    * Σn / (bandCap + 1) rows, and as a broadcast build side it leaves the
+    * index side's partitioning intact — a bucketed index then reads
+    * bucket-aligned into the candidate join with no exchange even when
+    * broadcast joins are otherwise off (plan-pinned in BucketedIndexSpec);
+    * as a sort-merge anti-join it would re-shuffle the whole index. */
+  private[graft] def probe(sigs: DataFrame, idxBands: DataFrame, idxSh: DataFrame,
+                           hot: DataFrame, minJaccard: Double): DataFrame = {
     // batch×index candidates: ONE representative per distinct batch
     // content (exact dups share the verdict), ids only through the join.
     // Persisted: the `dropped` plan references this aggregate three ways
@@ -278,14 +276,12 @@ object IncrementalDedup {
         first(col("bands")).as("bands"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val repBands = reps.select(col("rep"), explode(col("bands")).as("band"))
-      .join(hotBands.select(col("band")), Seq("band"), "left_anti")
-    val indexBands = index.select(col("id").as("idx_id"), explode(col("bands")).as("band"))
-      .join(hotBands.select(col("band")), Seq("band"), "left_anti")
-    val cand = repBands.join(indexBands, "band")
+      .join(broadcast(hot), Seq("band"), "left_anti")
+    val cand = repBands.join(idxBands.join(broadcast(hot), Seq("band"), "left_anti"), "band")
       .select(col("rep"), col("idx_id")).distinct()
     val droppedReps = cand
       .join(reps.select(col("rep"), col("sh")), "rep")
-      .join(index.select(col("id").as("idx_id"), col("sh").as("idx_sh")), "idx_id")
+      .join(idxSh, "idx_id")
       .withColumn("n_inter", graft.functions.SortedIntersectCount(col("sh"), col("idx_sh")))
       .withColumn("j", col("n_inter").cast("double") /
         (size(col("sh")) + size(col("idx_sh")) - col("n_inter")))
@@ -293,7 +289,7 @@ object IncrementalDedup {
       .select(col("rep")).distinct()
     // expand the rep verdict to every exact copy in the batch. Eagerly
     // checkpointed: `dropped` has two consumers (the doc anti-join and the
-    // signature anti-join in addBatch), and its subtree is the whole
+    // signature anti-join in [[withinBatch]]), and its subtree is the whole
     // batch×index band join + Jaccard verify — without materialization
     // that subtree evaluates twice per batch (the multi-consumer lesson
     // this codebase keeps re-learning). The rows are bare ids: checkpoint
@@ -306,5 +302,30 @@ object IncrementalDedup {
       .select(col("id"))
       .localCheckpoint(eager = true)
     finally reps.unpersist(blocking = true)
+  }
+
+  /** The distributed within-batch tail, shared by both index layouts:
+    * the batch docs minus `dropped` (the probe's ids) dedup against each
+    * other, REUSING the checkpointed signatures (no second hashing pass
+    * over the text) AND the precomputed bands (pure function of sh — the
+    * pair pipeline skips its per-distinct-content banding pass). Returns
+    * the survivors, checkpointed BEFORE any index write, and the
+    * survivors' (id, sh, bands) to commit — a cheap semi-join of two
+    * CACHED frames that each write recomputes rather than paying an extra
+    * materialization round-trip. */
+  private[dedup] def withinBatch(docs: DataFrame, idCol: String, sigs: DataFrame,
+                                 dropped: DataFrame, k: Int, bands: Int,
+                                 minJaccard: Double, bucketCap: Int): (DataFrame, DataFrame) = {
+    val remaining = docs.join(dropped.withColumnRenamed("id", idCol), Seq(idCol), "left_anti")
+    val remainingSh = sigs.join(dropped, Seq("id"), "left_anti")
+      .select(col("id"), col("sh"), col("bands"))
+    val pairs = Dedup.minhashPairsFromShingles(remainingSh,
+      k, bands, minJaccard, bucketCap)
+    val surv = Dedup.survivors(remaining, idCol, pairs)
+      .localCheckpoint(eager = true)
+    val committed = sigs
+      .join(surv.select(col(idCol).as("id")), Seq("id"), "left_semi")
+      .select(col("id"), col("sh"), col("bands"))
+    (surv, committed)
   }
 }

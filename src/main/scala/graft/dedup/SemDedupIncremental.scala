@@ -103,22 +103,15 @@ object SemDedupIncremental {
   def compactIndex(spark: SparkSession, indexDir: String): Int = {
     val n = SignatureIndex.compact(spark, indexDir, indexSchema, statsSchema,
       Seq("cell"))
-    val dir = new org.apache.hadoop.fs.Path(s"$indexDir/_maxids")
-    val hfs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (n > 0 && hfs.exists(dir)) {
-      val ids = hfs.listStatus(dir).toIndexedSeq
-        .flatMap(_.getPath.getName.stripPrefix("batch=").toLongOption)
-      val live = ids.filter(_ >= 0).maxOption.getOrElse(0L)
-      val fold = ids.filter(_ != live)
+    if (n > 0) {
+      val ids = maxIds(spark, indexDir)
+      val live = ids.map(_._1).filter(_ >= 0).maxOption.getOrElse(0L)
+      val fold = ids.filter(_._1 != live)
       if (fold.nonEmpty) {
-        val folded = fold.map { b =>
-          val in = hfs.open(new org.apache.hadoop.fs.Path(dir, s"batch=$b"))
-          try scala.io.Source.fromInputStream(in).mkString.trim.toLong
-          finally in.close()
-        }.max
-        writeMaxId(spark, indexDir, -live, folded)
-        fold.filter(_ != -live).foreach(b =>
-          hfs.delete(new org.apache.hadoop.fs.Path(dir, s"batch=$b"), false))
+        writeMaxId(spark, indexDir, -live, fold.map(_._2).max)
+        fold.filter(_._1 != -live).foreach { case (_, _, p) =>
+          p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, false)
+        }
       }
     }
     n
@@ -132,32 +125,22 @@ object SemDedupIncremental {
     * degrades as cells grow. Returns (cell, n) rows. */
   def needsRefit(spark: SparkSession, indexDir: String,
                  targetCellSize: Long): DataFrame = {
-    val sp = new org.apache.hadoop.fs.Path(s"$indexDir/_stats")
-    sp.getFileSystem(spark.sparkContext.hadoopConfiguration).mkdirs(sp)
-    spark.read.schema(statsSchema).parquet(s"$indexDir/_stats")
+    // Long.MinValue excludes nothing (see [[refit]])
+    SignatureIndex.readStats(spark, indexDir, statsSchema, excludeBatch = Long.MinValue)
       .groupBy(col("cell")).agg(sum(col("n")).as("n"))
       .filter(col("n") > targetCellSize)
   }
 
-  /** Max id committed by any batch other than `excludeBatch`, from the
-    * `_maxids` sidecar (one tiny text file per batch — the
-    * `_graft_params` discipline; a directory listing plus ≤ one small
-    * read per batch ever committed, never an index scan). -1 if none. */
-  private def priorMaxId(spark: SparkSession, indexDir: String,
-                         excludeBatch: Long): Long = {
-    val dir = new org.apache.hadoop.fs.Path(s"$indexDir/_maxids")
-    val hfs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!hfs.exists(dir)) return -1L
-    hfs.listStatus(dir).toIndexedSeq
-      .flatMap(_.getPath.getName.stripPrefix("batch=").toLongOption)
-      .filter(_ != excludeBatch)
-      .map { b =>
-        val in = hfs.open(new org.apache.hadoop.fs.Path(dir, s"batch=$b"))
-        try scala.io.Source.fromInputStream(in).mkString.trim.toLong
-        finally in.close()
-      }
-      .foldLeft(-1L)(math.max)
-  }
+  /** Every `_maxids` sidecar entry as (batch, max id, path) — one tiny
+    * text file per batch (the `_graft_params` discipline): a directory
+    * listing plus one small read per live batch, never an index scan. */
+  private def maxIds(spark: SparkSession,
+                     indexDir: String): Seq[(Long, Long, org.apache.hadoop.fs.Path)] =
+    SignatureIndex.batches(spark, s"$indexDir/_maxids").map { case (b, p) =>
+      val in = p.getFileSystem(spark.sparkContext.hadoopConfiguration).open(p)
+      try (b, scala.io.Source.fromInputStream(in).mkString.trim.toLong, p)
+      finally in.close()
+    }
 
   private def writeMaxId(spark: SparkSession, indexDir: String,
                          batchId: Long, maxId: Long): Unit = {
@@ -247,7 +230,8 @@ object SemDedupIncremental {
 
     // out-of-order ingest fails loudly (see scaladoc): one tiny agg over
     // the checkpointed batch vs the sidecar max
-    val prior = priorMaxId(spark, indexDir, excludeBatch = batchId)
+    val prior = maxIds(spark, indexDir).filter(_._1 != batchId)
+      .foldLeft(-1L)((m, e) => math.max(m, e._2))
     val mm = batch.agg(min(col("id")), max(col("id"))).head()
     if (mm.isNullAt(0))
       // empty micro-batch (a streaming caller's quiet interval): nothing

@@ -1,14 +1,17 @@
 package graft.dedup
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
-/** Shared machinery of the batch-partitioned signature indexes
+/** Shared machinery of the batch-partitioned indexes
   * ([[IncrementalDedup]] text shingles, [[graft.similarity.IncrementalVectors]]
-  * embeddings): the parameter sidecar, the retry-safe read, and the
-  * hot-band stop-list live HERE so a fix to any of them cannot silently
-  * miss one front. */
+  * embeddings, [[SemDedupIncremental]] cells, [[graft.text.PostingsIndex]]
+  * postings): the parameter sidecar, the `batch=<id>` listing, the
+  * retry-safe read, the hot-band stop-list (also over
+  * [[BucketedIncrementalDedup]]'s stats table) and compaction live HERE
+  * so a fix to any of them cannot silently miss one front. */
 private[graft] object SignatureIndex {
 
   private val log = org.slf4j.LoggerFactory.getLogger(getClass)
@@ -17,7 +20,7 @@ private[graft] object SignatureIndex {
     * `_graft_params` sidecar: signatures from different parameters
     * silently match nothing, so a mismatched batch fails loudly. */
   def checkParams(spark: SparkSession, indexDir: String, want: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(indexDir, "_graft_params")
+    val p = new Path(indexDir, "_graft_params")
     val hfs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (hfs.exists(p)) {
       val in = hfs.open(p)
@@ -25,29 +28,29 @@ private[graft] object SignatureIndex {
       require(got == want,
         s"index at $indexDir was built with [$got]; this batch uses [$want]")
     } else {
-      hfs.mkdirs(new org.apache.hadoop.fs.Path(indexDir))
+      hfs.mkdirs(new Path(indexDir))
       val out = hfs.create(p, true)
       try out.write(want.getBytes("UTF-8")) finally out.close()
     }
   }
 
-  /** Does the index hold any batch partition OTHER than `excludeBatch`?
-    * One driver-side directory listing — the gate for the fresh-index
-    * fast path (the BucketedIncrementalDedup/CdcIndex r17 precedent): a
-    * first batch probes a provably-empty index, so its candidate join,
-    * stop-list and verify machinery are pure scheduler overhead. A RETRY
-    * of batch 1 sees only its own partition and still counts as fresh —
-    * reads exclude it anyway. */
-  def hasOtherBatches(spark: SparkSession, indexDir: String,
-                      excludeBatch: Long): Boolean = {
-    val root = new org.apache.hadoop.fs.Path(indexDir)
+  /** Every `batch=<id>` entry directly under `dir`, as (id, path) — one
+    * driver-side listing, empty if `dir` does not exist. Entries are not
+    * filtered on being directories: index roots only ever hold partition
+    * directories under that name, and the `_maxids` sidecar holds one
+    * file per batch. Also the gate of the fresh-index fast path: a first
+    * batch probes a provably-empty index (no entry other than its own —
+    * a RETRY of batch 1 sees only its own partition, which every read
+    * excludes anyway), so its stop-list, candidate join and verify are
+    * pure scheduler overhead. */
+  def batches(spark: SparkSession, dir: String): Seq[(Long, Path)] = {
+    val root = new Path(dir)
     val hfs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    hfs.exists(root) && hfs.listStatus(root).exists { s =>
-      s.isDirectory && {
-        val n = s.getPath.getName
-        n.startsWith("batch=") &&
-          n.stripPrefix("batch=").toLongOption.exists(_ != excludeBatch)
-      }
+    if (!hfs.exists(root)) Seq.empty
+    else hfs.listStatus(root).toIndexedSeq.flatMap { s =>
+      val n = s.getPath.getName
+      if (n.startsWith("batch=")) n.stripPrefix("batch=").toLongOption.map(_ -> s.getPath)
+      else None
     }
   }
 
@@ -62,51 +65,52 @@ private[graft] object SignatureIndex {
       .filter(col("batch") =!= excludeBatch)
       .drop("batch")
 
-  /** Non-informative hot buckets from the INCREMENTAL stats subtree:
-    * buckets whose summed index frequency exceeds `cap` are returned
-    * (materialized) for anti-join exclusion, and their count is logged —
-    * a bucket shared by ~everything would explode the batch×index join
-    * quadratically; docs still probe via their remaining bands.
+  /** The INCREMENTAL stats subtree of a directory index, every batch
+    * except `excludeBatch`: keyCols + n. `statsSchema` must be keyCols +
+    * (n long) + (batch long). */
+  def readStats(spark: SparkSession, indexDir: String, statsSchema: StructType,
+                excludeBatch: Long): DataFrame = {
+    // first batch: the stats subtree may not exist yet — an empty dir
+    // with the explicit schema reads as empty
+    val sp = new Path(statsDir(indexDir))
+    sp.getFileSystem(spark.sparkContext.hadoopConfiguration).mkdirs(sp)
+    read(spark, statsDir(indexDir), statsSchema, excludeBatch)
+  }
+
+  /** Non-informative hot buckets from an index's per-batch stats
+    * (keyCols + n, the current batch already excluded): buckets whose
+    * summed index frequency exceeds `cap` are returned (materialized) for
+    * anti-join exclusion, and their count is logged — a bucket shared by
+    * ~everything would explode the batch×index join quadratically; docs
+    * still probe via their remaining bands.
     *
     * Scale shape: per-batch bucket counts are tiny pre-aggregates written
-    * by [[writeStats]] at commit time, so computing the stop-list reads
-    * ONLY the stats — never a full scan of the index's signature column
-    * per batch. `statsSchema` must be keyCols + (n long) + (batch long). */
-  def stopList(spark: SparkSession, indexDir: String,
-               statsSchema: StructType, keyCols: Seq[String],
-               excludeBatch: Long, cap: Int, label: String): DataFrame = {
+    * at commit time (by [[writeStats]], or the bucketed index's `_stats`
+    * table), so computing the stop-list reads ONLY the stats — never a
+    * full scan of the index's signature column per batch. */
+  def stopList(stats: DataFrame, keyCols: Seq[String], cap: Int,
+               label: String): DataFrame = {
     // LAZY checkpoint: the count below materializes the blocks and
     // returns the size in one job instead of a checkpoint job + a count
     // job (the stop-list is consumed by two anti-joins downstream, so
     // the materialization itself is still required)
-    val hot = hotBuckets(spark, indexDir, statsSchema, keyCols, excludeBatch, cap)
-      .localCheckpoint(eager = false)
+    val hot = hotBuckets(stats, keyCols, cap).localCheckpoint(eager = false)
     logHot(hot.count(), cap, label)
     hot
   }
 
   /** [[stopList]] collected to the driver, for plans that run there. */
-  def stopListRows(spark: SparkSession, indexDir: String,
-                   statsSchema: StructType, keyCols: Seq[String],
-                   excludeBatch: Long, cap: Int, label: String): Array[Row] = {
-    val hot = hotBuckets(spark, indexDir, statsSchema, keyCols, excludeBatch, cap).collect()
+  def stopListRows(stats: DataFrame, keyCols: Seq[String], cap: Int,
+                   label: String): Array[Row] = {
+    val hot = hotBuckets(stats, keyCols, cap).collect()
     logHot(hot.length, cap, label)
     hot
   }
 
-  private def hotBuckets(spark: SparkSession, indexDir: String,
-                         statsSchema: StructType, keyCols: Seq[String],
-                         excludeBatch: Long, cap: Int): DataFrame = {
-    // first batch: the stats subtree may not exist yet — an empty dir
-    // with the explicit schema reads as empty
-    val sp = new org.apache.hadoop.fs.Path(statsDir(indexDir))
-    sp.getFileSystem(spark.sparkContext.hadoopConfiguration).mkdirs(sp)
-    spark.read.schema(statsSchema).parquet(statsDir(indexDir))
-      .filter(col("batch") =!= excludeBatch)
-      .groupBy(keyCols.map(col): _*).agg(sum(col("n")).as("n"))
+  private def hotBuckets(stats: DataFrame, keyCols: Seq[String], cap: Int): DataFrame =
+    stats.groupBy(keyCols.map(col): _*).agg(sum(col("n")).as("n"))
       .filter(col("n") > cap)
       .select(keyCols.map(col): _*)
-  }
 
   private def logHot(nHot: Long, cap: Int, label: String): Unit =
     if (nHot > 0)
@@ -179,23 +183,16 @@ private[graft] object SignatureIndex {
   def compact(spark: SparkSession, indexDir: String, schema: StructType,
               statsSchema: StructType, keyCols: Seq[String],
               partitionCols: Seq[String] = Nil): Int = {
-    val root = new org.apache.hadoop.fs.Path(indexDir)
+    val root = new Path(indexDir)
     val hfs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!hfs.exists(root)) return 0
-    def batchDirs(p: org.apache.hadoop.fs.Path): Seq[(Long, org.apache.hadoop.fs.Path)] =
-      if (!hfs.exists(p)) Seq.empty
-      else hfs.listStatus(p).toIndexedSeq
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch="))
-        .flatMap(s => s.getPath.getName.stripPrefix("batch=").toLongOption
-          .map(_ -> s.getPath))
-    val statsRoot = new org.apache.hadoop.fs.Path(statsDir(indexDir))
-    val sig = batchDirs(root)
+    val sig = batches(spark, indexDir)
     // sweep stats residue: a stats dir with no signature sibling can only
     // be the tail of an interrupted delete phase (writes create the
     // signature partition first; deletes remove it first), so its rows
     // are already folded into a consolidated partition
     val sigIds = sig.map(_._1).toSet
-    batchDirs(statsRoot).filterNot(s => sigIds.contains(s._1))
+    batches(spark, statsDir(indexDir)).filterNot(s => sigIds.contains(s._1))
       .foreach(s => hfs.delete(s._2, true))
     val nonneg = sig.map(_._1).filter(_ >= 0)
     if (nonneg.isEmpty) return 0
@@ -209,12 +206,12 @@ private[graft] object SignatureIndex {
     // contract above (a prior consolidation's id always derives from an
     // older, smaller live id and folds in as a normal source).
     val gen = -live
-    val genSig = new org.apache.hadoop.fs.Path(root, s"batch=$gen")
-    val genStats = new org.apache.hadoop.fs.Path(statsRoot, s"batch=$gen")
-    val commitMarker = new org.apache.hadoop.fs.Path(genSig, "_graft_commit")
+    val genSig = new Path(root, s"batch=$gen")
+    val genStats = new Path(statsDir(indexDir), s"batch=$gen")
+    val commitMarker = new Path(genSig, "_graft_commit")
     val foldRead = fold.filterNot(_._1 == gen)
     val foldIds = foldRead.map(_._1).toSet
-    val foldStats = batchDirs(statsRoot).filter(s => foldIds.contains(s._1))
+    val foldStats = batches(spark, statsDir(indexDir)).filter(s => foldIds.contains(s._1))
     val priorComplete = hfs.exists(commitMarker)
     if (!priorComplete) {
       val noBatch = StructType(schema.filterNot(_.name == "batch"))

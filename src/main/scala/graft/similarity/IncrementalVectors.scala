@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.dedup.Dedup
+import graft.dedup.{Dedup, SignatureIndex}
 import graft.functions.SrpBands
 
 /** Incremental embedding near-dup dedup against a persistent vector
@@ -26,25 +26,28 @@ import graft.functions.SrpBands
   */
 object IncrementalVectors {
 
-
   private val indexSchema = StructType(Seq(
     StructField("id", LongType, nullable = false),
     StructField("v", ArrayType(DoubleType, containsNull = false), nullable = false),
     StructField("bands", ArrayType(LongType, containsNull = false), nullable = false),
     StructField("batch", LongType, nullable = false)))
 
+  // SRP band values are UNSALTED low-`bits` patterns (lshKnn's
+  // multi-probe bit flips need the raw form), so candidate buckets must
+  // key on (band POSITION, signature) — joining on the value alone would
+  // collide band i with band j by chance and make the stop-list count
+  // across positions
+  private val statsSchema = StructType(Seq(
+    StructField("pos", IntegerType, nullable = false),
+    StructField("sig", LongType, nullable = false),
+    StructField("n", LongType, nullable = false),
+    StructField("batch", LongType, nullable = false)))
+
   /** Fold all settled batch partitions into one consolidated partition —
-    * see [[graft.dedup.SignatureIndex.compact]] for the retry/crash
-    * contract. Returns the number of partitions folded. */
-  def compactIndex(spark: SparkSession, indexDir: String): Int = {
-    val statsSchema = StructType(Seq(
-      StructField("pos", IntegerType, nullable = false),
-      StructField("sig", LongType, nullable = false),
-      StructField("n", LongType, nullable = false),
-      StructField("batch", LongType, nullable = false)))
-    graft.dedup.SignatureIndex.compact(spark, indexDir, indexSchema,
-      statsSchema, Seq("pos", "sig"))
-  }
+    * see [[SignatureIndex.compact]] for the retry/crash contract.
+    * Returns the number of partitions folded. */
+  def compactIndex(spark: SparkSession, indexDir: String): Int =
+    SignatureIndex.compact(spark, indexDir, indexSchema, statsSchema, Seq("pos", "sig"))
 
   /** Process one arriving batch of (id, vector) rows against the index.
     * Returns the batch's surviving rows (all original columns). */
@@ -53,8 +56,7 @@ object IncrementalVectors {
                bands: Int = 4, bucketCap: Int = 1024,
                bandCap: Int = 4096): DataFrame = {
     val spark = vecs.sparkSession
-    graft.dedup.SignatureIndex.checkParams(spark, indexDir,
-      s"bits=$bits,bands=$bands")
+    SignatureIndex.checkParams(spark, indexDir, s"bits=$bits,bands=$bands")
 
     // one codegen'd SrpBands pass; vectors ride as double[] (exact float
     // widening) so the stored form verifies identically
@@ -63,60 +65,36 @@ object IncrementalVectors {
       .withColumn("bands", SrpBands(col("v"), bits, bands, seed = 42L))
       .localCheckpoint(eager = true)
 
-    // fresh-index fast path (the BucketedIncrementalDedup/CdcIndex r17
-    // precedent): the first batch probes a provably-empty index — skip
-    // the stop-list, band joins and cosine verify entirely. A batch-1
-    // RETRY sees only its own (excluded) partition and stays correct.
-    if (!graft.dedup.SignatureIndex.hasOtherBatches(spark, indexDir, batchId)) {
-      val pairs = Vectors.cosinePairsFromBands(sigs, minCosine, bucketCap)
-        .select(col("id_a"), col("id_b"))
-      val surv = Dedup.survivors(vecs, idCol, pairs)
+    // fresh-index fast path (the [[graft.dedup.IncrementalDedup]]
+    // pattern): the first batch probes a provably-empty index, so the
+    // stop-list, band joins and cosine verify are skipped and `dropped`
+    // is a plan-only empty frame derived from sigs. A batch-1 RETRY sees
+    // only its own (excluded) partition and stays correct.
+    val fresh = !SignatureIndex.batches(spark, indexDir).exists(_._1 != batchId)
+    val dropped = if (fresh) sigs.select(col("id")).limit(0) else {
+      val index = SignatureIndex.read(spark, indexDir, indexSchema, excludeBatch = batchId)
+      // counts come from the incremental stats subtree, never a
+      // per-batch rescan of the index signatures
+      val hotBands = SignatureIndex.stopList(
+        SignatureIndex.readStats(spark, indexDir, statsSchema, excludeBatch = batchId),
+        Seq("pos", "sig"), bandCap, "incremental vector dedup")
+      val batchBands = sigs.select(col("id"), posexplode(col("bands")))
+        .select(col("id"), col("pos"), col("col").as("sig"))
+        .join(hotBands, Seq("pos", "sig"), "left_anti")
+      val indexBands = index.select(col("id").as("idx_id"), posexplode(col("bands")))
+        .select(col("idx_id"), col("pos"), col("col").as("sig"))
+        .join(hotBands, Seq("pos", "sig"), "left_anti")
+      // eagerly checkpointed: two consumers (doc anti-join + signature
+      // anti-join) would otherwise evaluate the band join + cosine verify
+      // subtree twice per batch; the rows are bare ids
+      batchBands.join(indexBands, Seq("pos", "sig"))
+        .select(col("id"), col("idx_id")).distinct()
+        .join(sigs.select(col("id"), col("v")), "id")
+        .join(index.select(col("id").as("idx_id"), col("v").as("idx_v")), "idx_id")
+        .filter(Vectors.cosine(col("v"), col("idx_v")) >= minCosine)
+        .select(col("id")).distinct()
         .localCheckpoint(eager = true)
-      val committed = sigs
-        .join(surv.select(col(idCol).as("id")), Seq("id"), "left_semi")
-        .select(col("id"), col("v"), col("bands"))
-      committed.write.mode("overwrite").parquet(s"$indexDir/batch=$batchId")
-      graft.dedup.SignatureIndex.writeStats(
-        committed.select(posexplode(col("bands")))
-          .select(col("pos"), col("col").as("sig")),
-        indexDir, Seq("pos", "sig"), batchId)
-      return surv
     }
-
-    val index = graft.dedup.SignatureIndex.read(spark, indexDir, indexSchema,
-      excludeBatch = batchId)
-
-    // SRP band values are UNSALTED low-`bits` patterns (lshKnn's
-    // multi-probe bit flips need the raw form), so candidate buckets must
-    // key on (band POSITION, signature) — joining on the value alone
-    // would collide band i with band j by chance and make the stop-list
-    // count across positions. Counts come from the incremental stats
-    // subtree, never a per-batch rescan of the index signatures.
-    val statsSchema = StructType(Seq(
-      StructField("pos", IntegerType, nullable = false),
-      StructField("sig", LongType, nullable = false),
-      StructField("n", LongType, nullable = false),
-      StructField("batch", LongType, nullable = false)))
-    val hotBands = graft.dedup.SignatureIndex.stopList(spark, indexDir,
-      statsSchema, Seq("pos", "sig"), excludeBatch = batchId, bandCap,
-      "incremental vector dedup")
-
-    val batchBands = sigs.select(col("id"), posexplode(col("bands")))
-      .select(col("id"), col("pos"), col("col").as("sig"))
-      .join(hotBands, Seq("pos", "sig"), "left_anti")
-    val indexBands = index.select(col("id").as("idx_id"), posexplode(col("bands")))
-      .select(col("idx_id"), col("pos"), col("col").as("sig"))
-      .join(hotBands, Seq("pos", "sig"), "left_anti")
-    // eagerly checkpointed: two consumers (doc anti-join + signature
-    // anti-join) would otherwise evaluate the band join + cosine verify
-    // subtree twice per batch; the rows are bare ids
-    val dropped = batchBands.join(indexBands, Seq("pos", "sig"))
-      .select(col("id"), col("idx_id")).distinct()
-      .join(sigs.select(col("id"), col("v")), "id")
-      .join(index.select(col("id").as("idx_id"), col("v").as("idx_v")), "idx_id")
-      .filter(Vectors.cosine(col("v"), col("idx_v")) >= minCosine)
-      .select(col("id")).distinct()
-      .localCheckpoint(eager = true)
 
     val remaining = vecs.join(dropped.withColumnRenamed("id", idCol), Seq(idCol), "left_anti")
     // REUSE the checkpointed signatures for within-batch pairing
@@ -132,7 +110,7 @@ object IncrementalVectors {
       .join(surv.select(col(idCol).as("id")), Seq("id"), "left_semi")
       .select(col("id"), col("v"), col("bands"))
     committed.write.mode("overwrite").parquet(s"$indexDir/batch=$batchId")
-    graft.dedup.SignatureIndex.writeStats(
+    SignatureIndex.writeStats(
       committed.select(posexplode(col("bands")))
         .select(col("pos"), col("col").as("sig")),
       indexDir, Seq("pos", "sig"), batchId)

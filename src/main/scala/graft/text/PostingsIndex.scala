@@ -1,5 +1,6 @@
 package graft.text
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -102,8 +103,7 @@ object PostingsIndex {
       .write.mode("overwrite").parquet(s"$indexDir/_stats/batch=$batchId")
     // both writes durable → the batch becomes visible (see scaladoc);
     // a retry's overwrite deleted any stale marker with the directory
-    val marker = new org.apache.hadoop.fs.Path(
-      s"$indexDir/batch=$batchId", "_graft_commit")
+    val marker = new Path(s"$indexDir/batch=$batchId", "_graft_commit")
     marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
       .create(marker, true).close()
   }
@@ -127,15 +127,12 @@ object PostingsIndex {
     * any read path may see. One directory listing; consolidated
     * partitions qualify via the marker [[SignatureIndex.compact]]
     * writes. */
-  private def committedBatches(spark: SparkSession, indexDir: String): Seq[Long] = {
-    val root = new org.apache.hadoop.fs.Path(indexDir)
-    val hfs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!hfs.exists(root)) return Seq.empty
-    hfs.listStatus(root).toIndexedSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch="))
-      .flatMap(s => s.getPath.getName.stripPrefix("batch=").toLongOption)
-      .filter(b => hfs.exists(new org.apache.hadoop.fs.Path(
-        s"$indexDir/batch=$b", "_graft_commit")))
+  private def committedBatches(spark: SparkSession, indexDir: String): Seq[Long] =
+    SignatureIndex.batches(spark, indexDir).collect { case (b, p) if committed(spark, p) => b }
+
+  private def committed(spark: SparkSession, batchDir: Path): Boolean = {
+    val marker = new Path(batchDir, "_graft_commit")
+    marker.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(marker)
   }
 
   /** BM25 top-k from the index alone — bit-identical to
@@ -267,18 +264,12 @@ object PostingsIndex {
     * The LIVE batch (max non-negative id) is exempt, mirroring the
     * generic compact's single-writer contract. */
   def compactIndex(spark: SparkSession, indexDir: String): Int = {
-    val root = new org.apache.hadoop.fs.Path(indexDir)
-    val hfs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (hfs.exists(root)) {
-      val ids = hfs.listStatus(root).toIndexedSeq
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch="))
-        .flatMap(_.getPath.getName.stripPrefix("batch=").toLongOption)
-      val live = ids.filter(_ >= 0).maxOption.getOrElse(Long.MinValue)
-      val committed = committedBatches(spark, indexDir).toSet
-      ids.filter(b => b != live && !committed.contains(b)).foreach { b =>
-        hfs.delete(new org.apache.hadoop.fs.Path(s"$indexDir/batch=$b"), true)
-        hfs.delete(new org.apache.hadoop.fs.Path(s"$indexDir/_stats/batch=$b"), true)
-      }
+    val ids = SignatureIndex.batches(spark, indexDir)
+    val live = ids.map(_._1).filter(_ >= 0).maxOption.getOrElse(Long.MinValue)
+    val hfs = new Path(indexDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    ids.filter { case (b, p) => b != live && !committed(spark, p) }.foreach { case (b, p) =>
+      hfs.delete(p, true)
+      hfs.delete(new Path(s"$indexDir/_stats/batch=$b"), true)
     }
     SignatureIndex.compact(spark, indexDir, postingsSchema, statsSchema,
       Seq("stat"), partitionCols = Seq("tb"))

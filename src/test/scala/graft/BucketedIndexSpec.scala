@@ -84,6 +84,79 @@ class BucketedIndexSpec extends SparkSuite {
     }
   }
 
+  test("shared probe keeps a stop-listed bucketed index exchange-free up to its joins") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import graft.dedup.SignatureIndex
+    val base = s"bidx_hot_${System.nanoTime()}"
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.get(key)
+    // the probe's only action is its eager checkpoint; keep that plan
+    @volatile var probed: Option[SparkPlan] = None
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution, d: Long): Unit =
+        if (qe.executedPlan.toString.contains(s"${base}_sh")) probed = Some(qe.executedPlan)
+      def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                    e: Exception): Unit = ()
+    }
+    try {
+      addBucketed(base, 1L, 0)
+      addBucketed(base, 2L, 100, contentKey = 2L)
+      // the design-scale stand-in: the index side is too big to broadcast
+      spark.conf.set(key, "-1")
+      spark.listenerManager.register(listener)
+      def others(t: String) = spark.table(t).filter(col("batch") =!= 3L)
+      val hot = SignatureIndex.stopList(others(s"${base}_stats"), Seq("band"), 1, "test")
+      assert(hot.count() > 0, "the index must stop-list at least one band")
+      val dropped = IncrementalDedup.probe(
+        IncrementalDedup.signatures(docsBatch(200), "doc_id", "text", shingleN = 2, k = 16,
+          bands = 8).localCheckpoint(eager = true),
+        others(s"${base}_bands").select(col("band"), col("id").as("idx_id")),
+        others(s"${base}_sh").select(col("id").as("idx_id"), col("sh").as("idx_sh")),
+        hot, minJaccard = 0.9)
+      assert(dropped.count() === 40, "batch 3 copies batch 1 through the probe")
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (probed.isEmpty && System.nanoTime() < deadline) Thread.sleep(50)
+      val plan = probed.getOrElse(fail("the probe's checkpoint plan was not observed"))
+
+      def kids(p: SparkPlan): Seq[SparkPlan] = p match {
+        case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+        case q: QueryStageExec => Seq(q.plan)
+        case _ => p.children
+      }
+      def holdsBatch(p: SparkPlan): Boolean =
+        p.isInstanceOf[InMemoryTableScanExec] || kids(p).exists(holdsBatch)
+      // every index scan, with whether a shuffle sits between it and the
+      // nearest join against the batch (whose side holds the persisted
+      // representatives); the anti-joins with the stop-list do not count
+      def scans(p: SparkPlan, shuffled: Boolean): Seq[(FileSourceScanExec, Boolean)] =
+        p match {
+          case s: FileSourceScanExec => Seq(s -> shuffled)
+          case _: ShuffleExchangeLike => kids(p).flatMap(scans(_, shuffled = true))
+          case j: BaseJoinExec if kids(j).exists(holdsBatch) =>
+            kids(p).flatMap(scans(_, shuffled = false))
+          case _ => kids(p).flatMap(scans(_, shuffled))
+        }
+      val idx = scans(plan, shuffled = false).filter { case (s, _) =>
+        s.tableIdentifier.exists(t => t.table == s"${base}_bands" || t.table == s"${base}_sh")
+      }
+      assert(idx.map(_._1.tableIdentifier.get.table).toSet ===
+        Set(s"${base}_bands", s"${base}_sh"), s"both index scans expected, plan:\n$plan")
+      idx.foreach { case (s, shuffled) =>
+        assert(s.bucketedScan, s"${s.tableIdentifier.get} must scan bucket-aware")
+        assert(!shuffled, s"${s.tableIdentifier.get} is re-shuffled into its join, plan:\n$plan")
+      }
+    } finally {
+      spark.listenerManager.unregister(listener)
+      spark.conf.set(key, prev)
+      dropTables(base)
+    }
+  }
+
   test("compact folds settled partitions, stays invariant, and resumes from the marker") {
     val base = s"bidx_cmp_${System.nanoTime()}"
     try {
