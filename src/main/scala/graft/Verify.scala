@@ -19,31 +19,15 @@ object Verify {
     * +offset copy whose copy lands in the same connected component of the
     * pair graph. Direct-pair checking would under-count: exact-dup
     * families collapse to a representative before banding, so (b, b')
-    * may be linked only through the rep. Driver-side union-find is fine
-    * here — the pair lists are bounded query outputs (thousands), not
-    * corpus-scale data. */
+    * may be linked only through the rep. The components are the driver
+    * union-find of [[graft.dedup.Dedup.clusters]] — fine here, the pair
+    * lists are bounded query outputs (thousands), not corpus-scale data. */
   private def plantedPairRecall(pairs: Array[(Long, Long)], baseIds: Array[Long],
                                 offset: Long): Double = {
     if (baseIds.isEmpty) return 1.0
-    val parent = scala.collection.mutable.Map.empty[Long, Long]
-    // roots carry no parent entry, so graph membership needs its own set
-    val seen = scala.collection.mutable.Set.empty[Long]
-    def find(x: Long): Long = {
-      var r = x
-      while (parent.getOrElse(r, r) != r) r = parent(r)
-      var c = x
-      while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
-      r
-    }
-    def union(a: Long, b: Long): Unit = {
-      seen += a; seen += b
-      val ra = find(a); val rb = find(b)
-      if (ra != rb) parent(ra) = rb
-    }
-    pairs.foreach { case (a, b) => union(a, b) }
+    val cluster = graft.dedup.Dedup.clusters(pairs.toSeq).toMap
     val found = baseIds.count(d =>
-      seen.contains(d) && seen.contains(d + offset) &&
-        find(d) == find(d + offset))
+      cluster.get(d).exists(c => cluster.get(d + offset).contains(c)))
     found.toDouble / baseIds.length
   }
   /** The oracle map as one JSON object — what the driver's DuckDB gate

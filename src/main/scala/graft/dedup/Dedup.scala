@@ -544,7 +544,7 @@ object Dedup {
     * id, so the output matches the distributed propagation loop of
     * [[components]] exactly (the equivalence is unit-tested on random
     * graphs). Returns (id, cluster_id) for every node on an edge. */
-  private[dedup] def clusters(edges: Seq[(Long, Long)]): Seq[(Long, Long)] = {
+  private[graft] def clusters(edges: Seq[(Long, Long)]): Seq[(Long, Long)] = {
     val parent = new java.util.HashMap[Long, Long](edges.length * 2)
     def find(x: Long): Long = {
       var r = x

@@ -77,9 +77,7 @@ object HashedShingles {
     x
   }
 
-  // Java \s on the ASCII range: [ \t\n\x0B\f\r]
-  private[functions] def isWs(b: Byte): Boolean =
-    b == ' ' || (b >= 9 && b <= 13)
+  import TokenWindows.isWs
 
   /** Public (not package-private) deliberately: generated Java from
     * [[TokenCount]].doGenCode calls this as a static method, and scalac

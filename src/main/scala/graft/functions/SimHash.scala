@@ -42,9 +42,7 @@ object SimHash64 {
   private final val FNV_OFFSET = 0xcbf29ce484222325L
   private final val FNV_PRIME = 0x100000001b3L
 
-  // single source of truth for the \s tokenization, shared with
-  // HashedShingles/TokenCount — whitespace definitions must not re-diverge
-  private def isWs(b: Byte): Boolean = HashedShingles.isWs(b)
+  import TokenWindows.isWs
 
   /** Static helper invoked from both interpreted eval and generated code. */
   def compute(s: UTF8String): Long = {

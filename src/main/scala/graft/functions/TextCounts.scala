@@ -91,10 +91,10 @@ private final class SliceCounter(bytes: Array[Byte], expected: Int) {
   * counting; custom `Expression` over UDF).
   *
   * The composable form pays two regex engines per document: `n_ws` ≡
-  * `size(split(trim(text), "\\s+"))` (including the limit=-1 edges — the
-  * [""] result for empty/space-only text and the empty token each of a
-  * leading/trailing non-space whitespace run leaks, exactly as
-  * [[TextQualityStats]] documents) and `n_bpe` ≡
+  * `size(split(trim(text), "\\s+"))`, counted by the allocation-free
+  * [[TokenWindows.fieldCount]] (the edge cases — [""] for empty or
+  * space-only text, the empty field a leading/trailing non-space
+  * whitespace run leaks — are defined there, once), and `n_bpe` ≡
   * `regexp_count(text, "[a-z]+|[0-9]|[^a-z0-9\\s]")` — alternation
   * semantics byte-replicated: a maximal `[a-z]` run is one match, each
   * digit is its own match, and every other non-whitespace CODE POINT
@@ -150,30 +150,14 @@ object TokenCounts {
         prevAz = true
       } else {
         if (b >= '0' && b <= '9') nBpe += 1 // each digit its own match
-        else if (!(b == ' ' || (b >= 9 && b <= 13))) nBpe += 1 // any other code point
+        else if (!TokenWindows.isWs(b)) nBpe += 1 // any other code point
         prevAz = false
       }
       i += 1
     }
 
-    // ---- n_ws: split(trim(text), "\s+") semantics, as in TextQualityStats
-    var st = 0; var en = len
-    while (st < en && bytes(st) == ' ') st += 1 // Spark trim strips 0x20 only
-    while (en > st && bytes(en - 1) == ' ') en -= 1
-    var nWs = 0L
-    if (st == en) nWs = 1L // split("", \s+) = [""]
-    else {
-      if (HashedShingles.isWs(bytes(st))) nWs += 1 // leading \s run leaks ""
-      if (HashedShingles.isWs(bytes(en - 1))) nWs += 1 // trailing too (limit=-1)
-      i = st
-      while (i < en) {
-        while (i < en && HashedShingles.isWs(bytes(i))) i += 1
-        if (i < en) {
-          nWs += 1
-          while (i < en && !HashedShingles.isWs(bytes(i))) i += 1
-        }
-      }
-    }
+    // ---- n_ws: the split(trim(text), "\s+") field count
+    val nWs = TokenWindows.fieldCount(bytes).toLong
 
     val row = new GenericInternalRow(2)
     row.setLong(0, nWs)
@@ -198,9 +182,9 @@ object TokenCounts {
   *  - `n_sents` / `n_distinct_sents` ≡ sizes of `split(text, "\\. ")`
   *    and its `array_distinct` — the literal ". " delimiter scanned
   *    left-to-right non-overlapping, empty pieces kept (limit=-1);
-  *  - `n_toks` ≡ `size(split(trim(text), "\\s+"))` with the same edge
-  *    semantics as [[TokenCounts]], and `max_tok_count` the maximum
-  *    multiplicity among those tokens — the leaked empty tokens
+  *  - `n_toks` ≡ `size(split(trim(text), "\\s+"))` — the fields of
+  *    [[TokenWindows.splitFieldBounds]] — and `max_tok_count` the maximum
+  *    multiplicity among those fields: the leaked empty fields
   *    participate (both leaking makes "" a count-2 token), exactly as
   *    they do in the composable `array_sort` form.
   * Equivalence incl. edges and seeded fuzz is pinned in CurationSpec.
@@ -255,31 +239,18 @@ object RepetitionStats {
     }
     sents.add(start, len - start); nSents += 1 // final piece, "" included
 
-    // ---- tokens: split(trim(text), "\s+") with the limit=-1 edges
-    var st = 0; var en = len
-    while (st < en && bytes(st) == ' ') st += 1
-    while (en > st && bytes(en - 1) == ' ') en -= 1
-    val toks = new SliceCounter(bytes, math.max(4, (en - st) / 6))
-    var nToks = 0L
-    if (st == en) { toks.add(0, 0); nToks = 1L } // [""]
-    else {
-      if (HashedShingles.isWs(bytes(st))) { toks.add(0, 0); nToks += 1 }
-      if (HashedShingles.isWs(bytes(en - 1))) { toks.add(0, 0); nToks += 1 }
-      i = st
-      while (i < en) {
-        while (i < en && HashedShingles.isWs(bytes(i))) i += 1
-        if (i < en) {
-          val t0 = i
-          while (i < en && !HashedShingles.isWs(bytes(i))) i += 1
-          toks.add(t0, i - t0); nToks += 1
-        }
-      }
-    }
+    // ---- tokens: the split(trim(text), "\s+") fields, empty ones included
+    val starts = new Array[Int](len / 2 + 2)
+    val ends = new Array[Int](len / 2 + 2)
+    val nToks = TokenWindows.splitFieldBounds(bytes, 0, len, starts, ends)
+    val toks = new SliceCounter(bytes, nToks)
+    var k = 0
+    while (k < nToks) { toks.add(starts(k), ends(k) - starts(k)); k += 1 }
 
     val row = new GenericInternalRow(4)
     row.setLong(0, nSents)
     row.setLong(1, sents.distinct.toLong)
-    row.setLong(2, nToks)
+    row.setLong(2, nToks.toLong)
     row.setLong(3, toks.maxCount.toLong)
     row
   }

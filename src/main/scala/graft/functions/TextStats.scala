@@ -26,15 +26,16 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Field semantics replicate the composable form EXACTLY (the DuckDB
   * oracle rows pin them):
-  *  - `n_tokens` ≡ `size(split(trim(text), "\\s+"))`, including its edge
-  *    cases: spaces-only trim, so an empty/space-only text yields 1 (the
-  *    [""] array), and — because Spark's split uses limit=-1, unlike
-  *    Java's String.split — BOTH a leading and a trailing non-space
-  *    whitespace run leak an empty token.
+  *  - `n_tokens` ≡ `size(split(trim(text), "\\s+"))`: the fields of
+  *    [[TokenWindows.splitFieldBounds]], whose edge cases are Spark's —
+  *    spaces-only trim, so an empty/space-only text yields 1 (the [""]
+  *    array), and — because Spark's split uses limit=-1, unlike Java's
+  *    String.split — BOTH a leading and a trailing non-space whitespace
+  *    run leak an empty field.
   *  - `nonws_chars` ≡ `length(regexp_replace(text, "\\s+", ""))` — code
   *    points that are not Java `\s` (ASCII [ \t\n\x0B\f\r]).
   *  - `stop_hits` ≡ `size(filter(tokens, t => array_contains(stops, t)))`
-  *    — tokens byte-equal to a stopword.
+  *    — non-empty tokens byte-equal to a stopword.
   *  - `punct_cnt` ≡ `regexp_count(text, "[^a-z0-9\\s]")` — code points
   *    outside [a-z0-9] ∪ `\s` (uppercase counts, per the class).
   * Code points are counted as UTF-8 lead bytes; every class byte-test is
@@ -91,45 +92,32 @@ object TextQualityStats {
     while (i < len) {
       val b = bytes(i)
       if ((b & 0xc0) != 0x80) chars += 1
-      if (b == ' ' || (b >= 9 && b <= 13)) ws += 1
+      if (TokenWindows.isWs(b)) ws += 1
       else if (b >= 'a' && b <= 'z') az += 1
       else if (b >= '0' && b <= '9') digit += 1
       i += 1
     }
-    // spaces-only trim bounds (Spark `trim` strips 0x20 only)
-    var st = 0; var en = len
-    while (st < en && bytes(st) == ' ') st += 1
-    while (en > st && bytes(en - 1) == ' ') en -= 1
-    var nTokens = 0L
+    val starts = new Array[Int](len / 2 + 2)
+    val ends = new Array[Int](len / 2 + 2)
+    val nTokens = TokenWindows.splitFieldBounds(bytes, 0, len, starts, ends)
     var stopHits = 0L
-    if (st == en) nTokens = 1L // split("", \s+) = [""]
-    else {
-      // Spark's split uses limit=-1 (unlike Java's String.split): BOTH a
-      // leading and a trailing \s run produce an empty token
-      if (HashedShingles.isWs(bytes(st))) nTokens += 1
-      if (HashedShingles.isWs(bytes(en - 1))) nTokens += 1
-      i = st
-      while (i < en) {
-        while (i < en && HashedShingles.isWs(bytes(i))) i += 1
-        if (i < en) {
-          val t0 = i
-          while (i < en && !HashedShingles.isWs(bytes(i))) i += 1
-          nTokens += 1
-          var k = 0; var matched = false
-          while (k < stops.length && !matched) {
-            val sw = stops(k)
-            if (sw.length == i - t0) {
-              var j = 0
-              while (j < sw.length && sw(j) == bytes(t0 + j)) j += 1
-              matched = j == sw.length
-            }
-            k += 1
-          }
-          if (matched) stopHits += 1
+    var t = 0
+    while (t < nTokens) {
+      val t0 = starts(t); val tl = ends(t) - t0
+      var k = 0; var matched = false
+      while (tl > 0 && k < stops.length && !matched) { // "" never matches
+        val sw = stops(k)
+        if (sw.length == tl) {
+          var j = 0
+          while (j < tl && sw(j) == bytes(t0 + j)) j += 1
+          matched = j == tl
         }
+        k += 1
       }
+      if (matched) stopHits += 1
+      t += 1
     }
     new GenericInternalRow(Array[Any](
-      nTokens, (chars - ws).toLong, stopHits, (chars - ws - az - digit).toLong))
+      nTokens.toLong, (chars - ws).toLong, stopHits, (chars - ws - az - digit).toLong))
   }
 }

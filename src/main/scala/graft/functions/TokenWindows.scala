@@ -311,17 +311,23 @@ object TokenWindows {
   def fieldCountCol(c: Column): Column =
     Bridge.column(WsFieldCount(Bridge.expression(c)))
 
-  // Java \s on the ASCII range: [ \t\n\x0B\f\r] — same class wsTokens'
-  // split("\\s+") matches (tokens are ASCII-whitespace-delimited; \s
-  // without UNICODE_CHARACTER_CLASS matches no code point above 0x0D)
-  private def isWs(b: Byte): Boolean = b == ' ' || (b >= 9 && b <= 13)
+  /** Java `\s` on the ASCII range: [ \t\n\x0B\f\r] — the class wsTokens'
+    * split("\\s+") matches (tokens are ASCII-whitespace-delimited; `\s`
+    * without UNICODE_CHARACTER_CLASS matches no code point above 0x0D).
+    * The one whitespace definition of every byte kernel in this package. */
+  private[functions] def isWs(b: Byte): Boolean = b == ' ' || (b >= 9 && b <= 13)
 
   /** Field boundaries of `split(trim(text), "\\s+")` with Java limit −1
     * semantics over bytes[lo, hi): writes field start offsets into
     * `starts` and end offsets into `ends`, returns the field count.
     * Caller sizes the arrays to a safe upper bound ((hi−lo)/2 + 2).
-    * Shared by every token kernel in this package (incl.
-    * [[TokenPostings]]) so split parity is defined exactly once. */
+    * Fields may be EMPTY (start == end): the [""] of an all-space text
+    * and the leading/trailing field a non-space whitespace run leaks.
+    * This and its allocation-free twin [[fieldCount]] are the only
+    * trim-and-split scans in this package — every token kernel
+    * ([[TokenPostings]], [[TextQualityStats]], [[RepetitionStats]], the
+    * window kernels) reads its fields here, [[TokenCounts]] counts them
+    * there, so split parity is defined exactly once. */
   private[functions] def splitFieldBounds(bytes: Array[Byte], lo0: Int, hi0: Int,
                           starts: Array[Int], ends: Array[Int]): Int = {
     // trim: ASCII space only (Spark `trim` strips 0x20, not tabs)
@@ -352,25 +358,8 @@ object TokenWindows {
     val ends = new Array[Int](len / 2 + 2)
     val t = splitFieldBounds(bytes, 0, len, starts, ends)
     if (t < n) return new GenericArrayData(Array.emptyLongArray)
-    // separator-normalized buffer: fields joined by ONE sep byte, so any
-    // token window is a contiguous range — offs(k) = start of field k,
-    // window [w, w+n) spans [offs(w), offs(w+n) - 1)
     val offs = new Array[Int](t + 1)
-    var normLen = t - 1
-    var k = 0
-    while (k < t) { normLen += ends(k) - starts(k); k += 1 }
-    val norm = new Array[Byte](normLen)
-    var p = 0
-    k = 0
-    while (k < t) {
-      if (k > 0) { norm(p) = sep; p += 1 }
-      offs(k) = p
-      val flen = ends(k) - starts(k)
-      System.arraycopy(bytes, starts(k), norm, p, flen)
-      p += flen
-      k += 1
-    }
-    offs(t) = normLen + 1
+    val norm = normalize(bytes, starts, ends, t, sep, offs)
     val w = t - n + 1
     val out = new Array[Long](w)
     var x = 0
@@ -396,21 +385,7 @@ object TokenWindows {
     val t = splitFieldBounds(bytes, 0, len, starts, ends)
     if (t < n) return new GenericArrayData(Array.empty[Any])
     val offs = new Array[Int](t + 1)
-    var normLen = t - 1
-    var k = 0
-    while (k < t) { normLen += ends(k) - starts(k); k += 1 }
-    val norm = new Array[Byte](normLen)
-    var p = 0
-    k = 0
-    while (k < t) {
-      if (k > 0) { norm(p) = sep; p += 1 }
-      offs(k) = p
-      val flen = ends(k) - starts(k)
-      System.arraycopy(bytes, starts(k), norm, p, flen)
-      p += flen
-      k += 1
-    }
-    offs(t) = normLen + 1
+    val norm = normalize(bytes, starts, ends, t, sep, offs)
     val w = t - n + 1
     val out = new Array[Any](w)
     var x = 0
@@ -474,10 +449,11 @@ object TokenWindows {
     Bridge.column(TokenWindowMd5Buckets(Bridge.expression(c), n, UnitSep,
       skip, take, mod))
 
-  /** Separator-normalized buffer shared by the multi-width kernels:
-    * fields joined by ONE `sep` byte; fills `offs` (offs(k) = start of
-    * field k in the buffer, offs(t) = end + 1) and returns the buffer —
-    * identical construction to [[hashes]]/[[strings]]. */
+  /** The separator-normalized buffer every window kernel reads: fields
+    * joined by ONE `sep` byte, so any token window is a contiguous range.
+    * Fills `offs` (offs(k) = start of field k in the buffer, offs(t) =
+    * end + 1, so window [w, w+n) spans [offs(w), offs(w+n) − 1)) and
+    * returns the buffer. */
   private def normalize(bytes: Array[Byte], starts: Array[Int], ends: Array[Int],
                         t: Int, sep: Byte, offs: Array[Int]): Array[Byte] = {
     var normLen = t - 1
@@ -607,8 +583,11 @@ object TokenWindows {
   }
 
   /** Static helper for [[WsFieldCount]]. */
-  def fieldCount(s: UTF8String): Int = {
-    val bytes = s.getBytes
+  def fieldCount(s: UTF8String): Int = fieldCount(s.getBytes)
+
+  /** Number of fields [[splitFieldBounds]] would write for `bytes`,
+    * without writing them — for kernels that only need the count. */
+  private[functions] def fieldCount(bytes: Array[Byte]): Int = {
     var lo = 0; var hi = bytes.length
     while (lo < hi && bytes(lo) == ' ') lo += 1
     while (hi > lo && bytes(hi - 1) == ' ') hi -= 1

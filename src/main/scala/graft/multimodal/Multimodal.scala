@@ -393,40 +393,88 @@ object Multimodal {
   private val containerBoxes = Set("moov", "trak", "mdia", "minf", "stbl",
     "edts", "udta", "moof", "traf")
 
-  /** Deterministic minimal-but-valid MP4: ftyp + moov(mvhd, n traks with
-    * tkhd) + mdat, every field integer arithmetic in the id. The box
-    * structure is real ISO-BMFF (length-prefixed fourcc boxes, versioned
-    * full boxes), so the walker below exercises the same code path a real
-    * MP4 takes. */
-  def syntheticMp4(id: Long): Array[Byte] = {
-    val bb = new java.io.ByteArrayOutputStream()
-    def u32(v: Long): Unit = {
-      bb.write(((v >> 24) & 0xff).toInt); bb.write(((v >> 16) & 0xff).toInt)
-      bb.write(((v >> 8) & 0xff).toInt); bb.write((v & 0xff).toInt)
+  /** Big-endian unsigned 32-bit field at byte `o`. */
+  private def readU32(b: Array[Byte], o: Int): Long =
+    ((b(o) & 0xffL) << 24) | ((b(o + 1) & 0xffL) << 16) |
+      ((b(o + 2) & 0xffL) << 8) | (b(o + 3) & 0xffL)
+
+  /** The bounds-checked recursive ISO-BMFF box walk both video readers
+    * run: 32-bit sizes, 64-bit `largesize`, size-0 run-to-end boxes,
+    * [[containerBoxes]] walked recursively up to nesting depth 8, and no
+    * trailing bytes at any level. `visit(type, payloadStart, payloadEnd,
+    * depth)` sees every box in file order, before its children. A
+    * malformed container throws IllegalArgumentException (a truncated
+    * payload field IndexOutOfBoundsException). */
+  private def walkBoxes(b: Array[Byte])(visit: (String, Int, Int, Int) => Unit): Unit = {
+    def walk(start: Long, end: Long, depth: Int): Unit = {
+      if (depth > 8) throw new IllegalArgumentException("box nesting > 8")
+      var off = start
+      while (off + 8 <= end) {
+        val size0 = readU32(b, off.toInt)
+        val typ = new String(b, off.toInt + 4, 4, "US-ASCII")
+        val (size, hdr) =
+          if (size0 == 1) { // 64-bit largesize
+            if (off + 16 > end) throw new IllegalArgumentException("truncated largesize")
+            ((readU32(b, off.toInt + 8) << 32) | readU32(b, off.toInt + 12), 16L)
+          } else if (size0 == 0) (end - off, 8L) // runs to end
+          else (size0, 8L)
+        if (size < hdr || off + size > end)
+          throw new IllegalArgumentException(s"bad box size $size at $off")
+        visit(typ, (off + hdr).toInt, (off + size).toInt, depth)
+        if (containerBoxes.contains(typ)) walk(off + hdr, off + size, depth + 1)
+        off += size
+      }
+      if (off != end) throw new IllegalArgumentException("trailing bytes")
     }
-    def fourcc(s: String): Unit = bb.write(s.getBytes("US-ASCII"))
-    // ftyp
-    u32(20); fourcc("ftyp"); fourcc("isom"); u32(0x200); fourcc("isom")
-    // moov
-    val nTracks = (1 + id % 3).toInt
-    val timescale = 1000 + id % 100
-    val duration = 5000 + (id * 7) % 1000
-    u32(8 + 108 + nTracks * 100L); fourcc("moov") // trak box = 8 + 92 tkhd
-    // mvhd v0: version/flags, creation, modification, timescale, duration,
-    // rate, volume+reserved, reserved, matrix, predefined, next_track_id
-    u32(108); fourcc("mvhd"); u32(0); u32(0); u32(0); u32(timescale)
-    u32(duration); u32(0x00010000); u32(0x01000000); u32(0); u32(0)
-    val matrix = Seq(0x00010000L, 0, 0, 0, 0x00010000L, 0, 0, 0, 0x40000000L)
-    matrix.foreach(u32)
-    (0 until 6).foreach(_ => u32(0))
-    u32(nTracks + 1L)
-    // traks, each holding one tkhd v0 (84-byte payload)
-    for (i <- 0 until nTracks) {
-      u32(8 + 92L); fourcc("trak")
-      u32(92); fourcc("tkhd"); u32(0); u32(0); u32(0); u32(i + 1L); u32(0)
+    walk(0L, b.length.toLong, 0)
+  }
+
+  /** The big-endian box writer both synthetic MP4 generators build with. */
+  private final class BoxWriter extends java.io.ByteArrayOutputStream {
+    def u32(v: Long): Unit = {
+      write(((v >> 24) & 0xff).toInt); write(((v >> 16) & 0xff).toInt)
+      write(((v >> 8) & 0xff).toInt); write((v & 0xff).toInt)
+    }
+    def fourcc(s: String): Unit = write(s.getBytes("US-ASCII"))
+    private val matrix = Seq(0x00010000L, 0, 0, 0, 0x00010000L, 0, 0, 0, 0x40000000L)
+    def ftyp(): Unit = {
+      u32(20); fourcc("ftyp"); fourcc("isom"); u32(0x200); fourcc("isom")
+    }
+    /** mvhd v0 (108 bytes): version/flags, creation, modification,
+      * timescale, duration, rate, volume+reserved, reserved, matrix,
+      * predefined, next_track_id. */
+    def mvhd(timescale: Long, duration: Long, nextTrackId: Long): Unit = {
+      u32(108); fourcc("mvhd"); u32(0); u32(0); u32(0); u32(timescale)
+      u32(duration); u32(0x00010000); u32(0x01000000); u32(0); u32(0)
+      matrix.foreach(u32)
+      (0 until 6).foreach(_ => u32(0))
+      u32(nextTrackId)
+    }
+    /** tkhd v0 (92 bytes, 84-byte payload). */
+    def tkhd(trackId: Long, duration: Long): Unit = {
+      u32(92); fourcc("tkhd"); u32(0); u32(0); u32(0); u32(trackId); u32(0)
       u32(duration); u32(0); u32(0); u32(0); u32(0)
       matrix.foreach(u32)
       u32(0); u32(0)
+    }
+  }
+
+  /** Deterministic minimal-but-valid MP4: ftyp + moov(mvhd, n traks with
+    * tkhd) + mdat, every field integer arithmetic in the id. The box
+    * structure is real ISO-BMFF (length-prefixed fourcc boxes, versioned
+    * full boxes), so [[walkBoxes]] exercises the same code path a real
+    * MP4 takes. */
+  def syntheticMp4(id: Long): Array[Byte] = {
+    val bb = new BoxWriter
+    import bb.{fourcc, u32}
+    bb.ftyp()
+    val nTracks = (1 + id % 3).toInt
+    val duration = 5000 + (id * 7) % 1000
+    u32(8 + 108 + nTracks * 100L); fourcc("moov") // trak box = 8 + 92 tkhd
+    bb.mvhd(1000 + id % 100, duration, nTracks + 1L)
+    for (i <- 0 until nTracks) {
+      u32(8 + 92L); fourcc("trak")
+      bb.tkhd(i + 1L, duration)
     }
     // mdat
     val n = (100 + id % 50).toInt
@@ -443,10 +491,9 @@ object Multimodal {
     }
   }
 
-  /** REAL container demux: a bounds-checked recursive ISO-BMFF box walk
-    * (handles 32-bit sizes, 64-bit `largesize`, and size-0 run-to-end
-    * boxes) collecting box count, track count, movie-header
-    * timescale/duration, and mdat payload size. This is the demux level a
+  /** REAL container demux: the [[walkBoxes]] ISO-BMFF walk collecting
+    * box count, track count, movie-header timescale/duration, and mdat
+    * payload size. This is the demux level a
     * JVM can do honestly without a codec — frame DECODE stays behind
     * [[decodeStub]], and at scale this metadata pass is what prunes
     * payloads before any expensive decode stage. Malformed payloads
@@ -461,45 +508,23 @@ object Multimodal {
           var nBoxes = 0; var nTracks = 0
           var timescale = 0L; var duration = 0L; var mdat = 0L
           val top = scala.collection.mutable.ArrayBuffer.empty[String]
-          def u32(o: Int): Long =
-            ((b(o) & 0xffL) << 24) | ((b(o + 1) & 0xffL) << 16) |
-              ((b(o + 2) & 0xffL) << 8) | (b(o + 3) & 0xffL)
-          def walk(start: Long, end: Long, depth: Int): Unit = {
-            if (depth > 8) throw new IllegalArgumentException("box nesting > 8")
-            var off = start
-            while (off + 8 <= end) {
-              val size0 = u32(off.toInt)
-              val typ = new String(b, off.toInt + 4, 4, "US-ASCII")
-              val (size, hdr) =
-                if (size0 == 1) { // 64-bit largesize
-                  if (off + 16 > end) throw new IllegalArgumentException("truncated largesize")
-                  ((u32(off.toInt + 8) << 32) | u32(off.toInt + 12), 16L)
-                } else if (size0 == 0) (end - off, 8L) // runs to end
-                else (size0, 8L)
-              if (size < hdr || off + size > end)
-                throw new IllegalArgumentException(s"bad box size $size at $off")
-              nBoxes += 1
-              if (depth == 0) top += typ
-              typ match {
-                case "trak" => nTracks += 1
-                case "mvhd" =>
-                  val p = off.toInt + hdr.toInt
-                  val version = b(p) & 0xff
-                  if (version == 0) {
-                    timescale = u32(p + 12); duration = u32(p + 16)
-                  } else { // v1: 64-bit creation/modification times
-                    timescale = u32(p + 20)
-                    duration = (u32(p + 24) << 32) | u32(p + 28)
-                  }
-                case "mdat" => mdat += size - hdr
-                case _ => ()
-              }
-              if (containerBoxes.contains(typ)) walk(off + hdr, off + size, depth + 1)
-              off += size
+          walkBoxes(b) { (typ, p, e, depth) =>
+            nBoxes += 1
+            if (depth == 0) top += typ
+            typ match {
+              case "trak" => nTracks += 1
+              case "mvhd" =>
+                val version = b(p) & 0xff
+                if (version == 0) {
+                  timescale = readU32(b, p + 12); duration = readU32(b, p + 16)
+                } else { // v1: 64-bit creation/modification times
+                  timescale = readU32(b, p + 20)
+                  duration = (readU32(b, p + 24) << 32) | readU32(b, p + 28)
+                }
+              case "mdat" => mdat += e - p
+              case _ => ()
             }
-            if (off != end) throw new IllegalArgumentException("trailing bytes")
           }
-          walk(0L, b.length.toLong, 0)
           DemuxedVideo(d.doc_id, nBoxes, nTracks, timescale, duration,
             mdat, top.mkString(","))
         } catch {
@@ -533,12 +558,8 @@ object Multimodal {
     val n = (2 + id % 4).toInt
     val frames = Array.tabulate(n)(f =>
       encodeImage(syntheticPixelImage(id * 1000 + f), codec))
-    val bb = new java.io.ByteArrayOutputStream()
-    def u32(v: Long): Unit = {
-      bb.write(((v >> 24) & 0xff).toInt); bb.write(((v >> 16) & 0xff).toInt)
-      bb.write(((v >> 8) & 0xff).toInt); bb.write((v & 0xff).toInt)
-    }
-    def fourcc(s: String): Unit = bb.write(s.getBytes("US-ASCII"))
+    val bb = new BoxWriter
+    import bb.{fourcc, u32}
     val stszSize = 20L + 4 * n
     val stcoSize = 20L
     val stblSize = 8L + stszSize + stcoSize
@@ -548,19 +569,11 @@ object Multimodal {
     val moovSize = 8L + 108 + trakSize
     // mdat payload = ftyp + moov + mdat header
     val chunkOffset = 20L + moovSize + 8L
-    u32(20); fourcc("ftyp"); fourcc("isom"); u32(0x200); fourcc("isom")
+    bb.ftyp()
     u32(moovSize); fourcc("moov")
-    u32(108); fourcc("mvhd"); u32(0); u32(0); u32(0); u32(1000)
-    u32(n.toLong); u32(0x00010000); u32(0x01000000); u32(0); u32(0)
-    val matrix = Seq(0x00010000L, 0, 0, 0, 0x00010000L, 0, 0, 0, 0x40000000L)
-    matrix.foreach(u32)
-    (0 until 6).foreach(_ => u32(0))
-    u32(2L)
+    bb.mvhd(1000, n.toLong, 2L)
     u32(trakSize); fourcc("trak")
-    u32(92); fourcc("tkhd"); u32(0); u32(0); u32(0); u32(1L); u32(0)
-    u32(n.toLong); u32(0); u32(0); u32(0); u32(0)
-    matrix.foreach(u32)
-    u32(0); u32(0)
+    bb.tkhd(1L, n.toLong)
     u32(mdiaSize); fourcc("mdia")
     u32(minfSize); fourcc("minf")
     u32(stblSize); fourcc("stbl")
@@ -585,8 +598,10 @@ object Multimodal {
   }
 
   /** REAL video frame decode for intra-coded (MJPEG / M-PNG) tracks: the
-    * bounds-checked box walk locates the sample table, `stsz` gives each
-    * sample's byte size, `stco` gives the chunk's file offset, each
+    * [[walkBoxes]] ISO-BMFF walk locates the sample table, `stsz` gives
+    * each sample's byte size (a sample count the payload cannot hold is
+    * a malformed container, never an allocation), `stco` gives the
+    * chunk's file offset, each
     * sample slice decodes through `ImageIO` — the same real decoder
     * [[decodeImages]] uses — into per-frame dims and channel sums. This
     * retires the stub for every codec the JVM can actually decode;
@@ -604,46 +619,25 @@ object Multimodal {
           var sizes: Array[Int] = null
           var chunkOff = -1L
           var mdatStart = -1L; var mdatEnd = -1L
-          def u32(o: Int): Long =
-            ((b(o) & 0xffL) << 24) | ((b(o + 1) & 0xffL) << 16) |
-              ((b(o + 2) & 0xffL) << 8) | (b(o + 3) & 0xffL)
-          def walk(start: Long, end: Long, depth: Int): Unit = {
-            if (depth > 8) throw new IllegalArgumentException("box nesting > 8")
-            var off = start
-            while (off + 8 <= end) {
-              val size0 = u32(off.toInt)
-              val typ = new String(b, off.toInt + 4, 4, "US-ASCII")
-              val (size, hdr) =
-                if (size0 == 1) {
-                  if (off + 16 > end) throw new IllegalArgumentException("truncated largesize")
-                  ((u32(off.toInt + 8) << 32) | u32(off.toInt + 12), 16L)
-                } else if (size0 == 0) (end - off, 8L)
-                else (size0, 8L)
-              if (size < hdr || off + size > end)
-                throw new IllegalArgumentException(s"bad box size $size at $off")
-              typ match {
-                case "stsz" =>
-                  val p = off.toInt + hdr.toInt
-                  val fixed = u32(p + 4)
-                  val cnt = u32(p + 8)
-                  if (cnt > (size - hdr - 12) / 4 && fixed == 0)
-                    throw new IllegalArgumentException("stsz count exceeds box")
-                  sizes =
-                    if (fixed != 0) Array.fill(cnt.toInt)(fixed.toInt)
-                    else Array.tabulate(cnt.toInt)(i => u32(p + 12 + 4 * i).toInt)
-                case "stco" =>
-                  val p = off.toInt + hdr.toInt
-                  if (u32(p + 4) >= 1) chunkOff = u32(p + 8)
-                case "mdat" =>
-                  mdatStart = off + hdr; mdatEnd = off + size
-                case _ => ()
-              }
-              if (containerBoxes.contains(typ)) walk(off + hdr, off + size, depth + 1)
-              off += size
+          walkBoxes(b) { (typ, p, e, _) =>
+            typ match {
+              case "stsz" =>
+                val fixed = readU32(b, p + 4)
+                val cnt = readU32(b, p + 8)
+                // every sample needs its table entry, or `fixed` bytes of
+                // payload: a count the container cannot hold is corrupt
+                if (cnt > (if (fixed == 0) (e - p - 12) / 4 else b.length / fixed))
+                  throw new IllegalArgumentException("stsz count exceeds payload")
+                sizes =
+                  if (fixed != 0) Array.fill(cnt.toInt)(fixed.toInt)
+                  else Array.tabulate(cnt.toInt)(i => readU32(b, p + 12 + 4 * i).toInt)
+              case "stco" =>
+                if (readU32(b, p + 4) >= 1) chunkOff = readU32(b, p + 8)
+              case "mdat" =>
+                mdatStart = p; mdatEnd = e
+              case _ => ()
             }
-            if (off != end) throw new IllegalArgumentException("trailing bytes")
           }
-          walk(0L, b.length.toLong, 0)
           if (sizes == null || chunkOff < 0 || mdatStart < 0)
             throw new IllegalArgumentException("no sample table")
           var off = chunkOff

@@ -160,24 +160,17 @@ object PostingsIndex {
                  queries: Seq[(Long, Seq[String])], k1: Double = 1.2,
                  b: Double = 0.75, topK: Int = 10): DataFrame = {
     import spark.implicits._
-    import org.apache.spark.sql.types.DecimalType
     val terms = queries.flatMap(_._2).distinct
     val tf = prunedPostings(spark, indexDir, terms)
       .select(col("doc_id"), col("dl"), col("term"), col("tf"))
     val df = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
-    val w = tf.join(broadcast(df), "term")
-      .crossJoin(broadcast(corpusStats(spark, indexDir)))
-      .withColumn("idf", round(log(lit(1.0) +
-        (col("n_docs") - col("df") + lit(0.5)) / (col("df") + lit(0.5))), 6))
-      .withColumn("w", col("idf") * (col("tf") * lit(k1 + 1.0)) /
-        (col("tf") + lit(k1) * (lit(1.0 - b) + lit(b) * col("dl") / col("avgdl"))))
+    val w = Retrieval.weights(tf, df, corpusStats(spark, indexDir), k1, b)
       .select(col("doc_id"), col("term"), col("w"))
     val qt = queries.flatMap { case (q, ts) => ts.map(q -> _) }
       .toDF("q_id", "term")
     w.join(broadcast(qt), "term")
       .groupBy(col("q_id"), col("doc_id"))
-      .agg(round(sum(round(col("w"), 6).cast(DecimalType(18, 6))).cast("double"), 6)
-        .as("score"))
+      .agg(Retrieval.score.as("score"))
       .select(col("q_id"), col("score"), col("doc_id"))
       .as[(Long, Double, Long)]
       .groupByKey(_._1)

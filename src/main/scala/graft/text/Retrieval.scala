@@ -1,6 +1,6 @@
 package graft.text
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -52,23 +52,34 @@ object Retrieval {
     scoreTopK(tf, df, stats, k1, b, topK)
   }
 
-  /** The BM25 scoring tail shared by the scan path above and the
-    * [[PostingsIndex]] query path: `tf` rows are (doc_id, dl, term, tf),
-    * `df` is (term, df), `stats` one row (n_docs, avgdl). Both producers
-    * feed EXACTLY the same arithmetic, so the indexed and scan answers
-    * are bit-identical and share one oracle. */
-  private[text] def scoreTopK(tf: DataFrame, df: DataFrame, stats: DataFrame,
-                              k1: Double, b: Double, topK: Int): DataFrame =
+  /** Per-(doc, term) BM25 weight `w` (with its `idf`) over `tf` rows
+    * (doc_id, dl, term, tf), `df` (term, df) and the one-row `stats`
+    * (n_docs, avgdl) — the arithmetic every BM25 answer reads, from the
+    * scan path above and from both [[PostingsIndex]] query paths. */
+  private[text] def weights(tf: DataFrame, df: DataFrame, stats: DataFrame,
+                            k1: Double, b: Double): DataFrame =
     tf.join(broadcast(df), "term")
       .crossJoin(broadcast(stats))
       .withColumn("idf", round(log(lit(1.0) +
         (col("n_docs") - col("df") + lit(0.5)) / (col("df") + lit(0.5))), 6))
       .withColumn("w", col("idf") * (col("tf") * lit(k1 + 1.0)) /
         (col("tf") + lit(k1) * (lit(1.0 - b) + lit(b) * col("dl") / col("avgdl"))))
+
+  /** A document's score: its weights rounded to 6 places and summed as
+    * DECIMAL(18,6), so the sum is order-independent and engine-exact. */
+  private[text] def score: Column =
+    round(sum(round(col("w"), 6).cast(DecimalType(18, 6))).cast("double"), 6)
+
+  /** The BM25 scoring tail shared by the scan path above and the
+    * [[PostingsIndex]] query path: `tf` rows are (doc_id, dl, term, tf),
+    * `df` is (term, df), `stats` one row (n_docs, avgdl). Both producers
+    * feed EXACTLY the same [[weights]], so the indexed and scan answers
+    * are bit-identical and share one oracle. */
+  private[text] def scoreTopK(tf: DataFrame, df: DataFrame, stats: DataFrame,
+                              k1: Double, b: Double, topK: Int): DataFrame =
+    weights(tf, df, stats, k1, b)
       .groupBy(col("doc_id"))
-      .agg(round(sum(round(col("w"), 6).cast(DecimalType(18, 6))).cast("double"), 6)
-          .as("score"),
-        count(lit(1)).as("n_terms"))
+      .agg(score.as("score"), count(lit(1)).as("n_terms"))
       .orderBy(col("score").desc, col("doc_id"))
       .limit(topK)
 }

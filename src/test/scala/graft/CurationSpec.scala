@@ -406,7 +406,7 @@ class CurationSpec extends SparkSuite {
         if (rand.nextInt(8) == 0) "\t" else words(rand.nextInt(words.length)))
         .mkString(" ")
     }
-    val df = (edge ++ fuzz).zipWithIndex
+    val df = (edge ++ fuzz ++ WsMix.corpus(43L)).zipWithIndex
       .map { case (t, i) => (i.toLong, t) }.toDF("id", "text")
     val stopsArr = array(stops.map(lit): _*)
     val toks = split(trim(col("text")), "\\s+")
@@ -460,7 +460,7 @@ class CurationSpec extends SparkSuite {
     val fuzz = (0 until 300).map { _ =>
       (0 until rand.nextInt(50)).map(_ => alpha(rand.nextInt(alpha.length))).mkString
     }
-    val df = (edge ++ fuzz).zipWithIndex
+    val df = (edge ++ fuzz ++ WsMix.corpus(47L)).zipWithIndex
       .map { case (t, i) => (i.toLong, t) }.toDF("id", "text")
     val got = df.select(col("id"), col("text"),
         graft.functions.TokenCounts(col("text")).as("tc"),
@@ -491,7 +491,7 @@ class CurationSpec extends SparkSuite {
         if (rand.nextInt(7) == 0) ". " else words(rand.nextInt(words.length)) + " ")
         .mkString.dropRight(rand.nextInt(2))
     }
-    val df = (edge ++ fuzz).zipWithIndex
+    val df = (edge ++ fuzz ++ WsMix.corpus(53L)).zipWithIndex
       .map { case (t, i) => (i.toLong, t) }.toDF("id", "text")
     val sents = split(col("text"), "\\. ")
     val toks = wsTokens(col("text"))

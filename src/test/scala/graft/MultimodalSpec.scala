@@ -214,6 +214,18 @@ class MultimodalSpec extends SparkSuite {
     assert(out.size === nf)
     assert(out(0).width === -1)
     assert((1 until nf).forall(out(_).width > 0))
+    // an stsz claiming 0x7FFFFFF0 one-byte samples: a count the payload
+    // cannot hold is a malformed container, not a heap-sized allocation
+    val huge = good.clone()
+    val stsz = huge.indices.find(i =>
+      i + 4 <= huge.length && new String(huge, i, 4, "US-ASCII") == "stsz").get + 4
+    def put32(o: Int, v: Int): Unit =
+      (0 until 4).foreach(k => huge(o + k) = (v >>> (24 - 8 * k)).toByte)
+    put32(stsz + 4, 1) // sample_size
+    put32(stsz + 8, 0x7FFFFFF0) // sample_count
+    val h = Multimodal.decodeVideoFrames(spark,
+      Seq(Multimodal.VideoDoc(4L, huge)).toDS()).collect()
+    assert(h.length === 1 && h.head.frame_idx === -1)
     // seeded fuzz: random-byte payloads never fail the task
     val rnd = new scala.util.Random(7)
     val fuzz = (0 until 100).map { i =>

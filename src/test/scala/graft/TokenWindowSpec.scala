@@ -74,7 +74,7 @@ class TokenWindowSpec extends SparkSuite {
   }
 
   test("ws_field_count ≡ size(wsTokens) including empty-token edge cases") {
-    val df = edgeCases.zipWithIndex.map { case (t, i) => (i.toLong, t) }
+    val df = (edgeCases ++ WsMix.corpus(41L)).zipWithIndex.map { case (t, i) => (i.toLong, t) }
       .toDF("id", "text")
     val bad = df.select(
         TokenWindows.fieldCountCol(col("text")).as("native"),

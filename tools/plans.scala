@@ -1,13 +1,43 @@
-// Dump formatted physical plans for headline queries into PLANS.md.
-// Run: /opt/spark/bin/spark-shell --driver-class-path target/scala-2.13/classes \
-//        --conf spark.sql.legacy.parquet.nanosAsLong=true \
-//        -I tools/dump_plans.scala  (after sbt compile)
+// The plan tool: plans SparkEntry queries once each, writes their
+// formatted physical plans, and prints the plan anti-pattern AUDIT line
+// of every query it planned.
+//
+//  - Default: the headline queries in `notes` below go to PLANS.md, each
+//    section stating the property its plan is designed around (PlanSpec
+//    pins the load-bearing ones in CI).
+//  - PLAN_QUERIES=q1,q2 (or `all` for every SparkEntry query): one
+//    <PLAN_OUT>/<query>_<PLAN_LABEL>.txt per query instead — the
+//    before/after plan pairs optimization rounds commit (PLAN_LABEL
+//    defaults to "after", PLAN_OUT to plans/r19; for a "before" pair run
+//    it from a checkout of the earlier commit with its own classes).
+//  - AUDIT columns count cartesian products, nested-loop joins,
+//    sort-merge joins, range/hash exchanges and window operators in the
+//    executed plan, so a scale regression (a lost broadcast, an
+//    accidental cross join, a window sort in a hot path) is one grep
+//    away; a query that fails to plan prints -1s. The last line says
+//    whether any cartesian product was found.
+//  - PLAN_SF picks the data (default: the sf0.001 set of TESTDATA.md);
+//    plan shape is scale-independent, AQE may re-plan exchanges at runtime.
+// Queries with side-effect pipelines (index ingests, streams) RUN them
+// while building the returned frame; the captured plan is the final
+// consumer plan.
+//
+// Run after `sbt compile`:
+//   $SPARK_HOME/bin/spark-shell --driver-class-path target/scala-2.13/classes \
+//     --driver-java-options -Dfile.encoding=UTF-8 \
+//     --conf spark.sql.legacy.parquet.nanosAsLong=true \
+//     --conf spark.sql.session.timeZone=UTC \
+//     --conf spark.sql.shuffle.partitions=8 --master 'local[8]' \
+//     -I tools/plans.scala
 // The nanosAsLong conf mirrors Tables.configure — events.parquet stores
 // TIMESTAMP(NANOS), which stock Spark rejects at scan time without it.
+// The REPL reads this file in the JVM's default charset: without
+// file.encoding=UTF-8 a POSIX locale turns every non-ASCII character of
+// the notes into U+FFFD in PLANS.md.
 import java.io.PrintWriter
+import org.apache.spark.sql.execution.FormattedMode
 import graft._
 
-val dir = "/root/testdata/sf0.001"
 val notes: Seq[(String, String)] = Seq(
   "o1_keyset_page" -> "Cursor filter pushed into the parquet scan; TakeOrderedAndProject keeps a size-n heap per task — a page costs O(scan+n), no global sort ever.",
   "w1_ordered_claim" -> "The claim queue's priority order is a global top-k (per-task heaps merged at the driver), not a sort shuffle.",
@@ -107,24 +137,67 @@ val notes: Seq[(String, String)] = Seq(
   "a14_project_status" -> "Per-project status: the reference's per-dataset Python loop collapses into ONE plan - records side is a membership semi-join + hash aggregate; datasets side semi-joins the item table against the broadcast member-dataset ids, joins records, and aggregates. Two data-sized shuffles total (one per section), both map-side combinable, regardless of how many datasets the project owns."
 )
 
-val pw = new PrintWriter("PLANS.md", "UTF-8")
-pw.println("# PLANS — physical plans of headline queries")
-pw.println()
-pw.println("Generated by `tools/dump_plans.scala` at sf0.001 (plan shape is scale-")
-pw.println("independent; AQE may re-plan exchanges at runtime). Each section states")
-pw.println("the property the plan is designed around; `PlanSpec` pins the load-")
-pw.println("bearing ones in CI.")
-for ((name, note) <- notes) {
-  val df = SparkEntry.queries(name)(spark, dir)
-  pw.println()
-  pw.println(s"## $name")
-  pw.println()
-  pw.println(note)
-  pw.println()
-  pw.println("```")
-  pw.println(df.queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode).trim)
-  pw.println("```")
+
+val requested = sys.env.getOrElse("PLAN_QUERIES", "").split(",").map(_.trim).filter(_.nonEmpty).toSeq
+val names = requested match {
+  case Seq() => notes.map(_._1)
+  case Seq("all") => SparkEntry.queries.keys.toSeq.sorted
+  case qs => qs
 }
-pw.close()
-println("WROTE PLANS.md")
+val label = sys.env.getOrElse("PLAN_LABEL", "after")
+val out = sys.env.getOrElse("PLAN_OUT", "plans/r19")
+val dir = sys.env.getOrElse("PLAN_SF", "/root/testdata/sf0.001")
+
+// name -> (formatted plan, executed-plan tree) or the failure
+val planned: Seq[(String, Either[Throwable, (String, String)])] = names.map { name =>
+  name -> (try {
+    val qe = SparkEntry.queries(name)(spark, dir).queryExecution
+    Right((qe.explainString(FormattedMode), qe.executedPlan.toString))
+  } catch { case e: Throwable => Left(e) })
+}
+
+if (requested.isEmpty) {
+  val pw = new PrintWriter("PLANS.md", "UTF-8")
+  pw.println("# PLANS — physical plans of headline queries")
+  pw.println()
+  pw.println("Generated by `tools/plans.scala` at sf0.001 (plan shape is scale-")
+  pw.println("independent; AQE may re-plan exchanges at runtime). Each section states")
+  pw.println("the property the plan is designed around; `PlanSpec` pins the load-")
+  pw.println("bearing ones in CI.")
+  for (((name, note), (_, plan)) <- notes.zip(planned); (txt, _) <- plan.toOption) {
+    pw.println()
+    pw.println(s"## $name")
+    pw.println()
+    pw.println(note)
+    pw.println()
+    pw.println("```")
+    pw.println(txt.trim)
+    pw.println("```")
+  }
+  pw.close()
+  println("WROTE PLANS.md")
+} else {
+  new java.io.File(out).mkdirs()
+  for ((name, plan) <- planned; (txt, _) <- plan.toOption) {
+    val pw = new PrintWriter(s"$out/${name}_$label.txt")
+    pw.println(s"== $name ($label, ${dir.split('/').last}) ==")
+    pw.print(txt)
+    pw.close()
+    println(s"PLANDUMP OK $name -> $out/${name}_$label.txt")
+  }
+}
+planned.collect { case (name, Left(e)) => println(s"PLANDUMP FAIL $name: ${e.getMessage}") }
+
+val rows = planned.sortBy(_._1).map {
+  case (name, Right((_, p))) =>
+    def c(n: String) = p.sliding(n.length).count(_ == n)
+    (name, c("CartesianProduct"), c("BroadcastNestedLoopJoin"), c("SortMergeJoin"),
+     c("Exchange rangepartitioning"), c("Exchange hashpartitioning"), c("Window"))
+  case (name, Left(_)) => (name, -1, -1, -1, -1, -1, -1)
+}
+println("AUDIT name cartesian bnlj smj range hash window")
+rows.foreach { case (n, a, b, s, r, h, w) => println(f"AUDIT $n%-24s $a $b $s $r $h $w") }
+val cart = rows.filter(_._2 > 0)
+println(if (cart.isEmpty) "AUDIT OK: no cartesian products"
+        else s"AUDIT FAIL: cartesian in ${cart.map(_._1).mkString(",")}")
 sys.exit(0)
