@@ -75,17 +75,7 @@ object MinHashBands {
   def apply(c: Column, k: Int, bands: Int): Column =
     Bridge.column(MinHashBands(Bridge.expression(c), k, bands))
 
-  private final val FNV_OFFSET = 0xcbf29ce484222325L
-  private final val FNV_PRIME = 0x100000001b3L
-  private final val GOLDEN = 0x9e3779b97f4a7c15L
-
-  private def fmix64(x0: Long): Long = {
-    var x = x0
-    x ^= x >>> 33; x *= 0xff51afd7ed558ccdL
-    x ^= x >>> 33; x *= 0xc4ceb9fe1a85ec53L
-    x ^= x >>> 33
-    x
-  }
+  import KernelMath.{FNV_OFFSET, FNV_PRIME, GOLDEN, fmix64}
 
   /** Static helper invoked from both interpreted eval and generated code. */
   def compute(arr: ArrayData, k: Int, bands: Int, isString: Boolean): ArrayData = {

@@ -2,8 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -35,21 +34,8 @@ import org.apache.spark.sql.types._
   */
 case class NearestCellExpr(child: Expression, centroids: Array[Double],
                            k: Int, d: Int)
-    extends UnaryExpression {
+    extends FloatOrDoubleArrayInput {
   require(centroids.length == k * d, "flat centroid table length mismatch")
-
-  private lazy val childIsFloat: Boolean = child.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _ => false
-  }
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType, _) | ArrayType(DoubleType, _) =>
-      TypeCheckResult.TypeCheckSuccess
-    case other =>
-      TypeCheckResult.TypeCheckFailure(
-        s"nearest_cell needs array<float|double>, got $other")
-  }
 
   override def dataType: DataType = StructType(Seq(
     StructField("cell", IntegerType, nullable = false),
@@ -83,24 +69,7 @@ object NearestCellExpr {
     Bridge.column(NearestCellExpr(Bridge.expression(c), flat, k, d))
   }
 
-  /** Catalyst round(x, 9) — see [[PqKernels]]. */
-  private def round9(x: Double): Double =
-    java.math.BigDecimal.valueOf(x)
-      .setScale(9, java.math.RoundingMode.HALF_UP).doubleValue()
-
-  /** round9(x) can undershoot x by at most half an ulp of 1e-9 (HALF_UP)
-    * plus the decimal-representation slop of BigDecimal.valueOf, which is
-    * bounded by the BINARY ulp of x — NOT an absolute constant, so the
-    * slack must scale with the magnitude of the best distance (at
-    * acc ≳ 4e7 the ulp alone exceeds 1e-8). The prune cut is therefore
-    * bestD + RoundSlack + 2·ulp(bestD): the fixed 1e-8 covers the decimal
-    * rounding step with 20x margin and the ulp term covers valueOf's
-    * representation slop at any magnitude. */
-  private final val RoundSlack = 1e-8
-
-  /** Magnitude-aware prune cut (see [[RoundSlack]]). */
-  private def pruneCut(bestD: Double): Double =
-    bestD + RoundSlack + 2.0 * Math.ulp(bestD)
+  import KernelMath.{pruneCut, round9}
 
   /** Static helper invoked from both interpreted eval and generated
     * code. Left-to-right accumulation per centroid, argmin on the
@@ -112,8 +81,8 @@ object NearestCellExpr {
     *  - partial-distance break: squares only add, so once the partial
     *    sum exceeds bestD + slack the centroid cannot win;
     *  - round-only-contenders: round9 is monotone and undershoots by
-    *    < slack, so a full distance above bestD + slack cannot round
-    *    below bestD. Both leave the chosen cell and the emitted rounded
+    *    < slack ([[KernelMath.pruneCut]]), so a full distance above
+    *    bestD + slack cannot round below bestD. Both leave the chosen cell and the emitted rounded
     *    d2 BIT-IDENTICAL to the unpruned scan (HOF parity pinned in
     *    CodegenSpec; the Lloyd-replay oracles hash-pin it end to end). */
   def compute(arr: ArrayData, cent: Array[Double], k: Int, d: Int,

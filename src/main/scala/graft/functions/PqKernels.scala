@@ -2,11 +2,11 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftshim.Bridge
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, IntegerType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
 
 /** Native product-quantization kernels (SURVEY §2.10: custom
   * `Expression` over UDF) — the two hot loops of the PQ pipeline,
@@ -30,7 +30,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, I
   * reproduced bit-for-bit and the DuckDB oracles stay hash-exact. */
 case class PqEncodeExpr(child: Expression, codebook: Array[Double],
                         m: Int, ks: Int, d: Int)
-    extends UnaryExpression {
+    extends FloatOrDoubleArrayInput {
   require(codebook.length == m * ks * d, "flat codebook length mismatch")
 
   // content-based equality (the Array field otherwise makes equality
@@ -43,18 +43,6 @@ case class PqEncodeExpr(child: Expression, codebook: Array[Double],
   override def hashCode(): Int =
     java.util.Objects.hash(child, Integer.valueOf(m), Integer.valueOf(ks),
       Integer.valueOf(d), Integer.valueOf(java.util.Arrays.hashCode(codebook)))
-
-  private lazy val childIsFloat: Boolean = child.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _ => false
-  }
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType, _) | ArrayType(DoubleType, _) =>
-      TypeCheckResult.TypeCheckSuccess
-    case other =>
-      TypeCheckResult.TypeCheckFailure(s"pq_encode needs array<float|double>, got $other")
-  }
 
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
   override def nullIntolerant: Boolean = true
@@ -117,29 +105,13 @@ object PqKernels {
   def adcCol(codes: Column, dtab: Column): Column =
     Bridge.column(PqAdcExpr(Bridge.expression(codes), Bridge.expression(dtab)))
 
-  /** Catalyst round(x, 9): BigDecimal half-up on the shortest decimal
-    * representation — the exact arithmetic of the HOF reference form
-    * and of the DuckDB oracle. */
-  private def round9(x: Double): Double =
-    java.math.BigDecimal.valueOf(x)
-      .setScale(9, java.math.RoundingMode.HALF_UP).doubleValue()
-
-  /** round9 can undershoot its argument by at most half an ulp of 1e-9
-    * (HALF_UP) plus BigDecimal.valueOf's shortest-decimal slop, which is
-    * bounded by the BINARY ulp of the argument — magnitude-dependent, so
-    * the prune cut adds 2·ulp(bestD) on top of this fixed budget (same
-    * analysis as [[graft.functions.NearestCellExpr]]'s prune). */
-  private final val RoundSlack = 1e-8
-
-  /** Magnitude-aware prune cut (see [[RoundSlack]]). */
-  private def pruneCut(bestD: Double): Double =
-    bestD + RoundSlack + 2.0 * Math.ulp(bestD)
+  import KernelMath.{pruneCut, round9}
 
   /** Static helper invoked from both interpreted eval and generated
     * code. Left-to-right accumulation per (sub-space, codeword), argmin
     * on the ROUNDED distance with strict < (ties keep the lowest code —
     * array_position-on-first-minimum semantics). Candidates whose raw
-    * distance exceeds best + RoundSlack cannot round below the best, so
+    * distance exceeds [[KernelMath.pruneCut]] cannot round below the best, so
     * only contenders pay the BigDecimal round — m·ks rounds per row
     * (512 at the shipped m=16, ks=32) collapse to ~m·log(ks). Chosen
     * codes and emitted values are bit-identical to the unpruned scan

@@ -66,16 +66,7 @@ object HashedShingles {
   def apply(c: Column, n: Int): Column =
     Bridge.column(HashedShingles(Bridge.expression(c), n))
 
-  private final val FNV_OFFSET = 0xcbf29ce484222325L
-  private final val FNV_PRIME = 0x100000001b3L
-
-  private def fmix64(x0: Long): Long = {
-    var x = x0
-    x ^= x >>> 33; x *= 0xff51afd7ed558ccdL
-    x ^= x >>> 33; x *= 0xc4ceb9fe1a85ec53L
-    x ^= x >>> 33
-    x
-  }
+  import KernelMath.{FNV_OFFSET, FNV_PRIME, fmix64}
 
   import TokenWindows.isWs
 

@@ -39,8 +39,7 @@ object SimHash64 {
   def apply(c: Column): Column =
     Bridge.column(SimHash64(Bridge.expression(c)))
 
-  private final val FNV_OFFSET = 0xcbf29ce484222325L
-  private final val FNV_PRIME = 0x100000001b3L
+  import KernelMath.{FNV_OFFSET, FNV_PRIME, fmix64}
 
   import TokenWindows.isWs
 
@@ -60,10 +59,8 @@ object SimHash64 {
           h *= FNV_PRIME
           i += 1
         }
-        // avalanche (fmix64) so low bits are well distributed
-        h ^= h >>> 33; h *= 0xff51afd7ed558ccdL
-        h ^= h >>> 33; h *= 0xc4ceb9fe1a85ec53L
-        h ^= h >>> 33
+        // avalanche so low bits are well distributed
+        h = fmix64(h)
         var b = 0
         while (b < 64) {
           if (((h >>> b) & 1L) == 1L) counters(b) += 1 else counters(b) -= 1

@@ -2,11 +2,11 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftshim.Bridge
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, IntegerType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
 
 /** Native scalar-quantization kernels — the two hot loops of the SQ8
   * pipeline (SURVEY §2.10: custom `Expression` over UDF), bit-identical
@@ -33,7 +33,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, I
   * order, and applies Catalyst `round(_, 9)` (BigDecimal HALF_UP) to
   * the sum — so the DuckDB oracles stay hash-exact. */
 case class SqEncodeExpr(child: Expression, lo: Array[Double], hi: Array[Double])
-    extends UnaryExpression {
+    extends FloatOrDoubleArrayInput {
   require(lo.length == hi.length, "lo/hi length mismatch")
 
   // Array fields make case-class equality reference-based, so two
@@ -47,18 +47,6 @@ case class SqEncodeExpr(child: Expression, lo: Array[Double], hi: Array[Double])
   override def hashCode(): Int =
     java.util.Objects.hash(child, Integer.valueOf(java.util.Arrays.hashCode(lo)),
       Integer.valueOf(java.util.Arrays.hashCode(hi)))
-
-  private lazy val childIsFloat: Boolean = child.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _ => false
-  }
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType, _) | ArrayType(DoubleType, _) =>
-      TypeCheckResult.TypeCheckSuccess
-    case other =>
-      TypeCheckResult.TypeCheckFailure(s"sq_encode needs array<float|double>, got $other")
-  }
 
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
   override def nullIntolerant: Boolean = true
@@ -130,10 +118,7 @@ object SqKernels {
     Bridge.column(SqDistExpr(Bridge.expression(q), Bridge.expression(codes),
       lo.toArray, hi.toArray))
 
-  /** Catalyst round(x, 9) — same helper contract as [[PqKernels]]. */
-  private def round9(x: Double): Double =
-    java.math.BigDecimal.valueOf(x)
-      .setScale(9, java.math.RoundingMode.HALF_UP).doubleValue()
+  import KernelMath.round9
 
   /** Static helper invoked from both interpreted eval and generated
     * code. code[d] = min(255, floor(((v[d]−lo[d])·255)/(hi[d]−lo[d]))),

@@ -1,11 +1,11 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftshim.Bridge
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, LongType}
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
 /** `bands` independent signed-random-projection signatures of an embedding
   * in ONE native pass (SURVEY §2.10: custom `Expression` over UDF).
@@ -24,28 +24,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, L
   * Accepts array<float> or array<double> input.
   */
 case class SrpBands(child: Expression, bits: Int, bands: Int, seed: Long)
-    extends UnaryExpression {
+    extends FloatOrDoubleArrayInput {
   require(bits > 0 && bits <= 63 && bands > 0, s"bad bits=$bits / bands=$bands")
-
-  // resolved only after analysis — the Column-API constructor sees an
-  // unresolved attribute, so the element-type dispatch must be lazy and
-  // input validation goes through checkInputDataTypes
-  private lazy val childIsFloat: Boolean = child.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _ => false
-  }
-
-  override def checkInputDataTypes():
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-    child.dataType match {
-      case ArrayType(FloatType, _) | ArrayType(DoubleType, _) =>
-        TypeCheckResult.TypeCheckSuccess
-      case other =>
-        TypeCheckResult.TypeCheckFailure(
-          s"srp_bands needs array<float|double>, got $other")
-    }
-  }
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def nullIntolerant: Boolean = true
@@ -68,15 +48,7 @@ object SrpBands {
   def apply(c: Column, bits: Int, bands: Int, seed: Long = 42L): Column =
     Bridge.column(SrpBands(Bridge.expression(c), bits, bands, seed))
 
-  private final val GOLDEN = 0x9e3779b97f4a7c15L
-
-  private def fmix64(x0: Long): Long = {
-    var x = x0
-    x ^= x >>> 33; x *= 0xff51afd7ed558ccdL
-    x ^= x >>> 33; x *= 0xc4ceb9fe1a85ec53L
-    x ^= x >>> 33
-    x
-  }
+  import KernelMath.{GOLDEN, fmix64}
 
   /** Static helper invoked from both interpreted eval and generated code. */
   def compute(arr: ArrayData, bits: Int, bands: Int, seed: Long,

@@ -100,44 +100,26 @@ object Layout {
     * row: buckets scanned vs total, rows actually in the box, and the
     * skip ratio.
     *
-    * Ranking is FUSED into the aggregation pass (the same range
-    * partition + counts-only shard offsets discipline as
-    * [[Sampling.globalRank]], never a single-partition window): the
-    * ranked relation exists only inside the one job that folds it to
-    * `buckets` rows. The previous shape (`df.count()` + globalRank's
-    * eager full-relation checkpoint per layout) kept one persisted AND
-    * one checkpointed copy of the fact table alive PER skipStats call
-    * until the caller's final action — at sf10 two layouts' copies plus
-    * the caller's keyed checkpoint exceeded the default 8 GiB heap
-    * (execution memory starved by storage: UNABLE_TO_ACQUIRE_MEMORY in
-    * the window sort). Now the only thing that survives the call is the
-    * eagerly-checkpointed single result row; rank/bucket arithmetic is
-    * unchanged (same offsets, same floor — output bit-identical). */
+    * Ranking is FUSED into the aggregation pass of
+    * [[Sampling.shardedPrefixScan]] (the [[Sampling.globalRank]]
+    * offsets, never a single-partition window), and n is the scan's row
+    * total: the ranked relation exists only inside the one job that
+    * folds it to `buckets` rows, and only the single result row survives
+    * the call. A persisted or checkpointed copy of the fact table per
+    * layout, alive until the caller's final action, starved execution
+    * memory at sf10 (UNABLE_TO_ACQUIRE_MEMORY in the window sort under
+    * the default 8 GiB heap). */
   def skipStats(df: DataFrame, layout: String, orderCols: Seq[Column],
                 dim1: Column, hi1: Long, dim2: Column, hi2: Long,
-                buckets: Int = 64, shards: Int = 32): DataFrame = {
+                buckets: Int = 64): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val ranged = df.repartitionByRange(shards, orderCols: _*)
-      .withColumn("__pid", spark_partition_id())
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // counts only — one long per shard, the tokenBudget discipline;
-      // n = Σ shard counts replaces the old separate df.count() pass
-      val counts = ranged.groupBy(col("__pid")).agg(count(lit(1)).as("n"))
-        .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-      val n = counts.valuesIterator.sum
-      // offsets(p) = rows in shards before p (range partitions are
-      // ordered by pid, so pid order IS the global order)
-      val offsets = (0 until shards)
-        .scanLeft(0L)((acc, pid) => acc + counts.getOrElse(pid, 0L))
-        .take(shards)
+    Sampling.shardedPrefixScan(df, orderCols, lit(1L)) { (ranged, prefix, offset) =>
+      val n = prefix.last
       val w = Window.partitionBy(col("__pid")).orderBy(orderCols: _*)
       // exact integer bucket: (rank-1)·buckets div n — floor over doubles
       // is exact here ((rank-1)·buckets < 2^53 at any plausible count)
       val bucketed = ranged
-        .withColumn("__rank",
-          (element_at(typedLit(offsets), col("__pid") + 1)
-            + row_number().over(w)).cast("long"))
+        .withColumn("__rank", (offset + row_number().over(w)).cast("long"))
         .withColumn("__bucket",
           floor((col("__rank") - 1) * lit(buckets.toLong) / lit(n)).cast("long"))
       val perBucket = bucketed.groupBy(col("__bucket"))
@@ -153,10 +135,7 @@ object Layout {
         .withColumn("skip_ratio",
           (col("buckets_total") - col("buckets_scanned")).cast("double")
             / col("buckets_total").cast("double"))
-        // one row — materialized here so the persisted input can be
-        // dropped before the caller composes the layouts' results
-        .localCheckpoint(eager = true)
-    } finally ranged.unpersist(blocking = true)
+    }
   }
 
   /** Sequential size-based bin packing — the small-files compaction
@@ -167,42 +146,27 @@ object Layout {
     * table's file manifest, preserving the clustering order so the
     * compacted files keep their min/max locality.
     *
-    * The running sum is DISTRIBUTED: range-partition on the order key,
-    * per-shard byte totals collected (one counts-only row per shard —
-    * the `tokenBudget` discipline), shard offsets added to an in-shard
-    * window sum. No single-partition window; a 200k-file manifest at
-    * 100 TB plans in one pass. Bin ids and boundaries are exact integer
-    * arithmetic, so the plan is DuckDB-reproducible.
+    * The running sum is DISTRIBUTED ([[Sampling.shardedPrefixScan]] with
+    * the size as weight): each shard's byte offset is added to an
+    * in-shard window sum. No single-partition window; a 200k-file
+    * manifest at 100 TB plans in one pass. Bin ids and boundaries are
+    * exact integer arithmetic, so the plan is DuckDB-reproducible.
     *
     * Returns `df` + `cum_before` (bytes strictly before the row) +
     * `bin` (0-based). */
   def sequentialBins(df: DataFrame, orderCols: Seq[Column], sizeCol: Column,
-                     targetBytes: Long, shards: Int = 32): DataFrame = {
+                     targetBytes: Long): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     require(targetBytes > 0, "targetBytes must be positive")
-    val ranged = df.withColumn("__sz", sizeCol.cast("long"))
-      .repartitionByRange(shards, orderCols: _*)
-      .withColumn("__pid", spark_partition_id())
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val totals = ranged.groupBy(col("__pid")).agg(
-          coalesce(sum(col("__sz")), lit(0L)).as("b"))
-        .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-      // offsets(p) = bytes in shards before p (range partitions are
-      // ordered by pid, so pid order IS the global order)
-      val offsets = (0 until shards)
-        .scanLeft(0L)((acc, pid) => acc + totals.getOrElse(pid, 0L))
-        .take(shards)
+    Sampling.shardedPrefixScan(df.withColumn("__sz", sizeCol.cast("long")), orderCols,
+        col("__sz")) { (ranged, _, offset) =>
       val w = Window.partitionBy(col("__pid")).orderBy(orderCols: _*)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
       ranged
-        .withColumn("cum_before",
-          element_at(typedLit(offsets), col("__pid") + 1)
-            + sum(col("__sz")).over(w) - col("__sz"))
+        .withColumn("cum_before", offset + sum(col("__sz")).over(w) - col("__sz"))
         .withColumn("bin", expr(s"cum_before div ${targetBytes}L"))
         .drop("__sz", "__pid")
-        .localCheckpoint(eager = true)
-    } finally ranged.unpersist(blocking = true)
+    }
   }
 
   /** Physically compact a directory of (many, small) parquet files into

@@ -151,45 +151,29 @@ object Sampling {
     *
     * The selected set is a pure function of the global order, so the
     * implementation is free to avoid a global-order window (which plans
-    * as a SINGLE-partition sort at any scale): rows range-partition by
-    * the order columns, per-shard token totals aggregate to the driver
-    * (one row per shard), and the prefix sums over those totals decide
-    * whole shards — every shard strictly before the crossing point is
-    * selected WITHOUT any per-row state, every shard after it is
-    * dropped, and only the ONE boundary shard runs a per-row running
-    * sum (a window over that shard's bounded rows). Shard boundary
-    * placement (range sampling) therefore never affects the output,
-    * only which shard pays the fine scan. Cost: one range exchange of
-    * (order, token) rows + a counts-only aggregate + a window over
-    * ~1/shards of the data.
+    * as a SINGLE-partition sort at any scale): through
+    * [[shardedPrefixScan]], the prefix sums over the per-shard token
+    * totals decide whole shards — every shard strictly before the
+    * crossing point is selected WITHOUT any per-row state, every shard
+    * after it is dropped, and only the ONE boundary shard runs a per-row
+    * running sum (a window over that shard's bounded rows). Shard
+    * boundary placement (range sampling) therefore never affects the
+    * output, only which shard pays the fine scan. Cost: one range
+    * exchange of (order, token) rows + a counts-only aggregate + a
+    * window over one shard's rows.
     *
     * Ties: `orderCols` must end in a unique tiebreaker (the id) so the
     * global order — and with it the selected set — is total. */
   def tokenBudget(df: DataFrame, orderCols: Seq[Column], tokensCol: Column,
-                  budget: Long, shards: Int = 32): DataFrame = {
+                  budget: Long): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     require(budget >= 0, s"budget must be >= 0, got $budget")
-    val ranged = df.repartitionByRange(shards, orderCols: _*)
-      .withColumn("__pid", spark_partition_id())
-      .withColumn("__tok", tokensCol.cast("long"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // one row per shard; range partitions are ordered by pid, so the
-      // driver-side prefix scan below walks the global order
-      // coalesce: a shard whose rows all have null tokensCol would yield a
-      // null aggregate and getLong would throw; null tokens count as 0,
-      // matching the window's null-skipping running sum on the boundary shard
-      val totals = ranged.groupBy(col("__pid"))
-        .agg(coalesce(sum(col("__tok")), lit(0L)).as("t"))
-        .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-      var acc = 0L
-      var boundary = -1
-      var before = 0L
-      for (pid <- 0 until shards if boundary < 0) {
-        val t = totals.getOrElse(pid, 0L)
-        if (acc + t > budget) { boundary = pid; before = acc }
-        else acc += t
-      }
+    // null tokens count as 0: the shard totals coalesce them, and the
+    // window's running sum on the boundary shard skips them
+    shardedPrefixScan(df.withColumn("__tok", tokensCol.cast("long")), orderCols,
+        col("__tok")) { (ranged, prefix, _) =>
+      // the first shard whose prefix THROUGH it exceeds the budget
+      val boundary = prefix.indexWhere(_ > budget) - 1
       val out =
         if (boundary < 0) ranged // whole corpus fits the budget
         else {
@@ -199,46 +183,64 @@ object Sampling {
             .rowsBetween(Window.unboundedPreceding, Window.currentRow)
           val fine = ranged.filter(col("__pid") === boundary)
             .withColumn("__run", sum(col("__tok")).over(w))
-            .filter(col("__run") <= budget - before)
+            .filter(col("__run") <= budget - prefix(boundary))
             .drop("__run")
           full.unionByName(fine)
         }
-      // the result escapes this scope: materialize, then release the cache
-      out.drop("__pid", "__tok").localCheckpoint(eager = true)
-    } finally ranged.unpersist(blocking = true)
+      out.drop("__pid", "__tok")
+    }
   }
 
   /** Distributed total-order rank: 1-based dense position of every row
     * in the global `orderCols` order, WITHOUT a single-partition window
     * (`row_number() OVER (ORDER BY …)` funnels the whole relation
     * through one task — the classic driver-shaped bottleneck at scale).
-    * Range-partition on the order, collect COUNTS ONLY (one long per
-    * shard), and add each shard's prefix offset to its local rank — the
-    * same shard-totals discipline as [[tokenBudget]]. The canonical use
-    * is epoch-shuffle order for training (rank over a seeded content
-    * hash): a total, reproducible permutation any engine can verify.
+    * Through [[shardedPrefixScan]] with a weight of 1 per row, each
+    * shard's prefix offset (rows in the shards before it) is added to
+    * its local rank. The canonical use is epoch-shuffle order for
+    * training (rank over a seeded content hash): a total, reproducible
+    * permutation any engine can verify.
     *
     * `orderCols` must end in a unique tiebreaker so the order is total. */
-  def globalRank(df: DataFrame, orderCols: Seq[Column], rankName: String = "rank",
-                 shards: Int = 32): DataFrame = {
+  def globalRank(df: DataFrame, orderCols: Seq[Column],
+                 rankName: String = "rank"): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val ranged = df.repartitionByRange(shards, orderCols: _*)
+    shardedPrefixScan(df, orderCols, lit(1L)) { (ranged, _, offset) =>
+      val w = Window.partitionBy(col("__pid")).orderBy(orderCols: _*)
+      ranged.withColumn(rankName, (offset + row_number().over(w)).cast("long"))
+        .drop("__pid")
+    }
+  }
+
+  /** The distributed running aggregate under [[tokenBudget]],
+    * [[globalRank]], [[Layout.skipStats]] and [[Layout.sequentialBins]]
+    * — a prefix over the global `orderCols` order with no
+    * single-partition window:
+    *  1. range-partition the rows on `orderCols` with no partition
+    *     count, so AQE sizes the shards as it sizes every other exchange,
+    *     and tag each row with its shard `__pid` (range partitions are
+    *     ordered by pid, so pid order IS the global order);
+    *  2. persist them;
+    *  3. collect the per-shard sums of `weight` (nulls count 0) — one
+    *     long per shard;
+    *  4. run `body(ranged, prefix, offset)`: `prefix(p)` is the weight of
+    *     the shards before p (`prefix.last` the total) and `offset` the
+    *     column holding `prefix(__pid)`, which a caller adds to an
+    *     in-shard window over `__pid`;
+    *  5. materialize the body's result (localCheckpoint), then release
+    *     the persisted shards — so the result may escape.
+    * The output never depends on where the shard boundaries fall. */
+  private[graft] def shardedPrefixScan(df: DataFrame, orderCols: Seq[Column], weight: Column)(
+      body: (DataFrame, IndexedSeq[Long], Column) => DataFrame): DataFrame = {
+    val ranged = df.repartitionByRange(orderCols: _*)
       .withColumn("__pid", spark_partition_id())
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val counts = ranged.groupBy(col("__pid")).agg(count(lit(1)).as("n"))
+      val sums = ranged.groupBy(col("__pid")).agg(coalesce(sum(weight), lit(0L)))
         .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-      // offsets(p) = rows in shards before p (range partitions are
-      // ordered by pid, so pid order IS the global order)
-      val offsets = (0 until shards)
-        .scanLeft(0L)((acc, pid) => acc + counts.getOrElse(pid, 0L))
-        .take(shards)
-      val w = Window.partitionBy(col("__pid")).orderBy(orderCols: _*)
-      ranged
-        .withColumn(rankName,
-          (element_at(typedLit(offsets), col("__pid") + 1)
-            + row_number().over(w)).cast("long"))
-        .drop("__pid")
+      val shards = if (sums.isEmpty) 0 else sums.keys.max + 1
+      val prefix = (0 until shards).scanLeft(0L)((acc, pid) => acc + sums.getOrElse(pid, 0L))
+      body(ranged, prefix, element_at(typedLit(prefix), col("__pid") + 1))
         .localCheckpoint(eager = true)
     } finally ranged.unpersist(blocking = true)
   }

@@ -1,6 +1,6 @@
 package graft.similarity
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -34,11 +34,6 @@ import org.apache.spark.sql.types.DecimalType
   */
 object Kmeans {
 
-  /** Rounded squared-L2, fixed fold order (engine-comparable). */
-  private def d2(a: Column, b: Column): Column =
-    round(aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)),
-      lit(0.0), (acc, x) => acc + x), 9)
-
   /** The k corpus vectors with smallest md5(vec_id), in pivot-id order —
     * cell j is the j-th such vector. */
   def pivotInit(corpus: DataFrame, k: Int): Seq[Seq[Double]] =
@@ -70,7 +65,7 @@ object Kmeans {
     val cent = typedLit(centroids)
     corpus
       .withColumn("__ds", transform(sequence(lit(0), lit(centroids.length - 1)),
-        j => d2(col("c_vec"), element_at(cent, j + 1))))
+        j => Vectors.d2(col("c_vec"), element_at(cent, j + 1))))
       .withColumn("cell", (array_position(col("__ds"), array_min(col("__ds"))) - 1)
         .cast("int"))
       .withColumn("d2", element_at(col("__ds"), col("cell") + 1))

@@ -51,12 +51,6 @@ object Pq {
     (0 until m).map(mi => pivots.toSeq.map(p => p.slice(mi * d, (mi + 1) * d)))
   }
 
-  /** Rounded squared-L2 between two double arrays (fixed left-to-right
-    * fold — the engine-comparable form used by the IVF probe path). */
-  private def d2(a: Column, b: Column): Column =
-    round(aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)),
-      lit(0.0), (acc, x) => acc + x), 9)
-
   /** Encode every corpus vector to its `m` codes in ONE projection — a
     * pure map over the scan, zero shuffle, via the native codegen'd
     * [[graft.functions.PqEncodeExpr]] kernel (bit-identical to
@@ -78,7 +72,7 @@ object Pq {
       transform(sequence(lit(0), lit(m - 1)), mi => {
         val sub = slice(col("c_vec"), mi * d + 1, lit(d))
         val ds = transform(sequence(lit(0), lit(codebook.head.length - 1)),
-          k => d2(sub, element_at(element_at(cb, mi + 1), k + 1)))
+          k => Vectors.d2(sub, element_at(element_at(cb, mi + 1), k + 1)))
         (array_position(ds, array_min(ds)) - 1).cast("int")
       }).as("codes"))
   }
@@ -105,7 +99,7 @@ object Pq {
     transform(sequence(lit(0), lit(m - 1)), mi => {
       val sub = slice(vec, mi * d + 1, lit(d))
       transform(sequence(lit(0), lit(codebook.head.length - 1)),
-        k => d2(sub, element_at(element_at(cb, mi + 1), k + 1)))
+        k => Vectors.d2(sub, element_at(element_at(cb, mi + 1), k + 1)))
     })
   }
 
@@ -116,44 +110,11 @@ object Pq {
     queries.select(col("q_id"), col("q_vec"),
       dtabExpr(col("q_vec"), codebook).as("dtab"))
 
-  /** ADC distance over (codes, dtab) rows, shortlist heap, exact-cosine
-    * re-rank — the shared tail of [[pqKnn]] and [[ivfPqKnn]]. `cand`
-    * must carry (q_id, vec_id, codes, dtab). The ADC sum folds the `m`
-    * lookups in fixed sub-space order (left-to-right double fold —
+  /** ADC distance of (codes, dtab) candidate rows: the `m` table lookups
+    * folded in fixed sub-space order (left-to-right double fold —
     * bit-reproducible across engines, the same discipline as the d2
     * kernel). */
-  private def adcShortlistRerank(cand: DataFrame, queries: DataFrame,
-                                 corpus: DataFrame, k: Int,
-                                 shortlist: Int, roundScale: Int): DataFrame = {
-    val adc = cand
-      .filter(col("q_id") =!= col("vec_id"))
-      .withColumn("adc_d2",
-        graft.functions.PqKernels.adcCol(col("codes"), col("dtab")))
-    // bounded shortlist heap on NEGATED distance (TopKByScore keeps
-    // (score desc, id asc) — i.e. distance asc, vec_id asc)
-    val spark = adc.sparkSession
-    import spark.implicits._
-    val short = adc.select(col("q_id"), negate(col("adc_d2")).as("score"), col("vec_id"))
-      .as[(Long, Double, Long)]
-      .groupByKey(_._1)
-      .agg(new TopKByScore(shortlist).toColumn.name("top"))
-      .toDF("q_id", "top")
-      .select(col("q_id"), explode(col("top")).as("t"))
-      .select(col("q_id"), col("t._2").as("vec_id"))
-    // exact re-rank: shortlist·|Q| rows — broadcast against the corpus,
-    // the only place raw vectors are read
-    val rescored = corpus.join(broadcast(short), "vec_id")
-      .join(broadcast(queries.select(col("q_id"), col("q_vec"))), "q_id")
-      .withColumn("score",
-        round(Vectors.cosine(col("q_vec"), col("c_vec")), roundScale))
-      .select(col("q_id"), col("score"), col("vec_id"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("q_id")).orderBy(col("score").desc, col("vec_id").asc)
-    rescored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("rank").cast("long").as("rank"),
-        col("vec_id"), col("score"))
-  }
+  private def adc: Column = graft.functions.PqKernels.adcCol(col("codes"), col("dtab"))
 
   /** PQ top-k: ADC over the full codes relation → bounded per-query
     * `shortlist` heap → exact-cosine re-rank of the shortlist to top-k.
@@ -163,8 +124,8 @@ object Pq {
             k: Int, shortlist: Int = 32, roundScale: Int = 6): DataFrame = {
     val codes = encode(corpus, codebook)
     val dtabs = distanceTables(queries, codebook)
-    adcShortlistRerank(
-      codes.crossJoin(broadcast(dtabs.select(col("q_id"), col("dtab")))),
+    Vectors.shortlistRerank(
+      codes.crossJoin(broadcast(dtabs.select(col("q_id"), col("dtab")))), adc,
       queries, corpus, k, shortlist, roundScale)
   }
 
@@ -185,31 +146,13 @@ object Pq {
                roundScale: Int = 6): DataFrame = {
     val codes = encode(corpus, codebook)
       .join(assigned.select(col("vec_id"), col("cell")), "vec_id")
-    // nprobe nearest cells per query — identical arithmetic to
-    // Vectors.ivfScores (rounded-9 L2 to the broadcast centroids)
-    val qCells = queries.crossJoin(broadcast(centroids))
-      .withColumn("cd2", round(aggregate(
-        zip_with(col("q_vec"), col("centroid"), (x, y) => (x - y) * (x - y)),
-        lit(0.0), (acc, x) => acc + x), 9))
-    val wc = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("q_id")).orderBy(col("cd2").asc, col("cell").asc)
-    val probes = qCells.withColumn("cr", row_number().over(wc))
-      .filter(col("cr") <= nprobe)
+    val probes = Vectors.nearestCells(queries, centroids, nprobe)
       .select(col("q_id"), col("cell"))
     val dtabs = distanceTables(queries, codebook)
     val cand = codes.join(broadcast(probes), Seq("cell"))
       .join(broadcast(dtabs.select(col("q_id"), col("dtab"))), Seq("q_id"))
-    adcShortlistRerank(cand, queries, corpus, k, shortlist, roundScale)
+    Vectors.shortlistRerank(cand, adc, queries, corpus, k, shortlist, roundScale)
   }
-
-  /** The residual of each assigned vector against its cell centroid —
-    * `r = x − centroid(cell(x))`, the quantity residual PQ encodes.
-    * IEEE double subtraction is exactly rounded, so any engine doing the
-    * same subtraction reproduces the residuals bit-for-bit (the property
-    * the DuckDB oracle relies on). */
-  private def residuals(assigned: DataFrame, centroids: DataFrame): DataFrame =
-    assigned.join(broadcast(centroids), "cell")
-      .withColumn("r", zip_with(col("c_vec"), col("centroid"), (x, y) => x - y))
 
   /** Residual codebook: the pivot family trained on RESIDUALS — the
     * sub-vectors of `r = pivot − centroid(cell(pivot))` for the `ks`
@@ -219,7 +162,7 @@ object Pq {
     * vectors — the reason FAISS's IVFPQ encodes residuals by default. */
   def residualCodebook(assigned: DataFrame, centroids: DataFrame,
                        m: Int, ks: Int): Seq[Seq[Seq[Double]]] = {
-    val res = residuals(assigned, centroids)
+    val res = Sq.residuals(assigned, centroids)
       .orderBy(md5(col("vec_id").cast("string")).asc, col("vec_id").asc)
       .limit(ks)
       .orderBy(col("vec_id"))
@@ -251,27 +194,14 @@ object Pq {
                        assigned: DataFrame, centroids: DataFrame,
                        nprobe: Int, k: Int, shortlist: Int = 32,
                        roundScale: Int = 6): DataFrame = {
-    val codes = residuals(assigned, centroids)
+    val codes = Sq.residuals(assigned, centroids)
       .select(col("vec_id"), col("cell"),
         graft.functions.PqKernels.encodeCol(col("r"), codebook).as("codes"))
-    // nprobe nearest cells per query — identical arithmetic to ivfPqKnn
-    val qCells = queries.crossJoin(broadcast(centroids))
-      .withColumn("cd2", round(aggregate(
-        zip_with(col("q_vec"), col("centroid"), (x, y) => (x - y) * (x - y)),
-        lit(0.0), (acc, x) => acc + x), 9))
-    val wc = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("q_id")).orderBy(col("cd2").asc, col("cell").asc)
-    val probes = qCells.withColumn("cr", row_number().over(wc))
-      .filter(col("cr") <= nprobe)
-      .select(col("q_id"), col("cell"))
     // one ADC table per (query, probed cell), from the query's residual
     // against that cell's centroid — |Q|·nprobe rows, broadcast-sized
-    val dtabs = probes
-      .join(queries.select(col("q_id"), col("q_vec")), "q_id")
-      .join(broadcast(centroids), "cell")
-      .withColumn("qr", zip_with(col("q_vec"), col("centroid"), (x, y) => x - y))
+    val dtabs = Vectors.nearestCells(queries, centroids, nprobe)
       .select(col("q_id"), col("cell"), dtabExpr(col("qr"), codebook).as("dtab"))
     val cand = codes.join(broadcast(dtabs), Seq("cell"))
-    adcShortlistRerank(cand, queries, corpus, k, shortlist, roundScale)
+    Vectors.shortlistRerank(cand, adc, queries, corpus, k, shortlist, roundScale)
   }
 }

@@ -56,11 +56,12 @@ object Sq {
   /** The residual of each assigned vector against its cell centroid —
     * (vec_id, cell, r) with `r = x − centroid(cell(x))` (exact IEEE
     * subtraction, so any engine doing the same subtraction reproduces
-    * it bit-for-bit). The IVF-SQ8 index-build intermediate: CALLERS
-    * MATERIALIZE IT ONCE (localCheckpoint) and derive the range fit AND
-    * the codes from the checkpoint — the coarse-assignment subtree
-    * (centroid argmin + corpus join) is the expensive pass, and three
-    * lazy consumers would re-run it three times. */
+    * it bit-for-bit) — what the residual codes of IVF-SQ8 and of
+    * [[Pq.ivfPqResidualKnn]] quantize. For IVF-SQ8, CALLERS MATERIALIZE
+    * IT ONCE (localCheckpoint) and derive the range fit AND the codes
+    * from the checkpoint — the coarse-assignment subtree (centroid
+    * argmin + corpus join) is the expensive pass, and three lazy
+    * consumers would re-run it three times. */
   def residuals(assigned: DataFrame, centroids: DataFrame): DataFrame =
     assigned.join(broadcast(centroids), "cell")
       .select(col("vec_id"), col("cell"),
@@ -106,38 +107,7 @@ object Sq {
       val l = element_at(loL, d); val h = element_at(hiL, d)
       l + ((element_at(codes, d).cast("double") + lit(0.5)) * (h - l)) / lit(255.0)
     })
-    round(aggregate(
-      zip_with(q, recon, (x, y) => (x - y) * (x - y)),
-      lit(0.0), (acc, x) => acc + x), 9)
-  }
-
-  /** Bounded per-query shortlist heap over (q_id, vec_id, sq_d2)
-    * candidates, then exact-cosine re-rank of the shortlist — the tail
-    * both SQ variants share. Output contract matches
-    * [[Vectors.bruteForceKnnHeap]]: (q_id, rank, vec_id, score). */
-  private def shortlistRerank(cand: DataFrame, queries: DataFrame,
-                              corpus: DataFrame, k: Int, shortlist: Int,
-                              roundScale: Int): DataFrame = {
-    val spark = cand.sparkSession
-    import spark.implicits._
-    val short = cand.select(col("q_id"), negate(col("sq_d2")).as("score"), col("vec_id"))
-      .as[(Long, Double, Long)]
-      .groupByKey(_._1)
-      .agg(new TopKByScore(shortlist).toColumn.name("top"))
-      .toDF("q_id", "top")
-      .select(col("q_id"), explode(col("top")).as("t"))
-      .select(col("q_id"), col("t._2").as("vec_id"))
-    val rescored = corpus.join(broadcast(short), "vec_id")
-      .join(broadcast(queries.select(col("q_id"), col("q_vec"))), "q_id")
-      .withColumn("score",
-        round(Vectors.cosine(col("q_vec"), col("c_vec")), roundScale))
-      .select(col("q_id"), col("score"), col("vec_id"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("q_id")).orderBy(col("score").desc, col("vec_id").asc)
-    rescored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("rank").cast("long").as("rank"),
-        col("vec_id"), col("score"))
+    Vectors.d2(q, recon)
   }
 
   /** SQ8 top-k: approximate L2 against RECONSTRUCTED vectors (codes
@@ -149,11 +119,9 @@ object Sq {
             lo: Seq[Double], hi: Seq[Double], k: Int,
             shortlist: Int = 128, roundScale: Int = 6): DataFrame = {
     val codes = encode(corpus, lo, hi)
-    val cand = codes
-      .crossJoin(broadcast(queries.select(col("q_id"), col("q_vec"))))
-      .filter(col("q_id") =!= col("vec_id"))
-      .withColumn("sq_d2", SqKernels.distCol(col("q_vec"), col("codes"), lo, hi))
-    shortlistRerank(cand, queries, corpus, k, shortlist, roundScale)
+    val cand = codes.crossJoin(broadcast(queries.select(col("q_id"), col("q_vec"))))
+    Vectors.shortlistRerank(cand, SqKernels.distCol(col("q_vec"), col("codes"), lo, hi),
+      queries, corpus, k, shortlist, roundScale)
   }
 
   /** IVF-SQ8 top-k — the FAISS IndexIVFScalarQuantizer composition, and
@@ -182,21 +150,10 @@ object Sq {
                roundScale: Int = 6): DataFrame = {
     val codes = res.select(col("vec_id"), col("cell"),
       SqKernels.encodeCol(col("r"), lo, hi).as("codes"))
-    // nprobe nearest cells per query — identical arithmetic to
-    // Pq.ivfPqResidualKnn (rounded-9 L2 to the broadcast centroids)
-    val qCells = queries.crossJoin(broadcast(centroids))
-      .withColumn("cd2", round(aggregate(
-        zip_with(col("q_vec"), col("centroid"), (x, y) => (x - y) * (x - y)),
-        lit(0.0), (acc, x) => acc + x), 9))
-    val wc = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("q_id")).orderBy(col("cd2").asc, col("cell").asc)
-    val probes = qCells.withColumn("cr", row_number().over(wc))
-      .filter(col("cr") <= nprobe)
-      .withColumn("qr", zip_with(col("q_vec"), col("centroid"), (x, y) => x - y))
+    val probes = Vectors.nearestCells(queries, centroids, nprobe)
       .select(col("q_id"), col("cell"), col("qr"))
     val cand = codes.join(broadcast(probes), Seq("cell"))
-      .filter(col("q_id") =!= col("vec_id"))
-      .withColumn("sq_d2", SqKernels.distCol(col("qr"), col("codes"), lo, hi))
-    shortlistRerank(cand, queries, corpus, k, shortlist, roundScale)
+    Vectors.shortlistRerank(cand, SqKernels.distCol(col("qr"), col("codes"), lo, hi),
+      queries, corpus, k, shortlist, roundScale)
   }
 }

@@ -28,6 +28,15 @@ object Vectors {
 
   def norm(a: Column): Column = sqrt(dot(a, a))
 
+  /** Squared L2 folded left-to-right and rounded to 9 decimals — the
+    * engine-comparable distance of every cell probe, codebook encode and
+    * k-means reference form. The rounding keeps an argmin stable against
+    * summation-order noise (real distance gaps are many orders of
+    * magnitude wider) and lets the DuckDB oracle replay it exactly. */
+  private[similarity] def d2(a: Column, b: Column): Column =
+    round(aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)),
+      lit(0.0), (acc, x) => acc + x), 9)
+
   /** Cosine via the native one-pass [[graft.functions.CosineSim]]
     * expression — for DOUBLE-array inputs (as all callers here ensure via
     * [[toDouble]]) it is bit-identical to the HOF form `dot/(norm·norm)`
@@ -262,24 +271,59 @@ object Vectors {
   /** The scored-candidate stage of [[ivfProbe]], exposed for the recall
     * sweep's cost axis (candidates per query at a given nprobe). */
   def ivfScores(queries: DataFrame, assigned: DataFrame, centroids: DataFrame,
-                nprobe: Int, roundScale: Int = 6): DataFrame = {
-    // nprobe nearest cells per query by L2 to the centroid; d2 rounded to
-    // 9 decimals so the probe ORDER is stable against summation-order
-    // noise (and engine-reproducible for the pivotFit oracle anchor) —
-    // real cell-distance gaps are many orders of magnitude wider
-    val qCells = queries.crossJoin(broadcast(centroids))
-      .withColumn("d2", round(aggregate(
-        zip_with(col("q_vec"), col("centroid"), (x, y) => (x - y) * (x - y)),
-        lit(0.0), (acc, x) => acc + x), 9))
-    val wc = Window.partitionBy(col("q_id")).orderBy(col("d2").asc, col("cell").asc)
-    val probes = qCells.withColumn("cr", row_number().over(wc))
-      .filter(col("cr") <= nprobe)
-      .select(col("q_id"), col("q_vec"), col("cell"))
-
-    assigned.join(broadcast(probes), Seq("cell"))
+                nprobe: Int, roundScale: Int = 6): DataFrame =
+    assigned.join(broadcast(nearestCells(queries, centroids, nprobe)
+        .select(col("q_id"), col("q_vec"), col("cell"))), Seq("cell"))
       .filter(col("q_id") =!= col("vec_id"))
       .withColumn("score", round(cosine(col("q_vec"), col("c_vec")), roundScale))
       .select(col("q_id"), col("score"), col("vec_id"))
+
+  /** The coarse probe of every IVF index: each query's `nprobe` nearest
+    * cells by [[d2]] to the broadcast centroids, ties to the lowest cell,
+    * as (q_id, q_vec, cell, qr) with `qr` the query's residual against
+    * that cell's centroid (pruned away by callers that do not read it).
+    * |Q|·nlist distance rows — broadcast-sized, never the corpus. */
+  private[similarity] def nearestCells(queries: DataFrame, centroids: DataFrame,
+                                       nprobe: Int): DataFrame = {
+    val wc = Window.partitionBy(col("q_id")).orderBy(col("cd2").asc, col("cell").asc)
+    queries.crossJoin(broadcast(centroids))
+      .withColumn("cd2", d2(col("q_vec"), col("centroid")))
+      .withColumn("cr", row_number().over(wc))
+      .filter(col("cr") <= nprobe)
+      .withColumn("qr", zip_with(col("q_vec"), col("centroid"), (x, y) => x - y))
+      .select(col("q_id"), col("q_vec"), col("cell"), col("qr"))
+  }
+
+  /** The tail of every quantized kNN: candidates (q_id, vec_id, …) scored
+    * by an approximate distance `dist` → bounded per-query heap of the
+    * `shortlist` nearest (TopKByScore on the NEGATED distance keeps
+    * distance asc, vec_id asc) → exact-cosine re-rank of the shortlist to
+    * top-k. The re-rank broadcasts shortlist·|Q| ids against the corpus —
+    * the only place raw vectors are read. Output contract matches
+    * [[bruteForceKnnHeap]]: (q_id, rank, vec_id, score). */
+  private[similarity] def shortlistRerank(cand: DataFrame, dist: Column,
+                                          queries: DataFrame, corpus: DataFrame,
+                                          k: Int, shortlist: Int,
+                                          roundScale: Int): DataFrame = {
+    val spark = cand.sparkSession
+    import spark.implicits._
+    val short = cand.filter(col("q_id") =!= col("vec_id"))
+      .select(col("q_id"), negate(dist).as("score"), col("vec_id"))
+      .as[(Long, Double, Long)]
+      .groupByKey(_._1)
+      .agg(new TopKByScore(shortlist).toColumn.name("top"))
+      .toDF("q_id", "top")
+      .select(col("q_id"), explode(col("top")).as("t"))
+      .select(col("q_id"), col("t._2").as("vec_id"))
+    val rescored = corpus.join(broadcast(short), "vec_id")
+      .join(broadcast(queries.select(col("q_id"), col("q_vec"))), "q_id")
+      .withColumn("score", round(cosine(col("q_vec"), col("c_vec")), roundScale))
+      .select(col("q_id"), col("score"), col("vec_id"))
+    val w = Window.partitionBy(col("q_id")).orderBy(col("score").desc, col("vec_id").asc)
+    rescored.withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= k)
+      .select(col("q_id"), col("rank").cast("long").as("rank"),
+        col("vec_id"), col("score"))
   }
 
   /** LSH-bucketed ANN over `tables` INDEPENDENT SRP hash tables (distinct

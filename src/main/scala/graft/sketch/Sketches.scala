@@ -126,10 +126,13 @@ object Sketches {
       .write.mode("overwrite").parquet(s"$indexPath/batch=$batchId")
 
   /** Serving read of a persistent HLL index: merge every batch's
-    * registers by MAX. Feed the result to [[hllFold]] for estimates. */
+    * registers by MAX. Feed the result to [[hllFold]] for estimates.
+    * The batches come from the shared `batch=<id>` listing; `basePath`
+    * keeps `batch` as a partition column. */
   def hllIndexRead(spark: org.apache.spark.sql.SparkSession, indexPath: String,
                    groupCols: Seq[String]): DataFrame =
-    spark.read.option("basePath", indexPath).parquet(s"$indexPath/batch=*")
+    spark.read.option("basePath", indexPath)
+      .parquet(graft.dedup.SignatureIndex.batches(spark, indexPath).map(_._2.toString): _*)
       .groupBy(groupCols.head, groupCols.tail :+ "bucket": _*)
       .agg(max(col("r")).as("r"))
 

@@ -363,10 +363,13 @@ class CurationSpec extends SparkSuite {
   }
 
   test("token budget: maximal prefix of the global order, shard-invariant") {
+    import org.apache.spark.sql.expressions.Window
     // 100 docs with distinct token counts; priority = tokens desc, id asc.
-    // Driver-side reference: greedy prefix over the sorted order.
+    // Driver-side reference: greedy prefix over the sorted order; the
+    // globalRank reference is a single-window row_number().
     val docs = (0L until 100L).map(i => (i, 10L + (i * 37L) % 90L))
       .toDF("doc_id", "n_tok")
+    val order = Seq(col("n_tok").desc, col("doc_id").asc)
     def ref(budget: Long): Set[Long] = {
       var acc = 0L
       docs.collect().map(r => (r.getLong(0), r.getLong(1)))
@@ -374,12 +377,19 @@ class CurationSpec extends SparkSuite {
         .takeWhile { case (_, t) => { acc += t; acc <= budget } }
         .map(_._1).toSet
     }
-    for (budget <- Seq(0L, 500L, 2345L, 100000L); shards <- Seq(1, 4, 32)) {
-      val got = Sampling.tokenBudget(docs,
-          Seq(col("n_tok").desc, col("doc_id").asc), col("n_tok"),
-          budget, shards = shards)
-        .select(col("doc_id")).collect().map(_.getLong(0)).toSet
-      assert(got === ref(budget), s"budget=$budget shards=$shards")
+    val rankRef = docs.withColumn("rank", row_number().over(Window.orderBy(order: _*)))
+      .select("doc_id", "rank").as[(Long, Int)].collect().toMap
+    for ((sharding, s) <- oneAndManyShards) {
+      val d = rebind(docs, s)
+      assertShards(sharding, d, order)
+      for (budget <- Seq(0L, 500L, 2345L, 100000L)) {
+        val got = Sampling.tokenBudget(d, order, col("n_tok"), budget)
+          .select(col("doc_id")).collect().map(_.getLong(0)).toSet
+        assert(got === ref(budget), s"budget=$budget $sharding")
+      }
+      val ranks = Sampling.globalRank(d, order)
+        .select("doc_id", "rank").collect().map(r => r.getLong(0) -> r.getLong(1).toInt).toMap
+      assert(ranks === rankRef, sharding)
     }
   }
 

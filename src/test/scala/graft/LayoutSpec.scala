@@ -115,21 +115,24 @@ class LayoutSpec extends SparkSuite {
     // sizes chosen so bins straddle the range-partition shard boundaries
     val files = (1 to 500).map(i => (i.toLong, ((i * 37) % 90 + 10).toLong))
       .toDF("id", "sz")
-    val got = Layout.sequentialBins(files, Seq(col("id")), col("sz"),
-        targetBytes = 1000L, shards = 8)
-      .select("id", "cum_before", "bin").as[(Long, Long, Long)]
-      .collect().sortBy(_._1)
     val w = Window.orderBy(col("id"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val expect = files.withColumn("cb", sum(col("sz")).over(w) - col("sz"))
       .withColumn("bin", expr("cb div 1000L"))
       .select("id", "cb", "bin").as[(Long, Long, Long)]
       .collect().sortBy(_._1)
-    assert(got.toSeq == expect.toSeq)
-    // bins are contiguous in file order and every bin except possibly the
-    // last crosses the target boundary (no undersized interior bin)
-    val byBin = got.groupBy(_._3).toSeq.sortBy(_._1)
-    assert(byBin.map(_._1) == (0L until byBin.length.toLong))
+    for ((sharding, s) <- oneAndManyShards) {
+      val f = rebind(files, s)
+      assertShards(sharding, f, Seq(col("id")))
+      val got = Layout.sequentialBins(f, Seq(col("id")), col("sz"), targetBytes = 1000L)
+        .select("id", "cum_before", "bin").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sortBy(_._1)
+      assert(got.toSeq == expect.toSeq, sharding)
+      // bins are contiguous in file order and every bin except possibly the
+      // last crosses the target boundary (no undersized interior bin)
+      val byBin = got.groupBy(_._3).toSeq.sortBy(_._1)
+      assert(byBin.map(_._1) == (0L until byBin.length.toLong), sharding)
+    }
   }
 
   test("compactParquet: many small files → sized files, rows and order preserved") {

@@ -1,12 +1,44 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.functions.lit
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared session: one local SparkSession per suite (lazy). */
 trait SparkSuite extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSuite.session
   val sfDir = "/root/testdata/sf0.001"
+
+  /** Child sessions whose AQE-sized range exchanges come out as ONE
+    * shard (coalesced toward a 1 GiB advisory size) and as MANY
+    * (coalescing off, 16 initial partitions) — for pinning that the
+    * shard-offset operators do not depend on where shard boundaries
+    * fall. */
+  lazy val oneAndManyShards: Seq[(String, SparkSession)] = {
+    val one = spark.newSession()
+    one.conf.set("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
+    one.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "1g")
+    val many = spark.newSession()
+    many.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+    many.conf.set("spark.sql.adaptive.coalescePartitions.initialPartitionNum", "16")
+    Seq("one shard" -> one, "many shards" -> many)
+  }
+
+  /** `df`'s rows as a local relation of session `s`. */
+  def rebind(df: DataFrame, s: SparkSession): DataFrame =
+    s.createDataFrame(java.util.Arrays.asList(df.collect(): _*), df.schema)
+
+  /** Checks that the sharded prefix scan cuts `df` into exactly one
+    * shard in the one-shard session and into more than one (shards
+    * holding rows) in the many-shard session. */
+  def assertShards(sharding: String, df: DataFrame, orderCols: Seq[Column]): Unit = {
+    var shards = -1
+    graft.operators.Sampling.shardedPrefixScan(df, orderCols, lit(1L)) {
+      (ranged, prefix, _) => shards = prefix.length - 1; ranged.limit(0)
+    }
+    if (sharding == "many shards") assert(shards > 1, s"$sharding: $shards")
+    else assert(shards === 1, sharding)
+  }
 }
 
 object SparkSuite {

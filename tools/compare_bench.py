@@ -20,6 +20,11 @@ cross-round/cross-host deltas comparable without manual adjudication.
 --annotate computes the sentinel-normalized comparison of CUR vs PREV
 and writes it INTO CUR.json under "normalized_vs_prev", so the tracked
 artifact (e.g. bench_sf10.json) carries its own drift-adjusted history.
+
+Every mode first prints the `host` stamp of both artifacts and says
+when they differ or when one has none (the BENCH_r* tails carry
+only a cpu count): a total taken across hosts — 32 cores
+against 4 — is host drift, not a code change.
 """
 import glob
 import json
@@ -49,6 +54,32 @@ def parse_tail(path):
 def load_queries(path):
     return parse_tail(path) if path.startswith("BENCH_") \
         else json.load(open(path))["queries"]
+
+
+def host_stamp(path):
+    """The artifact's `host` stamp (nproc, cpus, heap, JDK, Spark, local
+    dirs), or None when it has none."""
+    d = json.load(open(path))
+    return d.get("host") or (d.get("parsed") or {}).get("host")
+
+
+def report_hosts(cur_path, old_path):
+    stamps = {p: host_stamp(p) for p in (cur_path, old_path)}
+    for p, h in stamps.items():
+        if h is None:
+            cpus = json.load(open(p)).get("cpus")
+            cpus_txt = f" (recorded cpus={cpus})" if cpus is not None else ""
+            print(f"host {p}: no host stamp{cpus_txt}")
+        else:
+            print(f"host {p}: " + ", ".join(f"{k}={v}" for k, v in sorted(h.items())))
+    a, b = stamps[cur_path], stamps[old_path]
+    if a is None or b is None:
+        print("HOST UNKNOWN: one artifact has no host stamp — the two runs "
+              "may come from different hosts; do not read a total as a code change")
+    elif a != b:
+        diff = sorted(k for k in set(a) | set(b) if a.get(k) != b.get(k))
+        print(f"HOST DIFFERS ({', '.join(diff)}): a total across hosts is "
+              "host drift, not a code change")
 
 
 def sentinel_drift(cur, old):
@@ -93,6 +124,7 @@ def compare(cur, old, label):
 
 
 def annotate(cur_path, prev_path):
+    report_hosts(cur_path, prev_path)
     cur_doc = json.load(open(cur_path))
     cur, old = cur_doc["queries"], load_queries(prev_path)
     common = sorted(k for k in set(old) & set(cur)
@@ -126,6 +158,7 @@ def gate(cur_path, base_path):
     the normalized common-row total exceeds 1.5x. Rows added after the
     baseline was recorded are reported but never gate (re-record the
     baseline to cover them)."""
+    report_hosts(cur_path, base_path)
     cur, base = load_queries(cur_path), load_queries(base_path)
     common = [k for k in set(base) & set(cur) if base[k] > 0 and cur[k] > 0]
     if not common:
@@ -170,6 +203,8 @@ def main():
         except Exception as e:
             print(f"{path}: unparseable ({e})")
             continue
+        print()
+        report_hosts("bench_full.json", path)
         compare(cur, old, path)
 
 

@@ -63,7 +63,7 @@ val notes: Seq[(String, String)] = Seq(
   "mm_decode" -> "Real image decode: deterministic PNGs encode and decode inside one mapPartitions batch (ImageIO, no UDF in the columnar path); only the fixed-width decoded stats leave the partition, and the oracle predicts them from the pixel formula.",
   "mm_audio_decode" -> "Real audio decode: WAV payloads through the JDK codec in the same partition-batch shape; integer signal stats out, oracle-predicted.",
   "mm_video_demux" -> "Video container demux: bounds-checked recursive ISO-BMFF box walk in a partition batch - the metadata pass that prunes payloads before any (external) frame decode; structure and movie-header fields out, oracle-predicted.",
-  "samp_token_budget" -> "Token-budget selection without a global-order window: range partition by priority, counts-only shard totals decide whole shards at the driver, exactly one boundary shard runs a per-row running sum - the single-partition sort a naive SUM OVER (ORDER BY) would plan never appears.",
+  "samp_token_budget" -> "Token-budget selection without a global-order window: AQE-sized range partition by priority, counts-only shard totals decide whole shards at the driver, exactly one boundary shard runs a per-row running sum - the single-partition sort a naive SUM OVER (ORDER BY) would plan never appears.",
   "s7_external_read" -> "External byte store read path: Spark's binaryFile source scans the sharded content-addressed blobs (one task per file at scale), content re-hashed in the projection so storage corruption is oracle-visible.",
   "dd_survivors_md5" -> "Survivors through the portable-hash LSH pipeline: same banding/verify as dd_minhash_md5 at 0.9, then checkpointed min-label propagation; the DuckDB oracle replays it as a recursive-CTE reachability closure.",
   "j14_bucketed_join" -> "Bucketed co-located join: both sides pre-bucketed on the join key, sort-merge reads buckets directly (SelectedBucketsCount) with NO exchange on either input; only the final rollup shuffles.",
@@ -84,11 +84,11 @@ val notes: Seq[(String, String)] = Seq(
   "dd_bucketed_incremental" -> "Bucketed-index incremental dedup: candidate and verify joins read the accumulated index tables bucket-aligned (zero exchange on the index side - the side that grows without bound under daily ingest); only the arriving batch shuffles to the bucket layout. Final plan reads the survivor checkpoint; the zero-exchange index reads are pinned in BucketedIndexSpec.",
   "f7_spec_hash" -> "Reference hash_dict parity digest: scan -> project through the codegen'd py_canonical_json + sha2 pipeline -> ordered output; one narrow projection, no shuffle before the final ORDER BY.",
   "mol_qcel_canonical" -> "QCElemental get_hash pre-image: pure codegen'd projection (qcel_molecule_canonical over the synthesized molecule struct), no shuffle before the final ORDER BY.",
-  "sk_quantile_bottomk" -> "Quantile sketch: the sample side is a k-bounded MinKPairs ObjectHashAggregate (partial map-side, <=256 pairs per task per group - never a per-group sort), broadcast onto the exact-reference side; the exact ranks come from the materialized distributed globalRank (range partition + shard offsets) minus literal per-group offsets - no window partitioned by the ~3-value group key (that shape funneled the fact table into 3 single-task sorts). Estimates are pure index selection, so even they hash-match the oracle.",
+  "sk_quantile_bottomk" -> "Quantile sketch: the sample side is a k-bounded MinKPairs ObjectHashAggregate (partial map-side, <=256 pairs per task per group - never a per-group sort), broadcast onto the exact-reference side; the exact ranks come from the materialized distributed globalRank (AQE-sized range partition + shard offsets) minus literal per-group offsets - no window partitioned by the ~3-value group key (that shape funneled the fact table into 3 single-task sorts). Estimates are pure index selection, so even they hash-match the oracle.",
   "sk_bloom_grams" -> "Size-adaptive Bloom: the 1-row sizing frame (hex-width integer arithmetic from the corpus count) broadcasts into both the bit-table build and the probes; membership is a hashed (i,bucket) join - never a false negative, false positives measured in the output.",
   "sk_cms_joinsize" -> "Join sizing from sketches alone: two d x 4096 CMS counter tables inner-product per hash row, MIN over rows - the broadcast-vs-shuffle decision input computed without rescanning either join side, all integer, oracle-exact.",
   "sk_hll_incremental" -> "Persistent sketch index: per-batch registers in batch=<id> partitions (idempotent overwrite), the serving read MAX-merges all batches; register losslessness makes the served estimate bit-identical to the full-table sketch at bytes of index per batch.",
-  "lay_compaction" -> "Small-files compaction plan: sequential bin packing by a DISTRIBUTED running byte sum (range partition + counts-only shard offsets + in-shard window) - the single-partition SUM OVER (ORDER BY) a naive planner would emit never appears; bins and boundaries are exact integer arithmetic the oracle replays.",
+  "lay_compaction" -> "Small-files compaction plan: sequential bin packing by a DISTRIBUTED running byte sum (AQE-sized range partition + counts-only shard offsets + in-shard window) - the single-partition SUM OVER (ORDER BY) a naive planner would emit never appears; bins and boundaries are exact integer arithmetic the oracle replays.",
   "tx_cdc_chunks" -> "Content-defined chunking: md5-mod cut rule over trailing token windows as bounded per-doc HOFs (insertion re-synchronization is the point - fixed chunking loses every offset); only fingerprints shuffle for the cross-document shared-chunk aggregation.",
   "dd_cdc_incremental" -> "Chunk-level incremental dedup: the batch's CDC fingerprints left-anti join the persistent fingerprint index (bytes per unique passage, batch=<id> idempotent commits); copied passages score novel=0 even at shifted offsets, and the whole pipeline hash-checks against the oracle.",
   "sim_knn_sq8" -> "Scalar 8-bit quantization ANN: encode is a pure map (per-dim ranges inline as plan literals - plan-pinned exchange-free), scoring reconstructs from the codes column alone, the bounded shortlist heap caps the shuffle, and only shortlist rows touch raw vectors in the exact re-rank.",
@@ -128,7 +128,7 @@ val notes: Seq[(String, String)] = Seq(
   "dd_survivors_dist" -> "The DISTRIBUTED components path under the gate: driverEdgeBound=0 forces the iterative min-label propagation loop (per iteration: one join + hash-agg whose lazy-checkpoint count is the only action, frontiers flattened) that any pair graph past the 4M-edge driver bound takes at 100 TB - the gate's sf-scale pair sets otherwise always ride the collect+union-find fast path. Answers bit-identically to dd_survivors_exact's oracle. The plan below reads the converged label frame's checkpoint.",
   "tx_nb_classify" -> "In-plan Naive Bayes classifier: the MODEL is two aggregate tables (vocab x labels counts; label-sized totals/priors, broadcast). Scoring pays exactly one data-sized shuffle - the (label, token) join against the count table; per-doc log-likelihoods fold as rounded DECIMAL(18,6) sums (order-independent, oracle-exact) and argmax is a per-DOC window over |labels| rows. No driver-side state, nothing pairwise, fit and score in one plan.",
   "dd_crossdoc_scrub" -> "The ACTION half of ExactSubstr dedup (remove every occurrence, Lee et al. s3.2): same linear window-df shape as dd_crossdoc_spans, covered token INDICES from a bounded <=L-row explode per covered window, kept tokens by ONE left-anti join of the (doc, pos, token) stream, reassembly a per-DOCUMENT bounded aggregate (array_sort over each doc's own (pos, tok) list - documents are the parallel unit, nothing corpus-wide ever sorts). Fully-repeated docs scrub to the empty string; short/no-repeat docs pass through with n_removed = 0.",
-  "samp_shard_export" -> "Training-shard export (the pipeline's last mile): the seeded epoch permutation token-balanced into 8 CONTIGUOUS shards by the DISTRIBUTED running token sum (sequentialBins: range partition + counts-only shard offsets + in-shard window - the single-partition SUM OVER (ORDER BY) never appears), physically written partitioned by shard, and the emitted row set is the READ-BACK audit: per-shard counts, token totals, epoch-key range, md5 membership digest - storage corruption or a wrong assignment breaks the hash oracle. Contiguity means reading shard files in order replays the epoch.",
+  "samp_shard_export" -> "Training-shard export (the pipeline's last mile): the seeded epoch permutation token-balanced into 8 CONTIGUOUS shards by the DISTRIBUTED running token sum (sequentialBins: AQE-sized range partition + counts-only shard offsets + in-shard window - the single-partition SUM OVER (ORDER BY) never appears), physically written partitioned by shard, and the emitted row set is the READ-BACK audit: per-shard counts, token totals, epoch-key range, md5 membership digest - storage corruption or a wrong assignment breaks the hash oracle. Contiguity means reading shard files in order replays the epoch.",
   "j18_dataset_clone" -> "Dataset copy/clone: the source's specs/entries/links stream once each, re-keyed by a literal destination id and unioned back; the skip and conflict checks are broadcast anti/semi joins against the DESTINATION's key set (dataset metadata, never corpus-scale) - the big table is never shuffled, and a name conflict fails loudly before anything is produced.",
   "j19_geo_enrich" -> "Access-log geo enrichment: the maxmind-style range table is split at prefix boundaries so each fragment lives in one prefix bucket, then the lookup is a broadcast HASH join on the access ip's prefix - an equi join the planner can hash, never the nested-loop range join a BETWEEN predicate would plan (pinned in PlanSpec: BroadcastHashJoin, zero BNLJ).",
   "o6_delete_meta" -> "Delete with metadata: the deletion is ONE anti-join rewrite of the base table; the per-position deleted/missing report joins the (tiny, literal) request list against the matched-id set and orders by request position - base-table work is a single scan + anti join regardless of request size.",
