@@ -44,6 +44,13 @@ object Bench {
   }
 
   def main(args: Array[String]): Unit = {
+    // freshness stamp: the src/main digest of the binary that PRODUCED
+    // the numbers. BenchArtifactSpec compares it against the working
+    // tree so a source change makes a committed artifact loudly stale
+    // (the key-set check alone can't see value staleness). Taken before
+    // any query runs: a scale run lasts hours, and an edit to src/main
+    // meanwhile must not stamp sources this binary never compiled.
+    val srcDigest = try SrcDigest.current catch { case _: Throwable => "unknown" }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     val spark = Tables.session(cpus)
@@ -64,16 +71,23 @@ object Bench {
     Seq("a2_pricing_summary", "j2_revenue_by_region", "f_scalar_suite")
       .foreach(run)
     warmUpStreaming(spark)
-    // seed the shared minhash pair cache so the consumer rows
-    // (dd_minhash, dd_survivors) time derive-from-checkpoint cost in
-    // EVERY rep — including 1-rep scale runs, where shuffled order would
-    // otherwise bill the one-time pipeline to whichever consumer runs
-    // first. The pipeline itself is billed by dd_minhash_pipeline, which
-    // recomputes fresh each timed run. Skipped when a filtered run
-    // excludes the whole family.
-    if (Set("dd_minhash", "dd_survivors", "dd_minhash_pipeline")
-          .exists(n => only.forall(_.contains(n))))
-      run("dd_minhash_pipeline")
+    // seed every session cache (a one-time index build that several rows
+    // read) by running one of its consumers, so each consumer row times
+    // query cost in EVERY rep — including 1-rep scale runs, where shuffled
+    // order would otherwise bill the build to whichever consumer runs
+    // first (an sf10 1-rep run charged it to tx_phrase_indexed, tx_dsir and
+    // sim_kmeans_anchor: 19-36 s rows against a 0.3-1.4 s baseline). The
+    // minhash pipeline itself is billed by dd_minhash_pipeline, which
+    // recomputes fresh each timed run. A filtered run seeds only the
+    // caches its rows read.
+    Seq(
+      Seq("dd_minhash_pipeline", "dd_minhash", "dd_survivors"),
+      Seq("sim_knn_ivf"),
+      Seq("sim_kmeans_anchor", "sim_kmeans_purity", "samp_cluster_balanced"),
+      Seq("dd_semdedup", "dd_semdedup_incremental", "dd_semdedup_refit"),
+      Seq("tx_dsir", "samp_dsir_topk"),
+      Seq("tx_phrase_indexed", "tx_bm25_multiquery")
+    ).filter(_.exists(n => only.forall(_.contains(n)))).foreach(c => run(c.head))
     // Repeat-median over INTERLEAVED passes: one back-to-back pass is
     // hostage to whatever GC/cache pressure the PREVIOUS query left behind
     // — round-7 recorded numbers carried up to 3.6x phantom inflation vs
@@ -162,11 +176,6 @@ object Bench {
     val failedJson = failed.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
     val sentinelJson = sentinel.map(fmt).mkString("[", ",", "]")
     val repWallJson = repWall.map(fmt).mkString("[", ",", "]")
-    // freshness stamp: the src/main digest of the binary that PRODUCED
-    // the numbers. BenchArtifactSpec compares it against the working
-    // tree so a source change makes a committed artifact loudly stale
-    // (the key-set check alone can't see value staleness).
-    val srcDigest = try SrcDigest.current catch { case _: Throwable => "unknown" }
     // the host that produced the numbers: artifacts from different hosts
     // are not comparable row by row
     val hostJson =

@@ -272,10 +272,13 @@ object SimilarityQueries extends QuerySet {
     // random vectors per bucket at sf10 (400k doubled corpus) — a
     // quadratic candidate blowup that spilled >74 GiB; adaptive sizing
     // keeps buckets ~constant and candidates linear in n. Small SFs stay
-    // on (10, 4), the historically-pinned parameters.
+    // on (10, 4), the historically-pinned parameters. The vectors stay
+    // float32 through the candidate joins: SrpBands and CosineSim widen
+    // each element to double exactly as toDouble would, so bands and
+    // scores are unchanged, and the two vector shuffles carry half the
+    // bytes (as doubles, the sf10 run ran out of its 13 GB of free disk).
     "dd_embcos_lsh" -> ((s, dir) => {
-      val base = t(s, dir, "embeddings")
-        .select(col("vec_id"), Vectors.toDouble(col("embedding")).as("v"))
+      val base = t(s, dir, "embeddings").select(col("vec_id"), col("embedding").as("v"))
       val doubled = base.union(
         base.withColumn("vec_id", col("vec_id") + 1000000L))
       val (bits, bands) = Vectors.adaptiveSrpParams(2L * base.count(), 0.99)

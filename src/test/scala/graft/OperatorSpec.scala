@@ -345,6 +345,19 @@ class OperatorSpec extends SparkSuite {
     assert((0 until 40).forall(i => exactDups.contains((i.toLong, i + 100L))))
   }
 
+  test("cosine lsh pairs on float32 vectors equal those on their double widening") {
+    val vecs = (0 until 60).map(i =>
+      (i.toLong, Array.tabulate(8)(j => math.sin(i * 5 + j).toFloat)))
+    val df = (vecs ++ vecs.map { case (id, v) => (id + 100L, v) }).toDF("vec_id", "embedding")
+    def pairs(v: org.apache.spark.sql.Column) =
+      Vectors.cosinePairsLsh(df.select(col("vec_id"), v.as("v")), "vec_id", "v",
+          dim = 8, bits = 6, minCosine = 0.9)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    val asFloat = pairs(col("embedding"))
+    assert(asFloat.exists(_._3 < 1.0))
+    assert(asFloat === pairs(Vectors.toDouble(col("embedding"))))
+  }
+
   test("heap top-k aggregate equals the window-rank form exactly") {
     val vecs = (0 until 80).map(i =>
       (i.toLong, Array.tabulate(8)(j => math.sin(i * 7 + j).toFloat)))

@@ -56,6 +56,14 @@ def load_queries(path):
         else json.load(open(path))["queries"]
 
 
+def failed_rows(path):
+    """The rows an artifact lists under `failed` (the BENCH_r* tails carry
+    no such list)."""
+    if path.startswith("BENCH_"):
+        return set()
+    return set(json.load(open(path)).get("failed") or [])
+
+
 def host_stamp(path):
     """The artifact's `host` stamp (nproc, cpus, heap, JDK, Spark, local
     dirs), or None when it has none."""
@@ -157,7 +165,10 @@ def gate(cur_path, base_path):
     exceeds 3x AND it got at least 1 s slower; the suite breaches when
     the normalized common-row total exceeds 1.5x. Rows added after the
     baseline was recorded are reported but never gate (re-record the
-    baseline to cover them)."""
+    baseline to cover them). A row that failed breaches outright: one
+    CUR lists under `failed`, or one timed in the baseline whose CUR
+    time is <= 0 (Bench records a row that never finished as -1) — a
+    failure must not drop out of the comparison and pass the gate."""
     report_hosts(cur_path, base_path)
     cur, base = load_queries(cur_path), load_queries(base_path)
     common = [k for k in set(base) & set(cur) if base[k] > 0 and cur[k] > 0]
@@ -165,7 +176,10 @@ def gate(cur_path, base_path):
         print(f"GATE FAIL: no common queries between {cur_path} and {base_path}")
         sys.exit(1)
     drift = sentinel_drift(cur, base) or 1.0
-    bad = []
+    failed = failed_rows(cur_path) | {k for k in set(base) & set(cur)
+                                      if base[k] > 0 and cur[k] <= 0}
+    bad = [f"  GATE FAIL {k}: failed in {cur_path} (time {cur.get(k, -1):g})"
+           for k in sorted(failed)]
     for k in sorted(common):
         rn = cur[k] / base[k] / drift
         if rn > 3.0 and cur[k] - base[k] > 1.0:
