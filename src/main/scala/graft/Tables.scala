@@ -12,10 +12,6 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
   * reader API is the same.
   */
 object Tables {
-  val all: Seq[String] = Seq(
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings")
-
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
     val df = spark.read.parquet(s"$dir/$name.parquet")
     // `events.ts` arrives in whatever physical type the generator chose
@@ -81,7 +77,30 @@ object Tables {
     spark
   }
 
-  /** Register every table as a temp view (for spark.sql / tests). */
-  def registerAll(spark: SparkSession, dir: String): Unit =
-    all.foreach(n => load(spark, dir, n).createOrReplaceTempView(n))
+  private val scratchRoots =
+    new java.util.concurrent.ConcurrentHashMap[String, String]()
+
+  /** A run's scratch path for `tag` over dataset `dir`: every export,
+    * index and stream sink a query writes lives under ONE root per Spark
+    * application, `/tmp/graft_export/<applicationId>`, so two concurrent
+    * runs never share a directory (or recursively delete one the other
+    * is reading). The root is removed when its SparkContext stops or the
+    * JVM exits, whichever comes first; callers that need a fresh
+    * directory per call put a unique suffix in `tag`. */
+  def scratch(spark: SparkSession, dir: String, tag: String): String = {
+    val sc = spark.sparkContext
+    val root = scratchRoots.computeIfAbsent(sc.applicationId, id => {
+      val r = "/tmp/graft_export/" + id.replaceAll("[^A-Za-z0-9]", "_")
+      def drop(): Unit = scratchRoots.synchronized {
+        org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(r))
+      }
+      sc.addSparkListener(new org.apache.spark.scheduler.SparkListener {
+        override def onApplicationEnd(
+            e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit = drop()
+      })
+      sys.addShutdownHook(drop())
+      r
+    })
+    root + "/" + tag + "_" + dir.replaceAll("[^A-Za-z0-9]", "_")
+  }
 }

@@ -23,16 +23,8 @@ object Hashing {
   /** sha256 hex of fields joined in declared canonical order (SURVEY F7). */
   def canonicalHash256(cols: Column*): Column = sha2(concat_ws(SEP, cols: _*), 256)
 
-  /** sha1 hex (SURVEY F8) — molecule-hash analogue. */
-  def canonicalHash1(cols: Column*): Column = sha1(concat_ws(SEP, cols: _*))
-
   /** md5 hex — cheap content fingerprint for exact dedup. */
   def md5Hash(cols: Column*): Column = md5(concat_ws(SEP, cols: _*))
-
-  /** 64-bit content key (xxhash64) for joins/bucketing — cheaper than a hex
-    * string at 100 TB scale; use the hex variants only where a stable
-    * human-readable id is required. */
-  def contentKey64(cols: Column*): Column = xxhash64(cols: _*)
 
   /** F7 with REFERENCE PARITY for flat string dicts: sha256 of the
     * Python-`json.dumps(d, sort_keys=True)` rendering of a

@@ -212,45 +212,6 @@ case class TokenWindowHashesTagged(child: Expression, ns: Seq[Int], sep: Byte)
     copy(child = newChild)
 }
 
-/** Multi-width window STRINGS in one tokenize pass — the string sibling
-  * of [[TokenWindowHashesTagged]] (array<struct<n:int, g:string>>): per
-  * width, bit-identical to [[TokenWindowStrings]]. For the exact
-  * COUNT(DISTINCT gram) diversity profile, which must keep grams as
-  * strings for its oracle. */
-case class TokenWindowStringsTagged(child: Expression, ns: Seq[Int], sep: Byte)
-    extends UnaryExpression {
-  require(ns.nonEmpty && ns.forall(_ > 0) && ns == ns.distinct.sorted,
-    s"widths must be positive, distinct, ascending, got $ns")
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"token_window_strings_tagged needs a string column, got $other")
-  }
-
-  override def dataType: DataType = ArrayType(
-    org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("n", IntegerType, nullable = false),
-      org.apache.spark.sql.types.StructField("g", StringType, nullable = false))),
-    containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "token_window_strings_tagged"
-
-  @transient private lazy val nsArr: Array[Int] = ns.toArray
-
-  override protected def nullSafeEval(input: Any): Any =
-    TokenWindows.stringsTagged(input.asInstanceOf[UTF8String], nsArr, sep)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val nsRef = ctx.addReferenceObj("ns", nsArr, "int[]")
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.TokenWindows.stringsTagged($c, $nsRef, (byte) $sep)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): TokenWindowStringsTagged =
-    copy(child = newChild)
-}
-
 /** md5-bucket of every n-token window in one pass — bit-identical to the
   * DSIR gram chain it replaces:
   *
@@ -439,11 +400,6 @@ object TokenWindows {
   def taggedCol(c: Column, ns: Seq[Int]): Column =
     Bridge.column(TokenWindowHashesTagged(Bridge.expression(c), ns, UnitSep))
 
-  /** Column entry point for the multi-width tagged window strings,
-    * 0x1F-joined. */
-  def stringsTaggedCol(c: Column, ns: Seq[Int]): Column =
-    Bridge.column(TokenWindowStringsTagged(Bridge.expression(c), ns, UnitSep))
-
   /** Column entry point for the md5-bucket window hashes, 0x1F-joined. */
   def md5BucketsCol(c: Column, n: Int, skip: Int, take: Int, mod: Int): Column =
     Bridge.column(TokenWindowMd5Buckets(Bridge.expression(c), n, UnitSep,
@@ -499,41 +455,6 @@ object TokenWindows {
         out(o) = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
           Array[Any](n, XXH64.hashUnsafeBytes(norm,
             Platform.BYTE_ARRAY_OFFSET + st, offs(x + n) - 1 - st, 42L)))
-        o += 1
-        x += 1
-      }
-      i += 1
-    }
-    new GenericArrayData(out)
-  }
-
-  /** Static helper invoked from both interpreted eval and generated code. */
-  def stringsTagged(s: UTF8String, ns: Array[Int], sep: Byte): ArrayData = {
-    val bytes = s.getBytes
-    val len = bytes.length
-    val starts = new Array[Int](len / 2 + 2)
-    val ends = new Array[Int](len / 2 + 2)
-    val t = splitFieldBounds(bytes, 0, len, starts, ends)
-    var total = 0
-    var i = 0
-    while (i < ns.length) { total += math.max(0, t - ns(i) + 1); i += 1 }
-    if (total == 0) return new GenericArrayData(Array.empty[Any])
-    val offs = new Array[Int](t + 1)
-    val norm = normalize(bytes, starts, ends, t, sep, offs)
-    val out = new Array[Any](total)
-    var o = 0
-    i = 0
-    while (i < ns.length) {
-      val n = ns(i)
-      val w = t - n + 1
-      var x = 0
-      while (x < w) {
-        val st = offs(x)
-        val l = offs(x + n) - 1 - st
-        val b = new Array[Byte](l)
-        System.arraycopy(norm, st, b, 0, l)
-        out(o) = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-          Array[Any](n, UTF8String.fromBytes(b)))
         o += 1
         x += 1
       }

@@ -62,23 +62,6 @@ object Multimodal {
         expr(s"substring(content, cast(frame_idx * $frameBytes + 1 as int), $frameBytes)")
           .as("frame_bytes"))
 
-  /** STUB thumbnail/resize: deterministic byte-level downsample to a fixed
-    * `outBytes` budget (every k-th byte). A real implementation decodes
-    * and resamples pixels here; the shape — map, fixed-width output,
-    * binary in/binary out — is the production shape. */
-  def thumbnailStub(spark: SparkSession, bin: DataFrame, outBytes: Int): Dataset[BinaryDoc] = {
-    import spark.implicits._
-    bin.as[BinaryDoc].mapPartitions { it =>
-      it.map { d =>
-        val n = d.content.length
-        val out =
-          if (n <= outBytes) d.content
-          else Array.tabulate(outBytes)(i => d.content(i * n / outBytes))
-        BinaryDoc(d.doc_id, out)
-      }
-    }
-  }
-
   // ---------------------------------------------------------------------
   // Real image decode (JDK ImageIO — PNG/JPEG)
   // ---------------------------------------------------------------------

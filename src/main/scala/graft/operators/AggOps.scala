@@ -3,7 +3,6 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.types.DecimalType
 
 /** Aggregation operators from SURVEY §2.4/2.5.
   *
@@ -14,11 +13,6 @@ import org.apache.spark.sql.types.DecimalType
   * which breaks both oracle comparison and downstream equality joins.
   */
 object AggOps {
-
-  /** Exact decimal sum surfaced as double: deterministic across partition
-    * orders (decimal addition is associative), comparable across engines. */
-  def sumExact(c: Column, scale: Int = 2): Column =
-    sum(c.cast(DecimalType(18, scale))).cast("double")
 
   /** A2/A4/A5/A11 — status-matrix count: GROUP BY groupCols → count
     * (`qcfractal/components/base_dataset_socket.py:207-219`,
@@ -51,18 +45,6 @@ object AggOps {
         element_at(col("pcts"), 3).as("p75"),
         element_at(col("pcts"), 4).as("p95")): _*)
   }
-
-  /** A6 at 100 TB — approx_percentile (KLL-style sketch, mergeable,
-    * bounded memory) replaces the exact sort-based percentile, whose
-    * per-group sort is the scale bottleneck. `accuracy` trades memory for
-    * rank error ≤ 1/accuracy. The exact form stays for oracle parity and
-    * small groups; the unit suite bounds the sketch's error against it. */
-  def approxPercentileSummary(df: DataFrame, groupCols: Seq[String],
-                              valueCol: String, accuracy: Int = 10000): DataFrame =
-    df.groupBy(groupCols.map(col): _*).agg(
-      count(lit(1)).as("n"),
-      expr(s"approx_percentile($valueCol, array(0.25D, 0.5D, 0.75D, 0.95D), $accuracy)")
-        .as("pcts"))
 
   /** A7/F2 — time-bucketed group key: UTC day or hour string
     * (`serverinfo/socket.py:477-492`). */

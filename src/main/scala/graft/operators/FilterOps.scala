@@ -83,7 +83,4 @@ object FilterOps {
     val cond = cols.map(c => df(c) <=> tuples(c)).reduce(_ && _)
     df.join(broadcast(tuples), cond, "left_semi")
   }
-
-  /** P9 — lowercase normalization at compare time. */
-  def lowerEq(c: Column, v: String): Column = lower(c) === v.toLowerCase
 }

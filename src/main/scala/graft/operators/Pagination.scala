@@ -74,8 +74,7 @@ object Pagination {
     * request order, missing ids dropped (the reference yields None — a
     * left join from the ids frame keeps that behavior if needed).
     * `array_position` against the literal list gives the sort key without
-    * a driver-side loop. For huge id lists, join against an indexed ids
-    * DataFrame instead (posexplode) — same plan shape, no literal bloat. */
+    * a driver-side loop. */
   def fetchInOrder(df: DataFrame, idCol: String, ids: Seq[Long]): DataFrame = {
     val idArray = array(ids.map(lit): _*)
     df.filter(col(idCol).isin(ids: _*))
@@ -84,21 +83,5 @@ object Pagination {
       .drop("__pos")
   }
 
-  /** fetchInOrder's scale form: the id list as a (id, pos) DataFrame
-    * instead of plan literals — a million-id request as literals would
-    * bloat the plan and defeat codegen; as a frame it is one broadcast
-    * join. The position column is explicit (never inferred from physical
-    * row order, which is undefined for a distributed frame). */
-  def fetchInOrderJoin(df: DataFrame, idCol: String,
-                       idsWithPos: DataFrame): DataFrame =
-    df.join(broadcast(idsWithPos), Seq(idCol))
-      .orderBy(col("pos"))
-      .drop("pos")
 
-  /** Build the (id, pos) request frame from a driver-side id list. */
-  def idsFrame(spark: org.apache.spark.sql.SparkSession, idCol: String,
-               ids: Seq[Long]): DataFrame = {
-    import spark.implicits._
-    ids.zipWithIndex.map { case (id, i) => (id, i.toLong) }.toDF(idCol, "pos")
-  }
 }

@@ -3,6 +3,7 @@ package graft.qsets
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Tables
 import graft.dedup.Decontaminate
 import graft.operators.Sampling
 
@@ -175,7 +176,7 @@ object CurationQueries extends QuerySet {
         md5(concat(lit("ep1:"), col("doc_id").cast("string"))).as("ek"))
       val total = sized.agg(sum(col("n_tok"))).head().getLong(0)
       val k = 8L
-      val out = runScratch(s, dir, "shards")
+      val out = Tables.scratch(s, dir, "shards")
       graft.operators.Layout.sequentialBins(sized,
           Seq(col("ek"), col("doc_id")), col("n_tok"),
           targetBytes = (total + k - 1) / k)
@@ -428,11 +429,11 @@ object CurationQueries extends QuerySet {
     // ScaleGuardSpec pins the bound.
     "tx_distinct_ngrams_approx" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
-      // ONE corpus pass for all three widths (the exact sibling's tagged
-      // single-scan shape): per width the 64-bit window hashes are
-      // bit-identical to the per-n kernel, and each (source, n) group's
-      // HLL++ sketch aggregates exactly the same hash multiset as the
-      // old per-n pass — so even this row's ESTIMATES are unchanged.
+      // ONE corpus pass for all three widths: per width the 64-bit
+      // window hashes are bit-identical to the per-n kernel, and each
+      // (source, n) group's HLL++ sketch aggregates exactly the same hash
+      // multiset as the old per-n pass — so even this row's ESTIMATES are
+      // unchanged.
       // The previous form scanned and tokenized the corpus three times.
       docs
         .select(col("source"), explode(

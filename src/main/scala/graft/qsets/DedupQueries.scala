@@ -3,6 +3,7 @@ package graft.qsets
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Tables
 import graft.dedup.Dedup
 import graft.functions.Hashing
 
@@ -254,8 +255,8 @@ object DedupQueries extends QuerySet {
     // engine-portable end to end.
     "dd_cdc_incremental" -> ((s, dir) => {
       import graft.dedup.CdcIndex
-      // per-sf AND per-RUN table namespace (applicationId suffix, the
-      // runScratch discipline): the query DROPs the table and recursively
+      // per-sf AND per-RUN table namespace (applicationId suffix, as
+      // Tables.scratch keys its root): the query DROPs the table and recursively
       // deletes its warehouse dir up front, so a dataset-only name would
       // let two concurrent harness runs clobber each other. DROP alone is
       // not enough: the warehouse directory persists across JVMs and a
@@ -293,7 +294,7 @@ object DedupQueries extends QuerySet {
     // documents.
     "dd_incremental" -> ((s, dir) => {
       import graft.dedup.IncrementalDedup
-      val idx = runScratch(s, dir, "incdedup") + "/index"
+      val idx = Tables.scratch(s, dir, "incdedup") + "/index"
       val p = new org.apache.hadoop.fs.Path(idx)
       p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
       val docs = doubled(s, dir)

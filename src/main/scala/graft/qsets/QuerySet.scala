@@ -16,14 +16,6 @@ trait QuerySet {
   protected def t(s: SparkSession, dir: String, name: String): DataFrame =
     Tables.load(s, dir, name)
 
-  /** Per-RUN scratch path: dataset-derived AND suffixed with the Spark
-    * applicationId, so two concurrent harness runs over the same
-    * dataset can never read each other's half-written export (or
-    * recursively delete a directory the other run is reading). */
-  protected def runScratch(s: SparkSession, dir: String, tag: String): String =
-    "/tmp/graft_export/" + tag + "_" + dir.replaceAll("[^A-Za-z0-9]", "_") +
-      "_" + s.sparkContext.applicationId.replaceAll("[^A-Za-z0-9]", "_")
-
   /** Exact decimal sum of a double column, surfaced as double. */
   protected def dsum(c: Column): Column = sum(c.cast(DecimalType(18, 2))).cast("double")
 

@@ -3,6 +3,7 @@ package graft.qsets
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Tables
 import graft.operators.AggOps
 import graft.records.{CacheOps, DatasetOps, RecordOps, RecordQueries, RecordQueryFilters, ServiceOps, TaskOps}
 
@@ -268,7 +269,7 @@ object RecordsShaped extends QuerySet {
           when(col("o_orderkey") % 3 === 2, struct(
             (col("o_custkey") % 24).cast("int").as("n_angles"),
             array(col("o_custkey"), col("o_custkey") + 1).as("initial_molecule_ids"))).as("torsiondrive"))
-      val path = "/tmp/graft_export/s2_typed_" + dir.replaceAll("[^A-Za-z0-9]", "_")
+      val path = Tables.scratch(s, dir, "s2_typed")
       graft.sources.DatasetExport.exportRecords(typed, path)
       graft.sources.DatasetExport.readRecords(s, path)
         .filter(col("record_type") === "optimization")

@@ -3,6 +3,7 @@ package graft.qsets
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Tables
 import graft.similarity.{Kmeans, Pq, Sq, Vectors}
 
 /** Similarity-search queries over `embeddings` (Array[Float] vectors).
@@ -250,7 +251,7 @@ object SimilarityQueries extends QuerySet {
     // epochs (a full index rebuild, like this query performs).
     "dd_embcos_incremental" -> ((s, dir) => {
       import graft.similarity.IncrementalVectors
-      val idx = runScratch(s, dir, "incvec") + "/index"
+      val idx = Tables.scratch(s, dir, "incvec") + "/index"
       val p = new org.apache.hadoop.fs.Path(idx)
       p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
       val base = t(s, dir, "embeddings")
@@ -468,7 +469,7 @@ object SimilarityQueries extends QuerySet {
     "dd_semdedup_incremental" -> ((s, dir) => {
       import graft.dedup.SemDedupIncremental
       val (all, _, cent) = plantedFit(s, dir)
-      val idx = runScratch(s, dir, "semdedup") + "/index"
+      val idx = Tables.scratch(s, dir, "semdedup") + "/index"
       val p = new org.apache.hadoop.fs.Path(idx)
       p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
       // id-ascending batches: naturals first, then the planted copies
@@ -497,7 +498,7 @@ object SimilarityQueries extends QuerySet {
     "dd_semdedup_refit" -> ((s, dir) => {
       import graft.dedup.SemDedupIncremental
       val (all, _, cent) = plantedFit(s, dir)
-      val base = runScratch(s, dir, "semdedup_refit")
+      val base = Tables.scratch(s, dir, "semdedup_refit")
       for (d <- Seq(s"$base/epoch1", s"$base/epoch2")) {
         val p = new org.apache.hadoop.fs.Path(d)
         p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)

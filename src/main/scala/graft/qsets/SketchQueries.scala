@@ -3,6 +3,7 @@ package graft.qsets
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Tables
 import graft.operators.{Layout, Sampling}
 import graft.sketch.Sketches
 
@@ -84,7 +85,7 @@ object SketchQueries extends QuerySet {
     // hash oracle. Index size: groups × ≤256 rows per batch, bytes at
     // any data scale.
     "sk_hll_incremental" -> ((s, dir) => {
-      val idx = runScratch(s, dir, "hllidx")
+      val idx = Tables.scratch(s, dir, "hllidx")
       val p = new org.apache.hadoop.fs.Path(idx)
       p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
       val orders = t(s, dir, "orders")

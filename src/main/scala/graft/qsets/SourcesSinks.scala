@@ -3,6 +3,7 @@ package graft.qsets
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Tables
 import graft.functions.Codec
 import graft.sources.{BucketedTables, DatasetExport, JsonTables, Msgpack}
 
@@ -13,9 +14,6 @@ import graft.sources.{BucketedTables, DatasetExport, JsonTables, Msgpack}
   * lossy codec/serializer cannot pass. */
 object SourcesSinks extends QuerySet {
 
-  private def scratch(s: SparkSession, dir: String, tag: String): String =
-    runScratch(s, dir, tag)
-
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // S3 — events → JSON lines → schema'd read-back → aggregate. JSON
@@ -23,7 +21,7 @@ object SourcesSinks extends QuerySet {
     // round-trip rendering, so the aggregate must match parquet exactly.
     "s3_json_roundtrip" -> ((s, dir) => {
       val events = t(s, dir, "events")
-      val path = scratch(s, dir, "s3_events")
+      val path = Tables.scratch(s, dir, "s3_events")
       JsonTables.writeJson(events, path)
       JsonTables.readJson(s, path, events.schema)
         .groupBy(col("event_type"))
@@ -40,7 +38,7 @@ object SourcesSinks extends QuerySet {
     // decimal, double) cannot pass.
     "s8_orc_roundtrip" -> ((s, dir) => {
       val li = t(s, dir, "lineitem")
-      val path = scratch(s, dir, "s8_lineitem_orc")
+      val path = Tables.scratch(s, dir, "s8_lineitem_orc")
       li.write.mode("overwrite").orc(path)
       s.read.orc(path)
         .filter(col("l_quantity") >= 25.0)
@@ -60,7 +58,7 @@ object SourcesSinks extends QuerySet {
     // fractional digits (a truncating format would shift max_ts_s).
     "s9_csv_roundtrip" -> ((s, dir) => {
       val events = t(s, dir, "events")
-      val path = scratch(s, dir, "s9_events_csv")
+      val path = Tables.scratch(s, dir, "s9_events_csv")
       val opts = Map(
         "header" -> "true",
         "timestampFormat" -> "yyyy-MM-dd HH:mm:ss.SSSSSS",
@@ -89,7 +87,7 @@ object SourcesSinks extends QuerySet {
     // v1-row count and v2-only score sum must match the oracle exactly.
     "s10_schema_evolution" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
-      val path = scratch(s, dir, "s10_docs_evo")
+      val path = Tables.scratch(s, dir, "s10_docs_evo")
       docs.filter(col("doc_id") % 2 === 0)
         .select("doc_id", "source", "n_chars")
         .write.mode("overwrite").parquet(s"$path/v=1")
@@ -108,7 +106,7 @@ object SourcesSinks extends QuerySet {
     // S4 — records exported partitioned by record_type, read back with a
     // type filter (pruned to one partition directory at listing time).
     "s4_dataset_export" -> ((s, dir) => {
-      val path = scratch(s, dir, "s4_records")
+      val path = Tables.scratch(s, dir, "s4_records")
       DatasetExport.exportRecords(RecordsShaped.records(s, dir), path)
       DatasetExport.readRecords(s, path)
         .filter(col("record_type") === "type1")
@@ -194,7 +192,7 @@ object SourcesSinks extends QuerySet {
     // (FileSystem.get(new Path(store).toUri, hadoopConf)) — the
     // binaryFile READ side already ports as-is.
     "s7_external_read" -> ((s, dir) => {
-      val store = scratch(s, dir, "s7store") + "/v1"
+      val store = Tables.scratch(s, dir, "s7store") + "/v1"
       val objects = t(s, dir, "documents").filter(col("doc_id") < 200)
         .select(sha2(col("text"), 256).as("sha"), col("text"))
         .dropDuplicates("sha")
@@ -208,7 +206,13 @@ object SourcesSinks extends QuerySet {
             r.getString(1).getBytes("UTF-8"))
         }
       }
-      s.read.format("binaryFile").load(s"$store/*/*.bin")
+      // the explicit file list, not the glob: a glob as the one path
+      // makes the read probe it for a streaming-sink metadata log, which
+      // logs a FileNotFoundException trace; real files pass that probe
+      val pattern = new org.apache.hadoop.fs.Path(s"$store/*/*.bin")
+      val blobs = pattern.getFileSystem(s.sparkContext.hadoopConfiguration)
+        .globStatus(pattern).map(_.getPath.toString)
+      s.read.format("binaryFile").load(blobs.toIndexedSeq: _*)
         .select(
           regexp_extract(col("path"), "([0-9a-f]{64})\\.bin$", 1).as("sha256"),
           col("length").cast("long").as("size_bytes"),
@@ -217,17 +221,18 @@ object SourcesSinks extends QuerySet {
     }),
 
     // Bucketed co-located join: orders and lineitem each written bucketed
-    // by their join key (same bucket count, built once and reused across
-    // runs like any production layout), then joined straight off the
-    // layout — the join runs WITHOUT an exchange on either side (pinned
-    // in PlanSpec); only the tiny final rollup shuffles. The merge hint
-    // keeps the sort-merge path even when one side would broadcast at
-    // toy scale, since the exchange-free property is the thing pinned.
+    // by their join key (same bucket count, built once per run and reused
+    // by every later call, like any production layout), then joined
+    // straight off the layout — the join runs WITHOUT an exchange on
+    // either side (pinned in PlanSpec); only the tiny final rollup
+    // shuffles. The merge hint keeps the sort-merge path even when one
+    // side would broadcast at toy scale, since the exchange-free property
+    // is the thing pinned.
     "j14_bucketed_join" -> ((s, dir) => {
       val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
       // layout-versioned path: ensureBucketed trusts existing bytes, so
       // any change to the projected columns/bucketing MUST bump v1
-      val base = scratch(s, dir, "bucketed") + "/v1"
+      val base = Tables.scratch(s, dir, "bucketed") + "/v1"
       BucketedTables.ensureBucketed(
         t(s, dir, "orders").select(col("o_orderkey"), col("o_orderpriority")),
         s"orders_b_$tag", s"$base/orders", "o_orderkey", buckets = 8)

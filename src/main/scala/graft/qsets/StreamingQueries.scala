@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 
+import graft.Tables
 import graft.streaming.EventStreams
 
 /** Streaming queries, driven to completion with Trigger.AvailableNow and a
@@ -45,7 +46,7 @@ object StreamingQueries extends QuerySet {
             Seq("user_id", "event_type"),
             "ts", "30 days")
           .select(col("user_id"), col("event_type")),
-          s"/tmp/graft_export/stream/$table", OutputMode.Append)
+          Tables.scratch(s, dir, s"stream/$table"), OutputMode.Append)
         .groupBy(col("event_type")).agg(count(lit(1)).as("n"))
         .orderBy(col("event_type"))
     }),
@@ -112,8 +113,7 @@ object StreamingQueries extends QuerySet {
     // full hash oracle.
     "st13_stream_hll_index" -> ((s, dir) => {
       import graft.sketch.Sketches
-      val idx = "/tmp/graft_export/stream/st13_hllidx_" +
-        dir.replaceAll("[^A-Za-z0-9]", "_")
+      val idx = Tables.scratch(s, dir, "stream/st13_hllidx")
       EventStreams.streamingHllIndex(s, dir, idx, Seq("event_type"), col("event_id"))
       val merged = Sketches.hllIndexRead(s, idx, Seq("event_type"))
       val exact = t(s, dir, "events").groupBy("event_type")
@@ -200,7 +200,7 @@ object StreamingQueries extends QuerySet {
       val table = s"st10_join_${System.nanoTime()}"
       EventStreams.runToDir(
           EventStreams.streamStreamMatches(s, dir, "click", "purchase", 3600L),
-          s"/tmp/graft_export/stream/$table", OutputMode.Append)
+          Tables.scratch(s, dir, s"stream/$table"), OutputMode.Append)
         .groupBy(col("user_id"))
         .agg(count(lit(1)).as("n_pairs"),
           countDistinct(col("b_id")).as("n_purchases"))
@@ -243,7 +243,7 @@ object StreamingQueries extends QuerySet {
       val scored = Dsir.scoreWithLiteralWeights(stream, "doc_id", "text",
         weights, unseenW)
       EventStreams.runToDir(scored,
-          s"/tmp/graft_export/stream/st14_score_${System.nanoTime()}",
+          Tables.scratch(s, dir, s"stream/st14_score_${System.nanoTime()}"),
           OutputMode.Append)
         .orderBy(col("doc_id"))
     }),
@@ -258,8 +258,7 @@ object StreamingQueries extends QuerySet {
     // to the batch build and this row shares the scan oracle.
     "st17_stream_index" -> ((s, dir) => {
       import graft.text.PostingsIndex
-      val idx = "/tmp/graft_export/stream/st17_postings_" +
-        dir.replaceAll("[^A-Za-z0-9]", "_") + "/index"
+      val idx = Tables.scratch(s, dir, "stream/st17_postings") + "/index"
       EventStreams.streamingPostingsIngest(s, dir, idx)
       PostingsIndex.query(s, idx,
         terms = Seq("spark", "vector", "stream", "window", "hash"))
@@ -286,7 +285,7 @@ object StreamingQueries extends QuerySet {
         .filter(col("doc_id") % CurationQueries.BENCH_MOD === 0)
       val stream = EventStreams.readTableStream(s, dir, "documents")
       EventStreams.runToDirPerBatch(stream,
-          s"/tmp/graft_export/stream/st15_decon_${System.nanoTime()}",
+          Tables.scratch(s, dir, s"stream/st15_decon_${System.nanoTime()}"),
           OutputMode.Append) { b =>
         Decontaminate.flagContaminated(
           b.filter(col("doc_id") % CurationQueries.BENCH_MOD =!= 0),
@@ -305,7 +304,7 @@ object StreamingQueries extends QuerySet {
       import graft.multimodal.Multimodal
       val stream = EventStreams.readTableStream(s, dir, "documents")
       EventStreams.runToDirPerBatch(stream,
-          s"/tmp/graft_export/stream/st16_phash_${System.nanoTime()}",
+          Tables.scratch(s, dir, s"stream/st16_phash_${System.nanoTime()}"),
           OutputMode.Append) { b =>
         Multimodal.imageAHash(s, Multimodal.withPngPayload(
           s, b.filter(col("doc_id") < 600).select(col("doc_id")), "doc_id")).toDF()

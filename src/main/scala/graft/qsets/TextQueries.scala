@@ -3,6 +3,7 @@ package graft.qsets
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Tables
 import graft.text.TextFunctions._
 
 /** Text-analysis queries over the `documents` table: token counting,
@@ -100,8 +101,7 @@ object TextQueries extends QuerySet {
 
   private def postingsIdx(s: SparkSession, dir: String): String =
     postingsCache.computeIfAbsent((s.sparkContext.applicationId, dir), _ => {
-      val idx = "/tmp/graft_export/postings_shared_" +
-        dir.replaceAll("[^A-Za-z0-9]", "_") + "/index"
+      val idx = Tables.scratch(s, dir, "postings_shared") + "/index"
       val p = new org.apache.hadoop.fs.Path(idx)
       p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
       val docs = t(s, dir, "documents")
@@ -628,8 +628,7 @@ object TextQueries extends QuerySet {
     // tail (Retrieval.scoreTopK) is the same arithmetic bit for bit.
     "tx_bm25_incremental" -> ((s, dir) => {
       import graft.text.PostingsIndex
-      val idx = "/tmp/graft_export/postings_" +
-        dir.replaceAll("[^A-Za-z0-9]", "_") + "/index"
+      val idx = Tables.scratch(s, dir, "postings") + "/index"
       val p = new org.apache.hadoop.fs.Path(idx)
       p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
       val docs = t(s, dir, "documents")
@@ -652,8 +651,7 @@ object TextQueries extends QuerySet {
     // THIS row's compacted directory).
     "tx_bm25_compacted" -> ((s, dir) => {
       import graft.text.PostingsIndex
-      val idx = "/tmp/graft_export/postings_compact_" +
-        dir.replaceAll("[^A-Za-z0-9]", "_") + "/index"
+      val idx = Tables.scratch(s, dir, "postings_compact") + "/index"
       val p = new org.apache.hadoop.fs.Path(idx)
       p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
       val docs = t(s, dir, "documents")

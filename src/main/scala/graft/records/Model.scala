@@ -39,27 +39,6 @@ case class Record(
     specification_id: Option[Long],
     molecule_id: Option[Long])
 
-/** ≙ QCSpecificationORM (program/driver/method/basis, deduped by hash). */
-case class Specification(
-    specification_id: Long,
-    specification_hash: String,
-    program: String,
-    driver: String,
-    method: String,
-    basis: String,
-    keywords: Map[String, String])
-
-/** ≙ MoleculeORM: arrays decoded at ingest (never msgpack at rest). */
-case class Molecule(
-    molecule_id: Long,
-    molecule_hash: String,
-    name: String,
-    symbols: Seq[String],
-    geometry: Seq[Double],
-    molecular_charge: Double,
-    molecular_multiplicity: Int,
-    identifiers: Map[String, String])
-
 /** ≙ the dataset entry × specification matrix (SURVEY §1.1-3). */
 case class DatasetEntry(dataset_id: Long, name: String, molecule_id: Long)
 case class DatasetSpec(dataset_id: Long, name: String, specification_id: Long)

@@ -14,7 +14,7 @@ import graft.Tables
   *  - ST1/ST2: record status state machine via flatMapGroupsWithState —
   *    event-sourced transitions instead of in-place UPDATE.
   *  - ST3: watermark-style incremental refresh — `ts > lastSync` delta.
-  *  - ST4: heartbeat timeout via processing-time GroupStateTimeout.
+  *  - ST4: heartbeat timeout against the latest heartbeat (batch form).
   *
   * Tests drive them with file sources under Trigger.AvailableNow and a
   * memory sink — same code path as a real continuous run. At scale these
@@ -218,7 +218,7 @@ object EventStreams {
            sum(col("value").cast(DecimalType(18, 2))).cast("double").as("total"))
       .select(date_format(col("w.start"), "yyyy-MM-dd").as("d"), col("event_type"),
               col("n"), col("total"))
-    runToDir(agg, s"/tmp/graft_export/stream/$table", OutputMode.Complete)
+    runToDir(agg, Tables.scratch(spark, dir, s"stream/$table"), OutputMode.Complete)
   }
 
   /** Streaming HLL registers: distinct-cardinality tracking over the
@@ -242,7 +242,7 @@ object EventStreams {
         Sketches.hllRho(value).as("r"))
       .groupBy(col("event_type"), col("bucket"))
       .agg(max(col("r")).as("r"))
-    runToDir(regs, s"/tmp/graft_export/stream/$table", OutputMode.Complete)
+    runToDir(regs, Tables.scratch(spark, dir, s"stream/$table"), OutputMode.Complete)
   }
 
   /** Per-key running state for the ST1/ST2 state machine. */
@@ -288,7 +288,7 @@ object EventStreams {
   /** Drive statefulUpdates over the events table into a memory sink. */
   def statefulCounts(spark: SparkSession, dir: String, table: String): DataFrame =
     runToDir(statefulUpdates(readEvents(stateSession(spark, dir), dir)).toDF(),
-      s"/tmp/graft_export/stream/$table", OutputMode.Update)
+      Tables.scratch(spark, dir, s"stream/$table"), OutputMode.Update)
 
   /** ST3 — watermark-style incremental refresh: only rows modified after
     * the last sync point, aggregated for the cache merge. */
@@ -310,7 +310,7 @@ object EventStreams {
       .select(col("user_id"),
         date_format(col("w.start"), "yyyy-MM-dd HH:mm:ss").as("session_start"),
         col("n_events"))
-    runToDir(agg, s"/tmp/graft_export/stream/$table", OutputMode.Complete)
+    runToDir(agg, Tables.scratch(spark, dir, s"stream/$table"), OutputMode.Complete)
   }
 
   /** Streaming exact dedup: first arrival per key wins; state for a key
@@ -340,7 +340,7 @@ object EventStreams {
       .select(col("i"), Sketches.cmsBucket(col("i"), col("__v")).as("bucket"))
       .groupBy(col("i"), col("bucket"))
       .agg(count(lit(1)).as("c"))
-    runToDir(counters, s"/tmp/graft_export/stream/$table", OutputMode.Complete)
+    runToDir(counters, Tables.scratch(spark, dir, s"stream/$table"), OutputMode.Complete)
   }
 
   /** Streaming ingest into the persistent postings index
@@ -407,7 +407,7 @@ object EventStreams {
       .select(col(keyCol),
         array_sort(transform(col("__pairs"), p => p.getField("_2"))).as("vs"),
         size(col("__pairs")).cast("long").as("sample_k"))
-    runToDir(samples, s"/tmp/graft_export/stream/$table", OutputMode.Complete)
+    runToDir(samples, Tables.scratch(spark, dir, s"stream/$table"), OutputMode.Complete)
   }
 
   /** Watermarked STREAM-STREAM interval join: every (typeA, typeB)
@@ -448,50 +448,13 @@ object EventStreams {
       .select(col("user_id"), col("a_id"), col("b_id"))
   }
 
-  case class HbState(lastHb: Long)
-  case class HbTimeout(name: String, last_hb_us: Long)
-
-  /** ST4 streaming form — heartbeat timeout via flatMapGroupsWithState
-    * with an EVENT-time timeout (`qcfractal/qcfractal/components/managers/
-    * socket.py:325+` deactivates managers missing N heartbeats): state
-    * holds each manager's max heartbeat; when the watermark passes
-    * last_hb + timeout the group times out and the dead manager is
-    * emitted exactly once. Event-time (not processing-time) timeout keeps
-    * replays deterministic. */
-  def heartbeatTimeoutStream(heartbeats: DataFrame, keyCol: String,
-                             tsCol: String, timeoutSeconds: Long): Dataset[HbTimeout] = {
-    import heartbeats.sparkSession.implicits._
-    heartbeats
-      .withWatermark(tsCol, s"$timeoutSeconds seconds")
-      // the watermark-tagged column must flow through untransformed —
-      // projecting it through a function strips the event-time metadata
-      .select(col(keyCol).cast("string").as("k"), col(tsCol).as("hb_ts"))
-      .as[(String, java.sql.Timestamp)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (key: String, rows: Iterator[(String, java.sql.Timestamp)],
-         state: GroupState[HbState]) =>
-          if (state.hasTimedOut) {
-            val last = state.get.lastHb
-            state.remove()
-            Iterator.single(HbTimeout(key, last))
-          } else {
-            var last = state.getOption.map(_.lastHb).getOrElse(Long.MinValue)
-            rows.foreach { r =>
-              val us = r._2.getTime * 1000L
-              if (us > last) last = us
-            }
-            state.update(HbState(last))
-            state.setTimeoutTimestamp(last / 1000 + timeoutSeconds * 1000)
-            Iterator.empty
-          }
-      }
-  }
-
   /** ST4 — heartbeat timeout: managers whose latest heartbeat is older
-    * than `timeoutSeconds` relative to the stream's max heartbeat are
-    * reported dead (batch form; the streaming form uses
-    * GroupStateTimeout.ProcessingTimeTimeout with the same predicate). */
+    * than `timeoutSeconds` relative to the latest heartbeat in the frame
+    * are reported dead (`qcfractal/qcfractal/components/managers/
+    * socket.py:325+` deactivates managers that miss their heartbeats).
+    * Batch form: one aggregate per key against the frame-wide max, so
+    * the horizon is the data's own clock, not the wall clock, and
+    * replays agree. */
   def heartbeatTimeouts(heartbeats: DataFrame, keyCol: String, tsCol: String,
                         timeoutSeconds: Long): DataFrame = {
     val latest = heartbeats.groupBy(col(keyCol)).agg(max(col(tsCol)).as("last_hb"))

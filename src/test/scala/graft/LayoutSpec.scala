@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.operators.Layout
@@ -208,22 +209,46 @@ class LayoutSpec extends SparkSuite {
     assert(spark.read.parquet(s"$tmp/big").count() == 1024L)
   }
 
+  /** skipStats' three counts for the box a ≤ 3, b ≤ 3, recounted on the
+    * driver: rows in `order`, bucket = (rank − 1)·buckets div n. */
+  private def recount(df: DataFrame, order: Seq[Column],
+                      buckets: Int): (Long, Long, Long) = {
+    val rows = df.orderBy(order: _*).select("a", "b").collect()
+      .map(r => (r.getLong(0), r.getLong(1)))
+    val byBucket = rows.indices.groupBy(_.toLong * buckets / rows.length)
+      .values.map(_.map(rows))
+    (byBucket.size.toLong,
+      byBucket.count(b => b.map(_._1).min <= 3 && b.map(_._2).min <= 3).toLong,
+      rows.count { case (a, b) => a <= 3 && b <= 3 }.toLong)
+  }
+
   test("skipStats bucket arithmetic ≡ per-bucket recount on a planted grid") {
     // 16×16 grid, natural order = row-major → z-order beats it on a 4×4 box
     val grid = (for (a <- 0L until 16L; b <- 0L until 16L) yield (a * 16 + b, a, b))
       .toDF("id", "a", "b")
       .withColumn("zkey", Layout.zOrderKey(col("a"), col("b")))
-    val nat = Layout.skipStats(grid, "natural", Seq(col("id")),
-      col("a"), 3L, col("b"), 3L, buckets = 16).head
-    val zo = Layout.skipStats(grid, "zorder", Seq(col("zkey"), col("id")),
-      col("a"), 3L, col("b"), 3L, buckets = 16).head
-    assert(nat.getLong(nat.fieldIndex("rows_in_box")) == 16)
-    assert(zo.getLong(zo.fieldIndex("rows_in_box")) == 16)
-    assert(nat.getLong(nat.fieldIndex("buckets_total")) == 16)
-    // z-order: the 4×4 corner is exactly the first z-run of 16 rows → 1 bucket
-    assert(zo.getLong(zo.fieldIndex("buckets_scanned")) == 1)
-    // natural row-major: rows with a≤3 span the first 4 buckets, each
-    // containing b values 0..15 → min (0,0) passes the test in each
-    assert(nat.getLong(nat.fieldIndex("buckets_scanned")) == 4)
+    val natural = Seq(col("id"))
+    val zorder = Seq(col("zkey"), col("id"))
+    def stats(df: DataFrame, order: Seq[Column], buckets: Int): (Long, Long, Long) = {
+      val r = Layout.skipStats(df, "l", order, col("a"), 3L, col("b"), 3L, buckets).head
+      (r.getLong(r.fieldIndex("buckets_total")), r.getLong(r.fieldIndex("buckets_scanned")),
+        r.getLong(r.fieldIndex("rows_in_box")))
+    }
+    // in the many-shard session the grid spans several range shards; 10
+    // buckets do not line up with their boundaries, so a wrong shard
+    // offset moves rows across bucket boundaries
+    for ((sharding, s) <- oneAndManyShards) {
+      val g = rebind(grid, s)
+      assertShards(sharding, g, natural)
+      assertShards(sharding, g, zorder)
+      for (order <- Seq(natural, zorder); buckets <- Seq(16, 10))
+        assert(stats(g, order, buckets) === recount(g, order, buckets),
+          s"$sharding, $buckets buckets, order ${order.mkString(",")}")
+      // z-order: the 4×4 corner is exactly the first z-run of 16 rows →
+      // 1 bucket; natural row-major: rows with a≤3 span the first 4
+      // buckets, each containing b values 0..15 → min (0,0) passes in each
+      assert(stats(g, zorder, 16) === ((16L, 1L, 16L)), sharding)
+      assert(stats(g, natural, 16) === ((16L, 4L, 16L)), sharding)
+    }
   }
 }

@@ -5,19 +5,10 @@ import org.apache.spark.sql.functions._
 import graft.multimodal.Multimodal
 
 /** Batch-shape tests for the multimodal plumbing: fixed output widths,
-  * pass-through for small payloads, frame-count arithmetic. */
+  * frame-count arithmetic, decode and hash round trips. */
 class MultimodalSpec extends SparkSuite {
 
   import spark.implicits._
-
-  test("thumbnail stub: fixed byte budget, small payloads pass through") {
-    val docs = Seq((1L, "x" * 1000), (2L, "short")).toDF("doc_id", "text")
-    val bin = Multimodal.withBinaryPayload(docs, "doc_id", "text")
-    val out = Multimodal.thumbnailStub(spark, bin, outBytes = 64).collect()
-      .map(d => d.doc_id -> d.content.length).toMap
-    assert(out(1L) === 64)
-    assert(out(2L) === 5)
-  }
 
   test("png decode: ImageIO roundtrip recovers the exact pixel formula") {
     val ids = Seq(0L, 5L, 17L, 62L).toDF("doc_id")

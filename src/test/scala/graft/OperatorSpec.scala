@@ -18,15 +18,13 @@ class OperatorSpec extends SparkSuite {
     val got = Seq(("h2o", 2.5)).toDF("name", "mass")
       .select(
         Hashing.canonicalHash256(col("name"), col("mass")).as("h256"),
-        Hashing.canonicalHash1(col("name"), col("mass")).as("h1"),
         Hashing.md5Hash(col("name"), col("mass")).as("hmd5"))
       .collect()(0)
     // pinned literal digests of "h2o" + 0x1f + "2.5" — any change to the
     // canonicalization (separator, field order, float formatting) breaks
     // dedup keys, so these must never drift
     assert(got.getString(0) === "8daaa396fc2af60550fd1ba80c327d299ff9d27b1fe83b10a184729d8136a8f0")
-    assert(got.getString(1) === "efbe00bc3c061d390a7f3d9c1b90455c5d8a19ac")
-    assert(got.getString(2) === "c68c1d56534fbf07636500ecf26a7e10")
+    assert(got.getString(1) === "c68c1d56534fbf07636500ecf26a7e10")
   }
 
   test("simhash: identical text → identical hash; small edit → small hamming") {
@@ -285,33 +283,17 @@ class OperatorSpec extends SparkSuite {
     }
   }
 
-  test("approx percentile tracks exact within rank-error bound") {
-    import graft.operators.AggOps
-    val events = Tables.load(spark, sfDir, "events")
-    val exact = AggOps.percentileSummary(events, Seq("event_type"), "value")
-      .select(col("event_type"), col("p50")).collect()
-      .map(r => r.getString(0) -> r.getDouble(1)).toMap
-    val approx = AggOps.approxPercentileSummary(events, Seq("event_type"), "value")
-      .select(col("event_type"), element_at(col("pcts"), 2).as("p50")).collect()
-      .map(r => r.getString(0) -> r.getDouble(1)).toMap
-    // value range is bounded; at accuracy 10000 over ~1-2k rows/group the
-    // sketch is near-exact — allow a loose absolute tolerance
-    exact.foreach { case (k, v) =>
-      assert(math.abs(approx(k) - v) <= math.max(1.0, math.abs(v) * 0.05),
-        s"$k: exact $v vs approx ${approx(k)}")
-    }
-  }
-
   test("join-based fetchInOrder and tupleIn agree with their literal forms") {
     import graft.operators.{FilterOps, Pagination}
     val orders = Tables.load(spark, sfDir, "orders")
     val ids = Seq(42L, 7L, 999L, 123L, 5L)
     val viaLit = Pagination.fetchInOrder(orders, "o_orderkey", ids)
       .select("o_orderkey").collect().map(_.getLong(0)).toSeq
-    val viaJoin = Pagination.fetchInOrderJoin(orders, "o_orderkey",
-        Pagination.idsFrame(spark, "o_orderkey", ids))
-      .select("o_orderkey").collect().map(_.getLong(0)).toSeq
-    assert(viaJoin === viaLit)
+    // expected: the request order, with ids the table lacks dropped
+    val present = orders.filter(col("o_orderkey").isin(ids: _*))
+      .select("o_orderkey").collect().map(_.getLong(0)).toSet
+    assert(present.nonEmpty)
+    assert(viaLit === ids.filter(present))
 
     val li = Tables.load(spark, sfDir, "lineitem")
     val tuples = Seq(("A", "F"), ("N", "O"))

@@ -1,0 +1,30 @@
+package graft
+
+import java.io.File
+
+/** Every export, index and stream sink a row writes lies under its run's
+  * scratch root, `/tmp/graft_export/<applicationId>`, the one directory
+  * that is removed when the run ends. */
+class ScratchRootSpec extends SparkSuite {
+
+  private def tree(f: File): Set[String] =
+    Option(f.listFiles).toSeq.flatten.flatMap(c =>
+      if (c.isDirectory) tree(c) + c.getPath else Set(c.getPath)).toSet
+
+  test("rows write their scratch files under the run root only") {
+    val exports = new File("/tmp/graft_export")
+    val runRoot = new File(exports,
+      spark.sparkContext.applicationId.replaceAll("[^A-Za-z0-9]", "_")).getPath
+    val before = tree(exports)
+    for (q <- Seq("s2_typed_payload", "tx_bm25_compacted", "st5_stream_dedup",
+                  "st13_stream_hll_index", "s7_external_read"))
+      assert(SparkEntry.queries(q)(spark, sfDir).collect().nonEmpty, q)
+    val created = tree(exports) -- before
+    assert(created.exists(_.startsWith(runRoot + "/")), s"nothing under $runRoot")
+    // a run on another Spark application writes under its own root
+    val otherRun = (exports.getPath + "/(local|app)_[0-9_]+(/.*)?").r
+    val stray = created.filterNot(p => p == runRoot ||
+      p.startsWith(runRoot + "/") || otherRun.matches(p))
+    assert(stray.isEmpty, s"outside $runRoot: ${stray.toSeq.sorted.take(5)}")
+  }
+}

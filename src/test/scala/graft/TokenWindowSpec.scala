@@ -159,23 +159,6 @@ class TokenWindowSpec extends SparkSuite {
     assert(bad === 0L)
   }
 
-  test("tagged multi-width strings ≡ per-width kernel, widths concatenated") {
-    val df = (edgeCases ++ Seq("one two three four five"))
-      .zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("id", "text")
-    val ref = concat(
-      transform(TokenWindows.stringsCol(col("text"), 1),
-        g => struct(lit(1).as("n"), g.as("g"))),
-      transform(TokenWindows.stringsCol(col("text"), 2),
-        g => struct(lit(2).as("n"), g.as("g"))),
-      transform(TokenWindows.stringsCol(col("text"), 3),
-        g => struct(lit(3).as("n"), g.as("g"))))
-    val bad = df.select(
-        TokenWindows.stringsTaggedCol(col("text"), Seq(1, 2, 3)).as("native"),
-        ref.as("ref"))
-      .filter(not(col("native") <=> col("ref"))).count()
-    assert(bad === 0L)
-  }
-
   test("md5-bucket windows ≡ Md5Prefix(window string) % mod (DSIR chain)") {
     import graft.functions.Md5Prefix
     val df = (edgeCases ++ Seq("one two three four five"))

@@ -109,33 +109,4 @@ class StatefulConvergenceSpec extends SparkSuite {
       s"RocksDB state must converge identically: $rocks vs $default")
     assert(default(1L) === ((3L, "purchase")))
   }
-
-  test("ST4 streaming heartbeat timeout fires via event-time watermark") {
-    val dir = Files.createTempDirectory("graft_hb_").toFile
-    dir.deleteOnExit()
-
-    // A keeps beating; B goes silent after t0 → with a 30-min timeout,
-    // the watermark from A's later beats must expire B exactly once
-    def write(path: String, rows: Seq[(String, String)]): Unit =
-      rows.toDF("name", "ts_s")
-        .withColumn("ts", col("ts_s").cast("timestamp")).drop("ts_s")
-        .coalesce(1).write.parquet(path)
-    write(s"$dir/f1", Seq(("A", "2024-01-01 00:00:00"), ("B", "2024-01-01 00:00:00")))
-    write(s"$dir/f2", Seq(("A", "2024-01-01 02:00:00")))
-    write(s"$dir/f3", Seq(("A", "2024-01-01 04:00:00")))
-
-    val schema = spark.read.parquet(s"$dir/f1").schema
-    val src = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(s"$dir/*/")
-    val table = s"hb_${System.nanoTime()}"
-    val q = EventStreams.heartbeatTimeoutStream(src, "name", "ts", 1800).toDF()
-      .writeStream.format("memory").queryName(table)
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-
-    val dead = spark.table(table).collect()
-    assert(dead.length === 1, s"expected exactly one timeout, got ${dead.mkString(", ")}")
-    assert(dead(0).getString(0) === "B")
-  }
 }
