@@ -71,23 +71,13 @@ object Bench {
     Seq("a2_pricing_summary", "j2_revenue_by_region", "f_scalar_suite")
       .foreach(run)
     warmUpStreaming(spark)
-    // seed every session cache (a one-time index build that several rows
-    // read) by running one of its consumers, so each consumer row times
-    // query cost in EVERY rep — including 1-rep scale runs, where shuffled
-    // order would otherwise bill the build to whichever consumer runs
-    // first (an sf10 1-rep run charged it to tx_phrase_indexed, tx_dsir and
-    // sim_kmeans_anchor: 19-36 s rows against a 0.3-1.4 s baseline). The
-    // minhash pipeline itself is billed by dd_minhash_pipeline, which
-    // recomputes fresh each timed run. A filtered run seeds only the
-    // caches its rows read.
-    Seq(
-      Seq("dd_minhash_pipeline", "dd_minhash", "dd_survivors"),
-      Seq("sim_knn_ivf"),
-      Seq("sim_kmeans_anchor", "sim_kmeans_purity", "samp_cluster_balanced"),
-      Seq("dd_semdedup", "dd_semdedup_incremental", "dd_semdedup_refit"),
-      Seq("tx_dsir", "samp_dsir_topk"),
-      Seq("tx_phrase_indexed", "tx_bm25_multiquery")
-    ).filter(_.exists(n => only.forall(_.contains(n)))).foreach(c => run(c.head))
+    // build every per-corpus index artifact (Tables.artifact) before the
+    // timed reps, so each consumer row times query cost in EVERY rep —
+    // including 1-rep scale runs, where shuffled order would otherwise
+    // bill a build to whichever consumer runs first
+    val seedT0 = System.nanoTime()
+    SparkEntry.seedArtifacts(spark, sfDir)
+    System.err.println(f"[bench] artifacts seeded in ${(System.nanoTime() - seedT0) / 1e9}%.1f s")
     // Repeat-median over INTERLEAVED passes: one back-to-back pass is
     // hostage to whatever GC/cache pressure the PREVIOUS query left behind
     // — round-7 recorded numbers carried up to 3.6x phantom inflation vs

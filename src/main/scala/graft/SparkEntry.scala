@@ -43,6 +43,11 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     sets.map(_.queries).reduce(_ ++ _)
 
+  /** Builds every [[Tables.artifact]] over `dir` for this run; the sets
+    * above declare theirs when they initialize, which `sets` forces. */
+  def seedArtifacts(spark: SparkSession, dir: String): Unit =
+    Tables.seedArtifacts(spark, dir)
+
   def oracleSql: Map[String, String] =
     sets.map(_.oracleSql).reduce(_ ++ _)
 }

@@ -77,30 +77,90 @@ object Tables {
     spark
   }
 
-  private val scratchRoots =
+  private val runRoots =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
 
-  /** A run's scratch path for `tag` over dataset `dir`: every export,
-    * index and stream sink a query writes lives under ONE root per Spark
-    * application, `/tmp/graft_export/<applicationId>`, so two concurrent
-    * runs never share a directory (or recursively delete one the other
-    * is reading). The root is removed when its SparkContext stops or the
-    * JVM exits, whichever comes first; callers that need a fresh
-    * directory per call put a unique suffix in `tag`. */
-  def scratch(spark: SparkSession, dir: String, tag: String): String = {
-    val sc = spark.sparkContext
-    val root = scratchRoots.computeIfAbsent(sc.applicationId, id => {
+  /** The run's scratch root, `/tmp/graft_export/<applicationId>`. The
+    * first call for an application registers the run's release once, on
+    * application end and in a JVM shutdown hook, whichever comes first:
+    * it forgets the run's [[Artifact]]s and removes the root. */
+  private def runRoot(sc: org.apache.spark.SparkContext): String =
+    runRoots.computeIfAbsent(sc.applicationId, id => {
       val r = "/tmp/graft_export/" + id.replaceAll("[^A-Za-z0-9]", "_")
-      def drop(): Unit = scratchRoots.synchronized {
+      def release(): Unit = runRoots.synchronized {
+        built.keySet.removeIf(_._1 == id)
         org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(r))
       }
       sc.addSparkListener(new org.apache.spark.scheduler.SparkListener {
         override def onApplicationEnd(
-            e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit = drop()
+            e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit = release()
       })
-      sys.addShutdownHook(drop())
+      sys.addShutdownHook(release())
       r
     })
-    root + "/" + tag + "_" + dir.replaceAll("[^A-Za-z0-9]", "_")
+
+  /** A run's scratch path for `tag` over dataset `dir`: every export,
+    * index and stream sink a query writes lives under ONE root per Spark
+    * application, so two concurrent runs never share a directory (or
+    * recursively delete one the other is reading), and the root goes
+    * when the run ends. Callers that need a fresh directory per call put
+    * a unique suffix in `tag`. */
+  def scratch(spark: SparkSession, dir: String, tag: String): String =
+    runRoot(spark.sparkContext) + "/" + tag + "_" + dir.replaceAll("[^A-Za-z0-9]", "_")
+
+  /** A per-corpus index artifact built at most once per run and dataset:
+    * an IVF quantizer, a k-means fit, a materialized pair table, a
+    * postings index, a bucketed layout. In production these are built
+    * once per corpus snapshot and read by every query, so a row that
+    * consumes one measures the read a production query pays, never the
+    * build. Bench's warm-up builds every declared artifact through
+    * [[seedArtifacts]], so no timed rep of any consumer row pays a build
+    * either, 1-rep scale runs included; a row whose job IS the build
+    * (`dd_minhash_pipeline`, `tx_bm25_incremental`) computes fresh and
+    * does not go through here. An artifact declares itself when its
+    * owning query set initializes, which makes it seedable with no list
+    * to keep in step. */
+  final class Artifact[A] private[Tables] (val name: String,
+                                           build: (SparkSession, String) => A) {
+    def apply(s: SparkSession, dir: String): A = {
+      val sc = s.sparkContext
+      runRoot(sc)
+      // the map insert is instant; the build runs under the entry's own
+      // lock, so a long build blocks only callers of the same entry and
+      // may itself read other entries
+      built.computeIfAbsent((sc.applicationId, dir, name),
+        _ => new Once(() => build(s, dir))).value.asInstanceOf[A]
+    }
+  }
+
+  private final class Once(build: () => Any) { lazy val value: Any = build() }
+
+  /** (applicationId, dir, artifact name) → the entry; released with the
+    * run's scratch root. */
+  private val built =
+    new java.util.concurrent.ConcurrentHashMap[(String, String, String), Once]()
+
+  private val declared =
+    scala.collection.mutable.LinkedHashMap.empty[String, Artifact[_]]
+
+  /** Declares an [[Artifact]] named `name`, built by `build`. */
+  def artifact[A](name: String)(build: (SparkSession, String) => A): Artifact[A] =
+    declared.synchronized {
+      require(!declared.contains(name), s"artifact $name declared twice")
+      val a = new Artifact(name, build)
+      declared(name) = a
+      a
+    }
+
+  /** Builds every declared artifact over `dir` for this run, in
+    * declaration order; one already built costs a map lookup. */
+  def seedArtifacts(spark: SparkSession, dir: String): Unit =
+    declared.synchronized(declared.values.toList).foreach(_(spark, dir))
+
+  /** This run's built artifacts, (dir, name) → value. */
+  private[graft] def builtArtifacts(spark: SparkSession): Map[(String, String), Any] = {
+    import scala.jdk.CollectionConverters._
+    built.asScala.collect { case ((app, dir, name), once)
+      if app == spark.sparkContext.applicationId => (dir, name) -> once.value }.toMap
   }
 }

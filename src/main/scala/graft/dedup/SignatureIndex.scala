@@ -65,17 +65,25 @@ private[graft] object SignatureIndex {
       .filter(col("batch") =!= excludeBatch)
       .drop("batch")
 
+  /** The `batch=<id>` partitions under `dir` whose id `keep` admits, as
+    * one frame of `schema` (which must include `batch`). The partitions
+    * come from the [[batches]] listing and are read with `basePath`, so
+    * `batch` stays a partition column and an underscore-prefixed `dir`
+    * (the `_stats` sidecar) is not taken for a hidden path; no partition
+    * reads as the schema's empty frame. */
+  def readBatches(spark: SparkSession, dir: String, schema: StructType,
+                  keep: Long => Boolean): DataFrame = {
+    val paths = batches(spark, dir).collect { case (b, p) if keep(b) => p.toString }
+    if (paths.isEmpty) spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+    else spark.read.schema(schema).option("basePath", dir).parquet(paths: _*)
+  }
+
   /** The INCREMENTAL stats subtree of a directory index, every batch
     * except `excludeBatch`: keyCols + n. `statsSchema` must be keyCols +
     * (n long) + (batch long). */
   def readStats(spark: SparkSession, indexDir: String, statsSchema: StructType,
-                excludeBatch: Long): DataFrame = {
-    // first batch: the stats subtree may not exist yet — an empty dir
-    // with the explicit schema reads as empty
-    val sp = new Path(statsDir(indexDir))
-    sp.getFileSystem(spark.sparkContext.hadoopConfiguration).mkdirs(sp)
-    read(spark, statsDir(indexDir), statsSchema, excludeBatch)
-  }
+                excludeBatch: Long): DataFrame =
+    readBatches(spark, statsDir(indexDir), statsSchema, _ != excludeBatch).drop("batch")
 
   /** Non-informative hot buckets from an index's per-batch stats
     * (keyCols + n, the current batch already excluded): buckets whose

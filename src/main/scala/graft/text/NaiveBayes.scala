@@ -44,8 +44,8 @@ object NaiveBayes {
     // column-prunes the vocabulary's distinct PAST the aggregate and
     // re-explodes the training corpus (a second full pass, observed in
     // the executed plan); with it the corpus tokenizes exactly once and
-    // every consumer reads the artifact (the ivfIndex billing shape —
-    // a fitted model IS an index artifact)
+    // every consumer reads the materialized model (a fitted model IS an
+    // index artifact)
     val counts = trainToks.groupBy(col("label"), col("tok"))
       .agg(count(lit(1)).as("c"))
       .localCheckpoint(eager = true)

@@ -234,10 +234,8 @@ object PostingsIndex {
     * committed batches only, the same visibility set as the postings
     * (a half-committed batch must skew neither side). */
   private def corpusStats(spark: SparkSession, indexDir: String): DataFrame = {
-    val committed = committedBatches(spark, indexDir)
-    spark.read.schema(statsSchema)
-      .parquet(s"$indexDir/_stats")
-      .filter(col("batch").isin(committed.map(Long.box): _*))
+    val committed = committedBatches(spark, indexDir).toSet
+    SignatureIndex.readBatches(spark, s"$indexDir/_stats", statsSchema, committed)
       .agg(sum(when(col("stat") === "n_docs", col("n"))).as("n_docs"),
         (sum(when(col("stat") === "sum_dl", col("n"))).cast("double") /
           sum(when(col("stat") === "n_docs", col("n")))).as("avgdl"))

@@ -85,6 +85,25 @@ class PostingsIndexSpec extends SparkSuite {
     assert(PostingsIndex.query(spark, idx, terms).collect().toSeq == before)
   }
 
+  test("stats of an uncommitted batch are not read; none committed reads empty") {
+    val idx = freshIdx("stats")
+    ingest3(idx)
+    val before = PostingsIndex.query(spark, idx, terms).collect().toSeq
+    // a batch whose stats landed but whose commit marker did not: stats
+    // that would swamp N and avgdl if the query read them
+    import spark.implicits._
+    Seq(("n_docs", 1000000L), ("sum_dl", 1000000000L)).toDF("stat", "n")
+      .write.mode("overwrite").parquet(s"$idx/_stats/batch=7")
+    assert(PostingsIndex.query(spark, idx, terms).collect().toSeq == before)
+    // with no committed batch the stats read as the empty frame
+    val bare = freshIdx("stats_bare")
+    PostingsIndex.addBatch(docs.limit(10), "doc_id", "text", bare, batchId = 0L)
+    val hfs = new org.apache.hadoop.fs.Path(bare)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    hfs.delete(new org.apache.hadoop.fs.Path(s"$bare/batch=0/_graft_commit"), false)
+    assert(PostingsIndex.query(spark, bare, terms).collect().isEmpty)
+  }
+
   test("query scan prunes to the terms' tb partitions") {
     val idx = freshIdx("prune")
     ingest3(idx)

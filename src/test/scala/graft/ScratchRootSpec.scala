@@ -4,7 +4,8 @@ import java.io.File
 
 /** Every export, index and stream sink a row writes lies under its run's
   * scratch root, `/tmp/graft_export/<applicationId>`, the one directory
-  * that is removed when the run ends. */
+  * that is removed when the run ends; rows that keep catalog tables leave
+  * nothing under `spark.sql.warehouse.dir`. */
 class ScratchRootSpec extends SparkSuite {
 
   private def tree(f: File): Set[String] =
@@ -26,5 +27,21 @@ class ScratchRootSpec extends SparkSuite {
     val stray = created.filterNot(p => p == runRoot ||
       p.startsWith(runRoot + "/") || otherRun.matches(p))
     assert(stray.isEmpty, s"outside $runRoot: ${stray.toSeq.sorted.take(5)}")
+  }
+
+  test("catalog-table rows leave nothing under the warehouse directory") {
+    val wh = new File(new org.apache.hadoop.fs.Path(
+      spark.conf.get("spark.sql.warehouse.dir")).toUri.getPath)
+    // entries of this dataset, created or rewritten while the rows ran
+    def entries(): Set[(String, Long)] =
+      Option(wh.listFiles).toSeq.flatten
+        .filter(_.getName.contains(sfDir.replaceAll("[^A-Za-z0-9]", "_")))
+        .map(f => f.getName -> f.lastModified).toSet
+    val before = entries()
+    Thread.sleep(1000) // a rewrite must show in lastModified's resolution
+    for (q <- Seq("dd_bucketed_incremental", "dd_cdc_incremental", "j14_bucketed_join"))
+      assert(SparkEntry.queries(q)(spark, sfDir).collect().nonEmpty, q)
+    val left = entries() -- before
+    assert(left.isEmpty, s"left under $wh: ${left.map(_._1).toSeq.sorted}")
   }
 }

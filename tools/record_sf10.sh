@@ -14,14 +14,16 @@
 #
 # Exits non-zero when Bench or the gate does. A Bench run with a failed row
 # leaves bench_sf10.json as it was; its artifact stays in target/.
-# Prints the free space on /tmp and the bytes under /tmp/graft_export (the
-# runs' scratch roots) before the run and again when the script exits.
+# Prints the free space on /tmp, the bytes under /tmp/graft_export (the
+# runs' scratch roots) and the bytes under ./spark-warehouse (the catalog
+# tables' directory) before the run and again when the script exits.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
 disk() {
   echo "record_sf10 $1: /tmp free $(df -B1 --output=avail /tmp | tail -1 | tr -d ' ') B," \
-    "/tmp/graft_export $(du -sb /tmp/graft_export 2>/dev/null | cut -f1 || echo 0) B"
+    "/tmp/graft_export $(du -sb /tmp/graft_export 2>/dev/null | cut -f1 || echo 0) B," \
+    "./spark-warehouse $(du -sb spark-warehouse 2>/dev/null | cut -f1 || echo 0) B"
 }
 disk before
 trap 'disk after' EXIT
