@@ -115,6 +115,9 @@ object Bench {
       timeSentinel()
       val order = new scala.util.Random(rep.toLong).shuffle(names)
       for (name <- order if !failed.contains(name)) {
+        // row start on stderr, so a warning or failure logged below this
+        // line belongs to this row (stdout's last line stays the JSON)
+        System.err.println(s"[bench] rep $rep: $name")
         val t0 = System.nanoTime()
         try {
           run(name)

@@ -36,9 +36,23 @@ object Tables {
     }
   }
 
-  /** Session configs every graft session needs (nanos parquet, UTC). */
+  /** Session configs every graft session needs (nanos parquet, UTC, AQE
+    * bounds), and the `file:` filesystem binding.
+    *
+    * The binding exists because this engine writes many small files:
+    * every commit, export and checkpoint creates data files, `.crc`
+    * sidecars and directory levels. Without Hadoop's native library the
+    * stock local filesystem starts a `chmod` process for each of those
+    * and a `readlink` process for each `FileContext` rename, a few ms
+    * apiece, which made process forks most of an ingest commit's
+    * latency. [[LocalFs]] does the same work in the JVM, so both the
+    * `FileSystem` (`fs.file.impl`) and the `FileContext`
+    * (`fs.AbstractFileSystem.file.impl`) views of `file:` go through it.
+    * Files, checksums and permissions come out as before. */
   def configure(b: SparkSession.Builder): SparkSession.Builder =
-    b.config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    b.config("spark.hadoop.fs.file.impl", classOf[LocalFs.Checksummed].getName)
+     .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[LocalFs.Context].getName)
+     .config("spark.sql.legacy.parquet.nanosAsLong", "true")
      .config("spark.sql.session.timeZone", "UTC")
      .config("spark.sql.adaptive.enabled", "true")
      // Decouple shuffle parallelism from the static partition count:

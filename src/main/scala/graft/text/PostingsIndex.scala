@@ -1,7 +1,7 @@
 package graft.text
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -88,18 +88,29 @@ object PostingsIndex {
                indexDir: String, batchId: Long): Unit = {
     val spark = docs.sparkSession
     SignatureIndex.checkParams(spark, indexDir, params)
-    postingsFrame(docs, idCol, textCol).write.mode("overwrite").partitionBy("tb")
-      .parquet(s"$indexDir/batch=$batchId")
-    // per-batch corpus stats: every doc counts (dl = the whitespace
-    // FIELD count, bit-identical to size(wsTokens) — a doc with no
-    // query-relevant terms still contributes to N and avgdl, exactly
+    // per-batch corpus stats ride the postings write: observed on the
+    // per-document projection BEFORE the explode, so a doc with no terms
+    // still counts (dl = the whitespace FIELD count, bit-identical to
+    // size(wsTokens) — every doc contributes to N and avgdl, exactly
     // like the scan path's stats)
-    docs.select(graft.functions.TokenWindows.fieldCountCol(col(textCol))
-        .cast("long").as("dl"))
-      .agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))
-      .select(explode(map(
-        lit("n_docs"), col("n_docs"),
-        lit("sum_dl"), col("sum_dl"))).as(Seq("stat", "n")))
+    val stats = new Observation()
+    docs.select(col(idCol).as("doc_id"),
+        graft.functions.TokenWindows.fieldCountCol(col(textCol)).cast("long").as("dl"),
+        graft.functions.TokenPostings(col(textCol)).as("ps"))
+      .observe(stats, count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))
+      .select(col("doc_id"), col("dl"), explode(col("ps")).as("p"))
+      .select(col("p.term").as("term"), col("doc_id"), col("p.tf").as("tf"),
+        col("dl"), col("p.positions").as("positions"),
+        pmod(xxhash64(col("p.term")), lit(TermBuckets)).cast("int").as("tb"))
+      .write.mode("overwrite").partitionBy("tb")
+      .parquet(s"$indexDir/batch=$batchId")
+    // one file of two rows, n_docs then sum_dl (null for an empty batch)
+    val m = stats.get
+    spark.createDataFrame(
+        java.util.List.of(Row("n_docs", m("n_docs")), Row("sum_dl", m("sum_dl"))),
+        StructType(Seq(StructField("stat", StringType, nullable = false),
+          StructField("n", LongType))))
+      .coalesce(1)
       .write.mode("overwrite").parquet(s"$indexDir/_stats/batch=$batchId")
     // both writes durable → the batch becomes visible (see scaladoc);
     // a retry's overwrite deleted any stale marker with the directory
@@ -107,21 +118,6 @@ object PostingsIndex {
     marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
       .create(marker, true).close()
   }
-
-  /** One ingest batch's postings projection — the frame [[addBatch]]
-    * writes, exposed for the plan-evidence tooling (the ingest plan is
-    * otherwise invisible behind addBatch's write): one native
-    * [[graft.functions.TokenPostings]] pass per document, no exchange. */
-  private[graft] def postingsFrame(docs: DataFrame, idCol: String,
-                                   textCol: String): DataFrame =
-    docs
-      .select(col(idCol).as("doc_id"),
-        graft.functions.TokenWindows.fieldCountCol(col(textCol))
-          .cast("long").as("dl"),
-        explode(graft.functions.TokenPostings(col(textCol))).as("p"))
-      .select(col("p.term").as("term"), col("doc_id"), col("p.tf").as("tf"),
-        col("dl"), col("p.positions").as("positions"),
-        pmod(xxhash64(col("p.term")), lit(TermBuckets)).cast("int").as("tb"))
 
   /** Batch ids whose `_graft_commit` marker landed — the only batches
     * any read path may see. One directory listing; consolidated

@@ -104,6 +104,32 @@ class PostingsIndexSpec extends SparkSuite {
     assert(PostingsIndex.query(spark, bare, terms).collect().isEmpty)
   }
 
+  test("observed stats rows equal the former aggregate's, empty-text doc and empty batch included") {
+    import spark.implicits._
+    // the (count, sum) aggregate addBatch ran before its stats were
+    // observed on the postings write
+    def former(batch: org.apache.spark.sql.DataFrame) =
+      batch.select(graft.functions.TokenWindows.fieldCountCol(col("text"))
+          .cast("long").as("dl"))
+        .agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))
+        .select(explode(map(lit("n_docs"), col("n_docs"), lit("sum_dl"), col("sum_dl")))
+          .as(Seq("stat", "n")))
+    val withEmpty = docs.select(col("doc_id"), col("text")).limit(20)
+      .union(Seq((990001L, ""), (990002L, " \t ")).toDF("doc_id", "text"))
+    val empty = docs.select(col("doc_id"), col("text")).filter(lit(false))
+    for ((tag, batch) <- Seq("with_empty_text" -> withEmpty, "empty" -> empty)) {
+      val idx = freshIdx(s"stats_$tag")
+      PostingsIndex.addBatch(batch, "doc_id", "text", idx, batchId = 0L)
+      val ref = s"$idx-former"
+      former(batch).write.mode("overwrite").parquet(ref)
+      val got = spark.read.parquet(s"$idx/_stats/batch=0")
+      val want = spark.read.parquet(ref)
+      assert(got.schema == want.schema, tag)
+      assert(got.collect().toSeq == want.collect().toSeq, tag)
+      assert(new java.io.File(s"$idx/batch=0/_graft_commit").exists, tag)
+    }
+  }
+
   test("query scan prunes to the terms' tb partitions") {
     val idx = freshIdx("prune")
     ingest3(idx)

@@ -10,10 +10,14 @@
 #    heap half the RAM capped at 8g, spills to /tmp/spark-local);
 # 3. annotates the new artifact against the bench_sf10.json it replaces
 #    (compare_bench.py --annotate) and moves it into place;
-# 4. runs the scale gate against BASELINE_sf10.json (compare_bench.py --gate).
+# 4. runs graft.Verify's recall-only pass at sf10 (SPARK_GRAFT_RECALL_MODE=only)
+#    and moves its recall file into place as verify_recall_sf10.json; its
+#    query outputs go to a scratch directory that is removed on exit;
+# 5. runs the scale gate against BASELINE_sf10.json (compare_bench.py --gate).
 #
-# Exits non-zero when Bench or the gate does. A Bench run with a failed row
-# leaves bench_sf10.json as it was; its artifact stays in target/.
+# Exits non-zero when Bench, Verify or the gate does. A Bench run with a
+# failed row leaves bench_sf10.json as it was; its artifact stays in target/.
+# A Verify run that fails leaves verify_recall_sf10.json as it was.
 # Prints the free space on /tmp, the bytes under /tmp/graft_export (the
 # runs' scratch roots) and the bytes under ./spark-warehouse (the catalog
 # tables' directory) before the run and again when the script exits.
@@ -25,11 +29,13 @@ disk() {
     "/tmp/graft_export $(du -sb /tmp/graft_export 2>/dev/null | cut -f1 || echo 0) B," \
     "./spark-warehouse $(du -sb spark-warehouse 2>/dev/null | cut -f1 || echo 0) B"
 }
-disk before
-trap 'disk after' EXIT
-
 SF=/tmp/graft_scale/sf10
 NEW=target/bench_sf10.json
+RECALL=target/verify_recall_sf10.json
+VOUT=/tmp/graft_scale/verify_sf10
+
+disk before
+trap 'rm -rf "$VOUT"; disk after' EXIT
 
 if [ ! -d "$SF" ]; then
   rm -rf "$SF.partial"
@@ -50,4 +56,12 @@ sbt --batch -Dsbt.log.noformat=true "runMain graft.Bench"
 
 python3 tools/compare_bench.py --annotate "$NEW" bench_sf10.json
 mv "$NEW" bench_sf10.json
+disk "after bench"
+
+rm -rf "$VOUT" "$RECALL"
+SPARK_GRAFT_RECALL_MODE=only SPARK_GRAFT_RECALL_OUT="$RECALL" \
+  sbt --batch -Dsbt.log.noformat=true "runMain graft.Verify $SF $VOUT"
+mv "$RECALL" verify_recall_sf10.json
+disk "after verify"
+
 python3 tools/compare_bench.py --gate bench_sf10.json BASELINE_sf10.json
