@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
 
 /** Readers for the driver-generated parquet tables (TESTDATA.md).
   *
@@ -12,21 +12,41 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
   * reader API is the same.
   */
 object Tables {
+  /** Table `name` of dataset `dir`, `events.ts` normalized by [[eventTime]].
+    *
+    * The table's schema is inferred once per run ([[parquetSchema]]).
+    * Inference is a Spark job that reads the files' footers, and a portal
+    * request opens several tables, so without the cache every request paid
+    * one such job per table. The first read of a key infers with Spark's
+    * own inference, so the types are Spark's under every conf; later reads
+    * pass the cached schema to `spark.read.schema`, and Spark only lists
+    * the files. The key names what the inferred schema depends on: the run
+    * (`applicationId`), the path, the session's parquet confs, and the
+    * path, length and modification time of every file under the path (the
+    * one file of a generated table, the part files of a Spark-written
+    * directory), so a rewritten table is inferred again, never served
+    * stale. A run's entries are released with its scratch root, when the
+    * application ends. */
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val df = spark.read.parquet(s"$dir/$name.parquet")
-    // `events.ts` arrives in whatever physical type the generator chose
-    // for this round's data — normalize every case to session-local
-    // TIMESTAMP (UTC session), which the queries and oracles assume:
-    //  - TIMESTAMP(NANOS) reads as a raw long under
-    //    spark.sql.legacy.parquet.nanosAsLong=true (set by configure()).
-    //    Values are µs-grain, so ns→µs truncation is lossless — but it
-    //    must be INTEGRAL division: `col / 1000` is double division, and
-    //    an epoch-nanos value (~1.7e18) exceeds a double's 53-bit
-    //    mantissa, silently perturbing timestamps by up to ±1 µs.
-    //  - TIMESTAMP(MICROS, isAdjustedToUTC=false) reads as
-    //    TIMESTAMP_NTZ: the wall-clock values ARE UTC, so the cast to
-    //    TIMESTAMP under the UTC session timezone is lossless. Left
-    //    unconverted it breaks unix_micros() and streaming event-time.
+    val path = s"$dir/$name.parquet"
+    eventTime(spark.read.schema(parquetSchema(spark, path)).parquet(path))
+  }
+
+  /** `events.ts` arrives in whatever physical type the generator chose
+    * for this round's data — normalize every case to session-local
+    * TIMESTAMP (UTC session), which the queries and oracles assume:
+    *  - TIMESTAMP(NANOS) reads as a raw long under
+    *    spark.sql.legacy.parquet.nanosAsLong=true (set by configure()).
+    *    Values are µs-grain, so ns→µs truncation is lossless — but it
+    *    must be INTEGRAL division: `col / 1000` is double division, and
+    *    an epoch-nanos value (~1.7e18) exceeds a double's 53-bit
+    *    mantissa, silently perturbing timestamps by up to ±1 µs.
+    *  - TIMESTAMP(MICROS, isAdjustedToUTC=false) reads as
+    *    TIMESTAMP_NTZ: the wall-clock values ARE UTC, so the cast to
+    *    TIMESTAMP under the UTC session timezone is lossless. Left
+    *    unconverted it breaks unix_micros() and streaming event-time.
+    * Batch and streaming reads of a table go through here alike. */
+  private[graft] def eventTime(df: DataFrame): DataFrame =
     df.schema.fields.find(_.name == "ts").map(_.dataType) match {
       case Some(LongType) =>
         df.withColumn("ts", timestamp_micros(expr("ts div 1000")))
@@ -34,6 +54,34 @@ object Tables {
         df.withColumn("ts", col("ts").cast(TimestampType))
       case _ => df
     }
+
+  /** The schema `spark.read.parquet(path)` infers, cached per run as
+    * [[load]] describes. */
+  private[graft] def parquetSchema(spark: SparkSession, path: String): StructType = {
+    val sc = spark.sparkContext
+    runRoot(sc)
+    val p = new org.apache.hadoop.fs.Path(path)
+    // a missing path keys no files; its inference then fails as a plain
+    // read's does, and a failed inference is not kept
+    val stamps = try {
+      val files = p.getFileSystem(sc.hadoopConfiguration).listFiles(p, true)
+      Iterator.continually(files).takeWhile(_.hasNext).map(_.next())
+        .map(f => s"${f.getPath} ${f.getLen} ${f.getModificationTime}").toVector.sorted
+    } catch { case _: java.io.FileNotFoundException => Vector.empty }
+    val confs = spark.conf.getAll.filter(_._1.contains(".parquet.")).toVector.sorted
+    schemas.computeIfAbsent((sc.applicationId, path, (confs, stamps)),
+      _ => new Once(() => spark.read.parquet(path).schema)).value.asInstanceOf[StructType]
+  }
+
+  /** (applicationId, path, (parquet confs, file stamps)) → the schema;
+    * released with the run's scratch root. */
+  private val schemas = new java.util.concurrent.ConcurrentHashMap[
+    (String, String, (Vector[(String, String)], Vector[String])), Once]()
+
+  /** How many schemas application `appId` has cached. */
+  private[graft] def cachedSchemas(appId: String): Int = {
+    import scala.jdk.CollectionConverters._
+    schemas.keySet.asScala.count(_._1 == appId)
   }
 
   /** Session configs every graft session needs (nanos parquet, UTC, AQE
@@ -97,12 +145,14 @@ object Tables {
   /** The run's scratch root, `/tmp/graft_export/<applicationId>`. The
     * first call for an application registers the run's release once, on
     * application end and in a JVM shutdown hook, whichever comes first:
-    * it forgets the run's [[Artifact]]s and removes the root. */
+    * it forgets the run's [[Artifact]]s and cached schemas
+    * ([[parquetSchema]]) and removes the root. */
   private def runRoot(sc: org.apache.spark.SparkContext): String =
     runRoots.computeIfAbsent(sc.applicationId, id => {
       val r = "/tmp/graft_export/" + id.replaceAll("[^A-Za-z0-9]", "_")
       def release(): Unit = runRoots.synchronized {
         built.keySet.removeIf(_._1 == id)
+        schemas.keySet.removeIf(_._1 == id)
         org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(r))
       }
       sc.addSparkListener(new org.apache.spark.scheduler.SparkListener {

@@ -168,45 +168,26 @@ object EventStreams {
     if (fs.exists(p)) {
       if (complete) spark.read.schema(schema).parquet(outDir)
       else spark.read
-        .schema(schema.add(batchCol, org.apache.spark.sql.types.LongType))
+        .schema(schema.add(batchCol, LongType))
         .parquet(outDir)
         .select(schema.fieldNames.map(col): _*)
     } else spark.createDataFrame( // zero emissions → typed empty frame
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
   }
 
-  /** Streaming file read of any single-parquet testdata table (the same
-    * glob trick as [[readEvents]]; no timestamp normalization — events
-    * must go through readEvents). */
-  def readTableStream(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val schema = spark.read.parquet(s"$dir/$name.parquet").schema
-    spark.readStream.schema(schema).option("basePath", dir)
-      .parquet(s"$dir/$name.[p]arquet")
-  }
-
-  /** Streaming read of the events table (file source, explicit schema —
-    * the batch loader's ns→timestamp conversion applied on top). */
-  def readEvents(spark: SparkSession, dir: String): DataFrame = {
-    val path = s"$dir/events.parquet"
-    val schema = spark.read.parquet(path).schema
+  /** Streaming file read of any single-parquet testdata table, with the
+    * run's cached schema ([[Tables.parquetSchema]]); no timestamp
+    * normalization — events must go through [[readEvents]]. */
+  def readTableStream(spark: SparkSession, dir: String, name: String): DataFrame =
     // the streaming file source accepts globs but rejects plain file paths
     // (non-glob paths must be directories) — so glob the single file
-    val raw = spark.readStream.schema(schema).option("basePath", dir)
-      .parquet(s"$dir/events.[p]arquet")
-    schema("ts").dataType match {
-      case LongType =>
-        // integral ns→µs division (see Tables.load: `/ 1000` is double
-        // division and perturbs epoch-nanos beyond double precision)
-        raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      case org.apache.spark.sql.types.TimestampNTZType =>
-        // µs parquet with isAdjustedToUTC=false reads as NTZ; wall-clock
-        // IS UTC, so the cast under the UTC session is lossless (and
-        // event-time/watermarks require TIMESTAMP, not NTZ)
-        raw.withColumn("ts",
-          col("ts").cast(org.apache.spark.sql.types.TimestampType))
-      case _ => raw
-    }
-  }
+    spark.readStream.schema(Tables.parquetSchema(spark, s"$dir/$name.parquet"))
+      .option("basePath", dir).parquet(s"$dir/$name.[p]arquet")
+
+  /** Streaming read of the events table, `ts` normalized as the batch
+    * loader does it ([[Tables.eventTime]]). */
+  def readEvents(spark: SparkSession, dir: String): DataFrame =
+    Tables.eventTime(readTableStream(spark, dir, "events"))
 
   /** ST-windowed aggregation: tumbling 1-day windows per event type.
     * Complete mode (bounded key space) so the final unflushed window is

@@ -5,7 +5,8 @@ import java.io.File
 /** Every export, index and stream sink a row writes lies under its run's
   * scratch root, `/tmp/graft_export/<applicationId>`, the one directory
   * that is removed when the run ends; rows that keep catalog tables leave
-  * nothing under `spark.sql.warehouse.dir`. */
+  * nothing under `spark.sql.warehouse.dir`; a stopped run leaves neither
+  * its root nor its cached table schemas behind. */
 class ScratchRootSpec extends SparkSuite {
 
   private def tree(f: File): Set[String] =
@@ -43,5 +44,18 @@ class ScratchRootSpec extends SparkSuite {
       assert(SparkEntry.queries(q)(spark, sfDir).collect().nonEmpty, q)
     val left = entries() -- before
     assert(left.isEmpty, s"left under $wh: ${left.map(_._1).toSeq.sorted}")
+  }
+
+  // last: it stops this suite's session; later suites get a new one
+  test("a stopped application leaves no scratch root and no cached schema") {
+    val app = spark.sparkContext.applicationId
+    val root = new File(Tables.scratch(spark, sfDir, "release")).getParentFile
+    assert(Tables.load(spark, sfDir, "orders").count() > 0)
+    assert(Tables.cachedSchemas(app) > 0)
+    root.mkdirs()
+    spark.stop()
+    assert(Tables.cachedSchemas(app) === 0)
+    assert(!root.exists, s"$root")
+    assert(!SparkSuite.session.sparkContext.isStopped)
   }
 }

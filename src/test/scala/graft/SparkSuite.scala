@@ -42,5 +42,12 @@ trait SparkSuite extends AnyFunSuite {
 }
 
 object SparkSuite {
-  lazy val session: SparkSession = Tables.session(4)
+  private var live: SparkSession = _
+
+  /** The shared session; a new one (a new Spark application) once a
+    * suite has stopped it. */
+  def session: SparkSession = synchronized {
+    if (live == null || live.sparkContext.isStopped) live = Tables.session(4)
+    live
+  }
 }
