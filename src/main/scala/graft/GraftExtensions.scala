@@ -1,20 +1,30 @@
 package graft
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, ExpressionInfo, Literal}
-import org.apache.spark.sql.graftshim.Bridge
+import org.apache.spark.sql.catalyst.plans.logical.Sort
+import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.{CoalesceExec, FileSourceScanLike, GenerateExec,
+  LocalTableScanExec, SortExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.QueryStageExec
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+import org.apache.spark.sql.execution.exchange.{ENSURE_REQUIREMENTS, Exchange, ShuffleExchangeExec}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.LongType
 
 import graft.functions._
 
-/** SQL surface for graft's native codegen'd expressions, wired the
-  * standard Spark-extension way:
+/** graft's session extension: the SQL surface of its native codegen'd
+  * expressions, and one physical planner rule,
+  * [[GraftExtensions.SmallSortInOnePartition]]. Every graft session
+  * binds it through [[Tables.configure]]; a session built another way
+  * gets it the standard Spark-extension way, at session build:
   *
-  *   spark.sql.extensions=graft.GraftExtensions   // at session build
-  *   GraftExtensions.register(spark)              // into a live session
+  *   spark.sql.extensions=graft.GraftExtensions
   *
-  * makes `simhash64`, `minhash_bands`, `srp_bands`, `hashed_shingles`
+  * It makes `simhash64`, `minhash_bands`, `srp_bands`, `hashed_shingles`
   * and `token_count` callable from `spark.sql(...)` / `expr(...)` — so
   * a pure-SQL user (a notebook, a dbt-style pipeline, spark-sql CLI)
   * gets the same one-pass native kernels the DataFrame API uses, not a
@@ -23,11 +33,66 @@ import graft.functions._
   * generated code, exactly like the DataFrame constructors.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit =
+  override def apply(ext: SparkSessionExtensions): Unit = {
     GraftExtensions.all.foreach(ext.injectFunction)
+    ext.injectQueryStagePrepRule(_ => GraftExtensions.SmallSortInOnePartition)
+  }
 }
 
 object GraftExtensions {
+
+  /** A global sort over an input that AQE would read as one partition
+    * anyway sorts in that partition: the `ENSURE_REQUIREMENTS` range
+    * exchange under the `SortExec` becomes `CoalesceExec(1)`. The range
+    * exchange costs a `RangePartitioner` sampling job, which recomputes
+    * the input, plus a map stage; AQE then coalesces its output into the
+    * one partition the sort runs in. Over `CoalesceExec(1)` the same
+    * single task sorts the same rows, so rows and order are unchanged.
+    *
+    * "One partition" is AQE's own coalescing bound: the input is at most
+    * `coalescePartitions.minPartitionSize`, or, without
+    * `parallelismFirst`, at most the larger of that and
+    * `advisoryPartitionSizeInBytes`. The rule is off where that
+    * coalescing is off.
+    *
+    * The size is the logical estimate of the sort's input, decided only
+    * when it rests on something measured: while an exchange below has
+    * not run, the rule leaves the sort alone and decides again when
+    * AQE re-plans on that stage's runtime statistics. With no exchange
+    * below, it decides on the planner's estimate for a pipeline over
+    * file scans or local rows. It never fires through a `GenerateExec`,
+    * whose estimate does not count the rows it adds, nor over an input
+    * it cannot size (an RDD or checkpoint scan, a cache not yet read). */
+  object SmallSortInOnePartition extends Rule[SparkPlan] {
+    def apply(plan: SparkPlan): SparkPlan =
+      if (!conf.coalesceShufflePartitionsEnabled) plan
+      else {
+        val min = conf.getConf(SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE)
+        val onePartition = BigInt(
+          if (conf.getConf(SQLConf.COALESCE_PARTITIONS_PARALLELISM_FIRST)) min
+          else min max conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES))
+        plan.transformUp {
+          case s @ SortExec(_, true,
+                ShuffleExchangeExec(_: RangePartitioning, input, ENSURE_REQUIREMENTS, _), _)
+              if inputBytes(s, input).exists(_ <= onePartition) =>
+            s.withNewChildren(Seq(CoalesceExec(1, input)))
+        }
+      }
+
+    /** The sort input's estimated size, if it can be decided now. */
+    private def inputBytes(sort: SortExec, input: SparkPlan): Option[BigInt] = {
+      val sized = !input.exists {
+        case _: Exchange | _: GenerateExec => true
+        case _ => false
+      } && input.collectLeaves().forall {
+        case q: QueryStageExec => q.isMaterialized
+        case _: FileSourceScanLike | _: BatchScanExec | _: LocalTableScanExec => true
+        case _ => false
+      }
+      if (sized) sort.logicalLink.collect { case l: Sort => l.child.stats.sizeInBytes }
+      else None
+    }
+  }
 
   private def intArg(fn: String, pos: Int, e: Expression): Int = e match {
     case Literal(v: Int, _) => v
@@ -191,10 +256,4 @@ object GraftExtensions {
       }
     }
   }
-
-  /** Register every function into a live session's registry. */
-  def register(spark: SparkSession): Unit =
-    all.foreach { case (id, fi, builder) =>
-      Bridge.registerFunction(spark, id, fi, builder)
-    }
 }

@@ -85,7 +85,7 @@ object Tables {
   }
 
   /** Session configs every graft session needs (nanos parquet, UTC, AQE
-    * bounds), and the `file:` filesystem binding.
+    * bounds), the `file:` filesystem binding and [[GraftExtensions]].
     *
     * The binding exists because this engine writes many small files:
     * every commit, export and checkpoint creates data files, `.crc`
@@ -96,9 +96,19 @@ object Tables {
     * latency. [[LocalFs]] does the same work in the JVM, so both the
     * `FileSystem` (`fs.file.impl`) and the `FileContext`
     * (`fs.AbstractFileSystem.file.impl`) views of `file:` go through it.
-    * Files, checksums and permissions come out as before. */
+    * Files, checksums and permissions come out as before.
+    *
+    * The extension is bound here for its planner rule,
+    * [[GraftExtensions.SmallSortInOnePartition]]: nearly every client
+    * query ends in a global `ORDER BY` over a small result, and without
+    * the rule each such sort pays a range exchange, a sampling job and a
+    * map stage to reach the one partition AQE reads it as anyway. Binding
+    * it here gives the rule to every session a main, a test or the
+    * benchmark harness builds, and to their child sessions, so all of
+    * them plan the same sorts. */
   def configure(b: SparkSession.Builder): SparkSession.Builder =
-    b.config("spark.hadoop.fs.file.impl", classOf[LocalFs.Checksummed].getName)
+    b.withExtensions(new GraftExtensions)
+     .config("spark.hadoop.fs.file.impl", classOf[LocalFs.Checksummed].getName)
      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[LocalFs.Context].getName)
      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
      .config("spark.sql.session.timeZone", "UTC")

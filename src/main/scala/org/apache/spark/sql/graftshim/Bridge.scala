@@ -16,15 +16,4 @@ import org.apache.spark.sql.classic.ExpressionUtils
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
-
-  /** Register a native function into an EXISTING session's registry —
-    * the runtime-path twin of `SparkSessionExtensions.injectFunction`
-    * (which only applies to sessions built after the extension loads).
-    * `sessionState` is `private[sql]`, hence this hop lives here. */
-  def registerFunction(spark: org.apache.spark.sql.SparkSession,
-                       id: org.apache.spark.sql.catalyst.FunctionIdentifier,
-                       info: org.apache.spark.sql.catalyst.expressions.ExpressionInfo,
-                       builder: Seq[Expression] => Expression): Unit =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry.registerFunction(id, info, builder)
 }

@@ -6,11 +6,10 @@ import graft.functions.{HashedShingles, MinHashBands, SimHash64, SrpBands, Token
 
 /** The SQL function surface (GraftExtensions): every native expression
   * callable from spark.sql must agree exactly with its DataFrame form —
-  * same kernel, two front doors. */
+  * same kernel, two front doors. The functions come with the session:
+  * [[Tables.configure]] binds the extension. */
 class ExtensionsSpec extends SparkSuite {
   import spark.implicits._
-
-  GraftExtensions.register(spark)
 
   private val docs = Seq(
     (1L, "the quick brown fox jumps over the lazy dog"),

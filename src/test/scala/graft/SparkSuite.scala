@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.lit
 import org.scalatest.funsuite.AnyFunSuite
@@ -22,6 +23,22 @@ trait SparkSuite extends AnyFunSuite {
     many.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
     many.conf.set("spark.sql.adaptive.coalescePartitions.initialPartitionNum", "16")
     Seq("one shard" -> one, "many shards" -> many)
+  }
+
+  /** `f`'s result and the number of Spark jobs it started. */
+  def jobs[A](f: => A): (A, Int) = {
+    val sc = spark.sparkContext
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
+    }
+    org.apache.spark.graftshim.ListenerBus.drain(sc)
+    sc.addSparkListener(l)
+    try {
+      val a = f
+      org.apache.spark.graftshim.ListenerBus.drain(sc)
+      (a, n.get)
+    } finally sc.removeSparkListener(l)
   }
 
   /** `df`'s rows as a local relation of session `s`. */

@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 
 /** [[Tables.parquetSchema]]: `Tables.load` infers a table's schema once
@@ -10,22 +9,6 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
   * infers again when the table is rewritten. */
 class TableSchemaSpec extends SparkSuite {
   import spark.implicits._
-
-  /** `f`'s result and the number of Spark jobs it started. */
-  private def jobs[A](f: => A): (A, Int) = {
-    val sc = spark.sparkContext
-    val n = new java.util.concurrent.atomic.AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
-    }
-    org.apache.spark.graftshim.ListenerBus.drain(sc)
-    sc.addSparkListener(l)
-    try {
-      val a = f
-      org.apache.spark.graftshim.ListenerBus.drain(sc)
-      (a, n.get)
-    } finally sc.removeSparkListener(l)
-  }
 
   /** A fresh directory under the run's scratch root, removed with the run. */
   private def tempDir(tag: String): String = {

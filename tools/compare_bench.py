@@ -12,10 +12,14 @@ the comparison uses whatever parses). Flags per-query regressions >1.5x
 and prints the aggregate ratio over common queries.
 
 Every comparison is ALSO reported sentinel-normalized: the bench suite
-carries a fixed sentinel query (a7_time_buckets — small, stable, plan
-unchanged across rounds) whose ratio between two runs measures pure
-host drift; dividing each per-query ratio by the sentinel drift makes
-cross-round/cross-host deltas comparable without manual adjudication.
+carries a fixed sentinel query (a7_time_buckets — small and stable)
+whose ratio between two runs measures pure host drift; dividing each
+per-query ratio by the sentinel drift makes cross-round/cross-host
+deltas comparable without manual adjudication. Its plan changed once:
+since GraftExtensions.SmallSortInOnePartition its final sort runs over
+`Coalesce 1` in place of a range exchange and its sampling job (4 Spark
+jobs per run down to 2), so a drift taken across that change also
+carries the plan change and reads lower than the host alone.
 
 --annotate computes the sentinel-normalized comparison of CUR vs PREV
 and writes it INTO CUR.json under "normalized_vs_prev", so the tracked

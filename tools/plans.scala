@@ -11,11 +11,14 @@
 //    defaults to "after", PLAN_OUT to plans/r19; for a "before" pair run
 //    it from a checkout of the earlier commit with its own classes).
 //  - AUDIT columns count cartesian products, nested-loop joins,
-//    sort-merge joins, range/hash exchanges and window operators in the
+//    sort-merge joins, range exchanges, global sorts planned over
+//    `Coalesce 1` (GraftExtensions.SmallSortInOnePartition, in place of a
+//    range exchange), hash exchanges and window operators in the
 //    executed plan, so a scale regression (a lost broadcast, an
 //    accidental cross join, a window sort in a hot path) is one grep
-//    away; a query that fails to plan prints -1s. The last line says
-//    whether any cartesian product was found.
+//    away; a query that fails to plan prints -1s. The last lines total
+//    the global sorts of each kind and say whether any cartesian
+//    product was found.
 //  - PLAN_SF picks the data (default: the sf0.001 set of TESTDATA.md);
 //    plan shape is scale-independent, AQE may re-plan exchanges at runtime.
 // Queries with side-effect pipelines (index ingests, streams) RUN them
@@ -28,9 +31,14 @@
 //     --conf spark.sql.legacy.parquet.nanosAsLong=true \
 //     --conf spark.sql.session.timeZone=UTC \
 //     --conf spark.sql.shuffle.partitions=8 --master 'local[8]' \
+//     --conf spark.sql.extensions=graft.GraftExtensions \
 //     -I tools/plans.scala
-// The nanosAsLong conf mirrors Tables.configure — events.parquet stores
-// TIMESTAMP(NANOS), which stock Spark rejects at scan time without it.
+// The nanosAsLong and extensions confs mirror Tables.configure —
+// events.parquet stores TIMESTAMP(NANOS), which stock Spark rejects at
+// scan time without the first, and the second brings the planner rule
+// every graft session runs. A sort that waits on an exchange below it
+// is still planned over its range exchange here: the rule decides on
+// that exchange's runtime statistics, when AQE re-plans.
 // The REPL reads this file in the JVM's default charset: without
 // file.encoding=UTF-8 a POSIX locale turns every non-ASCII character of
 // the notes into U+FFFD in PLANS.md.
@@ -191,12 +199,18 @@ planned.collect { case (name, Left(e)) => println(s"PLANDUMP FAIL $name: ${e.get
 val rows = planned.sortBy(_._1).map {
   case (name, Right((_, p))) =>
     def c(n: String) = p.sliding(n.length).count(_ == n)
+    val sortOverCoalesce = """Sort \[.*\], true, \d+\n\s*\+- Coalesce 1\n""".r
     (name, c("CartesianProduct"), c("BroadcastNestedLoopJoin"), c("SortMergeJoin"),
-     c("Exchange rangepartitioning"), c("Exchange hashpartitioning"), c("Window"))
-  case (name, Left(_)) => (name, -1, -1, -1, -1, -1, -1)
+     c("Exchange rangepartitioning"), sortOverCoalesce.findAllMatchIn(p).size,
+     c("Exchange hashpartitioning"), c("Window"))
+  case (name, Left(_)) => (name, -1, -1, -1, -1, -1, -1, -1)
 }
-println("AUDIT name cartesian bnlj smj range hash window")
-rows.foreach { case (n, a, b, s, r, h, w) => println(f"AUDIT $n%-24s $a $b $s $r $h $w") }
+println("AUDIT name cartesian bnlj smj range sort1 hash window")
+rows.foreach { case (n, a, b, s, r, r1, h, w) =>
+  println(f"AUDIT $n%-24s $a $b $s $r $r1 $h $w") }
+val planOk = rows.filter(_._5 >= 0)
+println(s"AUDIT global sorts: ${planOk.map(_._5).sum} over a range exchange, " +
+  s"${planOk.map(_._6).sum} over Coalesce 1")
 val cart = rows.filter(_._2 > 0)
 println(if (cart.isEmpty) "AUDIT OK: no cartesian products"
         else s"AUDIT FAIL: cartesian in ${cart.map(_._1).mkString(",")}")
