@@ -196,10 +196,10 @@ if (requested.isEmpty) {
 }
 planned.collect { case (name, Left(e)) => println(s"PLANDUMP FAIL $name: ${e.getMessage}") }
 
+val sortOverCoalesce = """Sort \[.*\], true, \d+\n\s*\+- Coalesce 1\n""".r
 val rows = planned.sortBy(_._1).map {
   case (name, Right((_, p))) =>
     def c(n: String) = p.sliding(n.length).count(_ == n)
-    val sortOverCoalesce = """Sort \[.*\], true, \d+\n\s*\+- Coalesce 1\n""".r
     (name, c("CartesianProduct"), c("BroadcastNestedLoopJoin"), c("SortMergeJoin"),
      c("Exchange rangepartitioning"), sortOverCoalesce.findAllMatchIn(p).size,
      c("Exchange hashpartitioning"), c("Window"))
